@@ -334,29 +334,6 @@ object MicroBench {
       }
     }
 
-    if (which == "spanindexd3cost") {
-      // Stage attribution for the d >= 3 block scan (VERDICT r13 #4):
-      // "pairs" arms stop at the raw (id, p, l) scan emission; "full"
-      // arms add the two closing hash aggregates + member expansion.
-      // full − pairs = aggregate cost; pairs(d3) − pairs(d2) = the block
-      // census emission premium. The upper-bound prefilter lever only
-      // pays if the d3 PAIRS arm dominates its FULL arm's increment.
-      val docs = Tables.documents(spark, sfDir)
-      for ((label, d, blockAtD2) <- Seq(
-          ("d2 scan", 2, false), ("d3 block", 3, false))) {
-        bench(s"spanindexd3cost: $label pairs")(
-          graft.functions.SpanIndex.buildIndexInternal(docs, "doc_id",
-            "text", floor = 8, cap = 24, minCount = 2,
-            broadcastDups = None, crossDoc = true, minDocs = d,
-            blockScanAtD2 = blockAtD2, pairsOnly = true))
-        bench(s"spanindexd3cost: $label full")(
-          graft.functions.SpanIndex.buildIndexInternal(docs, "doc_id",
-            "text", floor = 8, cap = 24, minCount = 2,
-            broadcastDups = None, crossDoc = true, minDocs = d,
-            blockScanAtD2 = blockAtD2))
-      }
-    }
-
     if (which == "spanappendc") {
       // CENSUS-SIDECAR append sweep (round 14, VERDICT #3): same deltas
       // as spanappend, but the old corpus' census comes from the stored

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -114,6 +114,13 @@ import graft.operators.{BoundaryExchange, Release}
 object SpanIndex {
 
   /** Longest common prefix of two capped suffix keys. */
+  private def lcp(a: Seq[Long], b: Seq[Long]): Int = {
+    val n = math.min(a.length, b.length)
+    var i = 0
+    while (i < n && a(i) == b(i)) i += 1
+    i
+  }
+
   /** Regroup raw scan pairs `(id, __p, __r)` into one `(id, positions,
     * rlens)` row per id — per-position MAX, `__r >= floor` cut, arrays
     * sorted by position — in ONE exchange (r16, guide §2.4): the
@@ -125,42 +132,197 @@ object SpanIndex {
     * The HOF lambdas reference only ATTRIBUTES (aggregate outputs), so
     * CollapseProject cannot inline the sort into a per-element
     * re-evaluation (the measured 50× hazard on the sweep path).
+    * SpanIndexCensusSpec pins it against the two-exchange chain.
     */
-  private def regroupPairs(pairs: DataFrame, idCol: String,
-      floor: Int): DataFrame =
-    if (!pairs.sparkSession.conf
-        .get("graft.regroupSingleExchange", "true").toBoolean)
-      // two-exchange reference form (A/B arm; pre-r16 shape)
-      pairs
-        .groupBy(col(idCol), col("__p")).agg(max(col("__r")).as("__r"))
-        .filter(col("__r") >= floor)
-        .groupBy(col(idCol))
-        .agg(array_sort(collect_list(struct(col("__p"), col("__r"))))
-          .as("__pr"))
-        .select(col(idCol),
-          transform(col("__pr"), x => x("__p")).as("positions"),
-          transform(col("__pr"), x => x("__r")).as("rlens"))
-    else pairs
-      .groupBy(col(idCol))
-      .agg(array_sort(collect_list(struct(col("__p"), col("__r"))))
-        .as("__prs"))
-      .select(col(idCol), filter(col("__prs"), (x, i) =>
-          (i === size(col("__prs")) - 1) ||
-            (element_at(col("__prs"), (i + lit(2)).cast("int"))("__p")
-              =!= x("__p")))
-        .as("__prm"))
-      .select(col(idCol),
-        filter(col("__prm"), x => x("__r") >= floor).as("__pr"))
-      .filter(size(col("__pr")) > 0)
-      .select(col(idCol),
-        transform(col("__pr"), x => x("__p")).as("positions"),
-        transform(col("__pr"), x => x("__r")).as("rlens"))
+  private[graft] def regroupPairs(pairs: DataFrame, idCol: String,
+      floor: Int): DataFrame = pairs
+    .groupBy(col(idCol))
+    .agg(array_sort(collect_list(struct(col("__p"), col("__r"))))
+      .as("__prs"))
+    .select(col(idCol), filter(col("__prs"), (x, i) =>
+        (i === size(col("__prs")) - 1) ||
+          (element_at(col("__prs"), (i + lit(2)).cast("int"))("__p")
+            =!= x("__p")))
+      .as("__prm"))
+    .select(col(idCol),
+      filter(col("__prm"), x => x("__r") >= floor).as("__pr"))
+    .filter(size(col("__pr")) > 0)
+    .select(col(idCol),
+      transform(col("__pr"), x => x("__p")).as("positions"),
+      transform(col("__pr"), x => x("__r")).as("rlens"))
 
-  private def lcp(a: Seq[Long], b: Seq[Long]): Int = {
-    val n = math.min(a.length, b.length)
-    var i = 0
-    while (i < n && a(i) == b(i)) i += 1
-    i
+  /** The parameters an index is built under and records in its header
+    * columns. Constructing one runs the band/mode validation that the
+    * build and both appends share.
+    */
+  private final case class Band(floor: Int, cap: Int, minCount: Int,
+      crossDoc: Boolean, minDocs: Int) {
+    require(floor >= 1, s"floor must be >= 1, got $floor")
+    require(cap >= floor, s"cap must be >= floor; got cap=$cap floor=$floor")
+    require(minCount >= 2 && minCount <= 4096,
+      s"minCount must be in [2, 4096], got $minCount")
+    require(minDocs >= 2 && minDocs <= 4096,
+      s"minDocs must be in [2, 4096], got $minDocs")
+    require(!crossDoc || minCount == 2,
+      "crossDoc counting is parameterized by minDocs; minCount applies " +
+        "to occurrence mode only and must stay 2 under crossDoc")
+    require(crossDoc || minDocs == 2,
+      "minDocs > 2 is a distinct-document threshold — pass crossDoc = " +
+        "true (occurrence thresholds are minCount)")
+
+    /** The census prune threshold AND the recorded `__minc`: distinct-doc
+      * counts under crossDoc, total occurrences otherwise.
+      */
+    val censusMin: Int = if (crossDoc) minDocs else minCount
+
+    /** The header columns every index row carries. */
+    def header: Seq[Column] = Seq(lit(floor).as("__floor"),
+      lit(cap).as("__cap"), lit(censusMin).as("__minc"),
+      lit(crossDoc).as("__cross"))
+  }
+
+  /** Per-token 64-bit relabeling: suffix comparison over hash sequences
+    * equals comparison over token sequences (tokens are space-free, so
+    * token-sequence equality == gram-string equality), modulo 64-bit
+    * collisions — the same birthday-bounded acceptance as the census
+    * key in maskDuplicateSpans, and a collision can only OVER-mask.
+    */
+  private def tokenHashes(tokens: Column): Column =
+    transform(tokens, t => xxhash64(t)).as("__th")
+
+  private def hashedDocs(df: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    df.select(col(idCol), tokenHashes(Text.tokens(col(textCol))))
+
+  /** Floor-gram occurrences: one row per 1-based start `__p` of a full
+    * floor-gram in `th`'s `__th`, with `__fh` the gram's hash; every
+    * other column of `th` passes through.
+    */
+  private def floorGrams(th: DataFrame, floor: Int): DataFrame = {
+    val keep = th.columns.filter(_ != "__th").map(col).toSeq
+    th.filter(size(col("__th")) >= floor)
+      .select(keep :+ posexplode(
+        transform(sequence(lit(1), size(col("__th")) - (floor - 1)),
+          p => xxhash64(slice(col("__th"), p, lit(floor)))))
+        .as(Seq("__i", "__fh")): _*)
+      .select(keep ++ Seq((col("__i") + 1).as("__p"), col("__fh")): _*)
+  }
+
+  /** Per-gram count of floor-gram occurrences `occ` under `name`: total
+    * positions, or distinct documents under crossDoc.
+    */
+  private def gramCounts(occ: DataFrame, idCol: String, crossDoc: Boolean,
+      name: String): DataFrame =
+    (if (crossDoc) occ.select(col("__fh"), col(idCol)).distinct() else occ)
+      .groupBy(col("__fh")).agg(count(lit(1)).as(name))
+
+  /** Candidate starts: the occurrences of a duplicated gram, one
+    * `(id, __ps)` row per document.
+    */
+  private def candidateStarts(occ: DataFrame, dupSide: DataFrame,
+      idCol: String): DataFrame =
+    occ.join(dupSide, Seq("__fh"), "left_semi")
+      .groupBy(col(idCol)).agg(collect_list(col("__p")).as("__ps"))
+
+  /** The identical-text collapse key. */
+  private def textKey(textCol: String): Column =
+    md5(coalesce(col(textCol).cast("string"), lit(""))).as("__gk")
+
+  /** Identical-text groups `(__gk, __rep, __m)` of `(id, __gk)` rows: the
+    * minimum id represents the group, `__m` is its size.
+    */
+  private def textGroups(keyed: DataFrame, idCol: String): DataFrame =
+    keyed.groupBy(col("__gk"))
+      .agg(min(col(idCol)).as("__rep"), count(lit(1)).as("__m"))
+
+  private def unionDocs(oldDocs: DataFrame, newDocs: DataFrame,
+      idCol: String, textCol: String): DataFrame =
+    oldDocs.select(col(idCol), col(textCol))
+      .unionByName(newDocs.select(col(idCol), col(textCol)))
+
+  /** Broadcast `df`, or hint the shuffled hash join. The census
+    * aggregates sit above a stats-under-estimated explode, so the
+    * non-broadcast side is hinted instead of letting the static planner
+    * eagerly broadcast it (the maskDuplicateSpans join posture).
+    */
+  private def joinSide(df: DataFrame, small: Boolean): DataFrame =
+    if (small) broadcast(df) else df.hint("shuffle_hash")
+
+  /** The suffix-sort step of the build and of the append merge. `docs`
+    * holds one row per representative: its identical-text group size
+    * `__m`, token hashes `__th` and candidate starts `__ps`. Builds the
+    * capped suffix keys, range-sorts them, persists the sorted suffixes
+    * DISK_ONLY and scans them with the counting mode's scan. Returns the
+    * raw `(id, __p, __l)` pairs, whose per-position max is R; the sorted
+    * snapshot is released after the next action.
+    *
+    * One doc-array shipment per representative, each suffix duplicated
+    * min(m, minCount) times (copies sort adjacent and stand in for the
+    * group's occurrences — see the collapse note in the build); the sort
+    * is the heavy step (8*cap bytes per candidate) — see object doc.
+    * The crossDoc scan keeps the copy ordinal: (id, copy) is the scan's
+    * document LABEL, so the min(m, 2) copies of an identical-text group
+    * stand for two distinct real documents (and a single-copy doc's
+    * within-document repeats share one label — correctly NOT cross-doc).
+    * __cp also totalizes the sort order, which the two scan passes of
+    * crossDocScan need to observe identically; the occurrence path drops
+    * it (its copies are indistinguishable, so tie order is immaterial)
+    * and keeps its measured shuffle width. d >= 3 distinct-doc
+    * thresholds — or d = 2 under `blockScanAtD2` — take the banded
+    * L-BLOCK scan ([[blockDocScan]]): no copy explosion, each
+    * representative suffix rides ONCE carrying its group size `__m`.
+    */
+  private def suffixPairs(docs: DataFrame, idCol: String, b: Band,
+      blockScanAtD2: Boolean): DataFrame = {
+    val keys = docs
+      .select(col(idCol), col("__m"), explode(transform(col("__ps"),
+        p => struct(p.as("p"), slice(col("__th"), p, lit(b.cap)).as("k"))))
+        .as("__s"))
+      .select(col(idCol), col("__m"), col("__s.p").as("__p"),
+        col("__s.k").as("__key"))
+    val blockPath = b.crossDoc && (b.minDocs > 2 || blockScanAtD2)
+    val rows = if (blockPath)
+        keys.select(col(idCol), col("__p"), col("__m"), col("__key"))
+      else {
+        val withCp = keys.select(col(idCol), col("__p"), col("__key"),
+          explode(sequence(lit(1L),
+            least(lit(b.minCount.toLong), col("__m")))).as("__cp"))
+        if (b.crossDoc)
+          withCp.select(col(idCol), col("__p"), col("__cp"), col("__key"))
+        else withCp.select(col(idCol), col("__p"), col("__key"))
+      }
+    val order = Seq(col("__key"), col(idCol), col("__p"))
+    val suffixes = rows.repartitionByRange(order: _*)
+      .sortWithinPartitions(
+        (if (b.crossDoc && !blockPath) order :+ col("__cp") else order): _*)
+    // persisted as a SERIALIZED Dataset cache on DISK, not an RDD
+    // .cache() of deserialized Row objects: the suffix frame is 8*cap
+    // bytes per candidate BEFORE Java object overhead — corpus-scale,
+    // like a shuffle spill, and read three times (counts, boundary
+    // tails, window scan). The Row-object cache OOM'd an 8 GiB heap at
+    // sf10 (27M candidates, cap 16), and even a MEMORY_AND_DISK cache
+    // starved concurrent aggregations of unified memory through
+    // storage-unroll competition (AGGREGATE_OUT_OF_MEMORY at cap 24) —
+    // the full-board sf10 column caught both. DISK_ONLY keeps the whole
+    // unified-memory budget with execution; the re-reads are sequential
+    // local-disk streams, shuffle-file economics.
+    suffixes.persist(StorageLevel.DISK_ONLY)
+    val pairs = if (blockPath)
+        blockDocScan(suffixes, idCol, b.floor, b.cap, b.minDocs)
+      else {
+        val rdd = suffixes.rdd
+        val pairSchema = StructType(Seq(
+          StructField(idCol, suffixes.schema(idCol).dataType),
+          StructField("__p", IntegerType, nullable = false),
+          StructField("__l", IntegerType, nullable = false)))
+        suffixes.sparkSession.createDataFrame(if (b.crossDoc)
+          crossDocScan(rdd) else occurrenceScan(rdd, b.minCount), pairSchema)
+      }
+    // the pairs' consuming action crosses an RDD boundary (the scan), so
+    // plan containment can't identify it — unconditional variant (the
+    // consuming variant would only ever hit its 64-action leak backstop)
+    Release.datasetAfterNextAction(suffixes)
+    pairs
   }
 
   /** Build the index. See object doc for schema, semantics, and the
@@ -217,44 +379,23 @@ object SpanIndex {
   private[graft] def buildIndexInternal(df: DataFrame, idCol: String,
       textCol: String, floor: Int, cap: Int, minCount: Int,
       broadcastDups: Option[Boolean], crossDoc: Boolean, minDocs: Int,
-      blockScanAtD2: Boolean,
-      pairsOnly: Boolean = false): DataFrame =
+      blockScanAtD2: Boolean): DataFrame =
     buildIndexAndCensusInternal(df, idCol, textCol, floor, cap, minCount,
-      broadcastDups, crossDoc, minDocs, blockScanAtD2, pairsOnly,
+      broadcastDups, crossDoc, minDocs, blockScanAtD2,
       withCensus = false)._1
 
   private def buildIndexAndCensusInternal(df: DataFrame, idCol: String,
       textCol: String, floor: Int, cap: Int, minCount: Int,
       broadcastDups: Option[Boolean], crossDoc: Boolean, minDocs: Int,
       blockScanAtD2: Boolean,
-      // bench-only stage cut: return the raw (id, p, l) scan pairs
-      // BEFORE the two closing hash aggregates + member expansion, so
-      // MicroBench can attribute block-scan cost to emission vs
-      // aggregation (VERDICT r13 #4: measure before optimizing)
-      pairsOnly: Boolean = false,
       // r16: derive the census sidecar from the SAME tokenized frame the
       // index build already snapshots (guide §1.2 — the independent
       // buildSpanCensus lineage re-tokenized the whole corpus a second
       // time). The census frames read the persisted `toks`, whose release
       // then waits for the census-consuming action (plan containment
       // identifies it — census frames are pure Dataset derivations).
-      withCensus: Boolean = false): (DataFrame, Option[SpanCensus]) = {
-    require(floor >= 1, s"floor must be >= 1, got $floor")
-    require(cap >= floor, s"cap must be >= floor; got cap=$cap floor=$floor")
-    require(minCount >= 2 && minCount <= 4096,
-      s"minCount must be in [2, 4096], got $minCount")
-    require(minDocs >= 2 && minDocs <= 4096,
-      s"minDocs must be in [2, 4096], got $minDocs")
-    require(!crossDoc || minCount == 2,
-      "crossDoc counting is parameterized by minDocs; minCount applies " +
-        "to occurrence mode only and must stay 2 under crossDoc")
-    require(crossDoc || minDocs == 2,
-      "minDocs > 2 is a distinct-document threshold — pass crossDoc = " +
-        "true (occurrence thresholds are minCount)")
-    // the census prune threshold AND the recorded __minc: distinct-doc
-    // counts under crossDoc, total occurrences otherwise
-    val censusMin = if (crossDoc) minDocs else minCount
-    val spark = df.sparkSession
+      withCensus: Boolean): (DataFrame, Option[SpanCensus]) = {
+    val b = Band(floor, cap, minCount, crossDoc, minDocs)
     // identical-text COLLAPSE (the round-9 Dedup lesson applied to the
     // suffix sort): identical documents have identical R arrays, and a
     // group of m byte-identical copies contributes occurrence COUNT, not
@@ -271,10 +412,8 @@ object SpanIndex {
     // capped key, which never undercuts a cross-row LCP). On a 100-copy
     // exact-dup corpus this shrinks the sort input 100x; on a dup-free
     // corpus it costs one (id, md5) scalar aggregate and two joins.
-    val keyed = df.select(col(idCol),
-      md5(coalesce(col(textCol).cast("string"), lit(""))).as("__gk"))
-    val groups = keyed.groupBy(col("__gk"))
-      .agg(min(col(idCol)).as("__rep"), count(lit(1)).as("__m"))
+    val keyed = df.select(col(idCol), textKey(textCol))
+    val groups = textGroups(keyed, idCol)
     val members = keyed.join(groups, Seq("__gk"))
       .select(col("__rep"), col(idCol).as("__member"))
     val reps = df.join(
@@ -284,31 +423,19 @@ object SpanIndex {
     // DISK_ONLY, not MEMORY_AND_DISK: one row per representative doc
     // carrying the FULL token array — corpus-sized, and live across the
     // census AND the suffix-key build (two aggregation-heavy stages).
-    // The SCALE.md r10 rule (proved on the suffix snapshot below, full
-    // war story at its persist site): corpus-sized array-carrying
-    // snapshots must not compete with aggregation memory via
-    // storage-unroll, and DISK_ONLY measured faster at every scale.
+    // The SCALE.md r10 rule (proved on the suffix snapshot, full war
+    // story at its persist site in [[suffixPairs]]): corpus-sized
+    // array-carrying snapshots must not compete with aggregation memory
+    // via storage-unroll, and DISK_ONLY measured faster at every scale.
     val toks = reps
       .select(col(idCol), col("__m"), Text.tokens(col(textCol)).as("__toks"))
       .persist(StorageLevel.DISK_ONLY)
-    // per-token 64-bit relabeling: suffix comparison over hash sequences
-    // equals comparison over token sequences (tokens are space-free, so
-    // token-sequence equality == gram-string equality), modulo 64-bit
-    // collisions — the same birthday-bounded acceptance as the census
-    // key in maskDuplicateSpans, and a collision can only OVER-mask.
-    val th = toks.select(col(idCol), col("__m"),
-      transform(col("__toks"), t => xxhash64(t)).as("__th"))
+    val th = toks.select(col(idCol), col("__m"), tokenHashes(col("__toks")))
 
     // floor census over candidate starts: (rep, pos, hash(floor-slice))
     // scalars weighted by group size; >= minCount total occurrences
     // anywhere (ExactSubstr counting)
-    val occ = th
-      .filter(size(col("__th")) >= floor)
-      .select(col(idCol), col("__m"), posexplode(
-        transform(sequence(lit(1), size(col("__th")) - (floor - 1)),
-          p => xxhash64(slice(col("__th"), p, lit(floor)))))
-        .as(Seq("__i", "__fh")))
-      .select(col(idCol), col("__m"), (col("__i") + 1).as("__p"), col("__fh"))
+    val occ = floorGrams(th, floor)
     // crossDoc: a gram's distinct-document count is the sum of m over the
     // DISTINCT representative groups containing it (each group stands for
     // m distinct real documents; repeats of the gram inside one group add
@@ -318,98 +445,16 @@ object SpanIndex {
         occ.groupBy(col("__fh"), col(idCol)).agg(max(col("__m")).as("__m"))
       else occ)
       .groupBy(col("__fh")).agg(sum(col("__m")).as("__n"))
-      .filter(col("__n") >= censusMin).select(col("__fh"))
-    val doBroadcast = broadcastDups.getOrElse {
-      val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      val unknown =
-        bytes == spark.sessionState.conf.defaultSizeInBytes
-      unknown || bytes <= Corpus.BroadcastDupsMaxInputBytes
-    }
-    // same join posture as maskDuplicateSpans: the dup aggregate sits
-    // above a stats-under-estimated explode — hint the non-broadcast
-    // path instead of letting the static planner eagerly broadcast it
-    val dupSide = if (doBroadcast) broadcast(dup) else dup.hint("shuffle_hash")
-    val cand = occ.join(dupSide, Seq("__fh"), "left_semi")
-      .groupBy(col(idCol)).agg(collect_list(col("__p")).as("__ps"))
-
-    // capped suffix keys, one doc-array shipment per representative,
-    // each suffix duplicated min(m, minCount) times (copies sort
-    // adjacent and stand in for the group's occurrences — see the
-    // collapse note above); the sort is the heavy step (8*cap bytes per
-    // candidate) — see object doc
-    // the crossDoc scan keeps the copy ordinal: (id, copy) is the scan's
-    // document LABEL, so the min(m, 2) copies of an identical-text group
-    // stand for two distinct real documents (and a single-copy doc's
-    // within-document repeats share one label — correctly NOT cross-doc).
-    // __cp also totalizes the sort order, which the two scan passes of
-    // crossDocScan need to observe identically; the occurrence path drops
-    // it as before (its copies are indistinguishable, so tie order is
-    // immaterial) and keeps its measured shuffle width.
-    val suffixBase = th.join(cand, Seq(idCol))
-      .select(col(idCol), col("__m"), explode(transform(col("__ps"),
-        p => struct(p.as("p"), slice(col("__th"), p, lit(cap)).as("k"))))
-        .as("__s"))
-      .select(col(idCol), col("__m"), col("__s.p").as("__p"),
-        col("__s.k").as("__key"))
-    // d >= 3 distinct-doc thresholds take the banded L-BLOCK scan
-    // ([[blockDocScan]]): no copy explosion — each representative suffix
-    // rides ONCE carrying its group size __m
-    val blockPath = crossDoc && (minDocs > 2 || blockScanAtD2)
-    val suffixes = (if (blockPath)
-        suffixBase.select(col(idCol), col("__p"), col("__m"), col("__key"))
-          .repartitionByRange(col("__key"), col(idCol), col("__p"))
-          .sortWithinPartitions(col("__key"), col(idCol), col("__p"))
-      else {
-        val withCp = suffixBase
-          .select(col(idCol), col("__p"), col("__key"),
-            explode(sequence(lit(1L),
-              least(lit(minCount.toLong), col("__m")))).as("__cp"))
-        if (crossDoc)
-          withCp.select(col(idCol), col("__p"), col("__cp"), col("__key"))
-            .repartitionByRange(col("__key"), col(idCol), col("__p"))
-            .sortWithinPartitions(
-              col("__key"), col(idCol), col("__p"), col("__cp"))
-        else
-          withCp.select(col(idCol), col("__p"), col("__key"))
-            .repartitionByRange(col("__key"), col(idCol), col("__p"))
-            .sortWithinPartitions(col("__key"), col(idCol), col("__p"))
-      })
-
-    // persisted as a SERIALIZED Dataset cache on DISK, not an RDD
-    // .cache() of deserialized Row objects: the suffix frame is 8*cap
-    // bytes per candidate BEFORE Java object overhead — corpus-scale,
-    // like a shuffle spill, and read three times (counts, boundary
-    // tails, window scan). The Row-object cache OOM'd an 8 GiB heap at
-    // sf10 (27M candidates, cap 16), and even a MEMORY_AND_DISK cache
-    // starved concurrent aggregations of unified memory through
-    // storage-unroll competition (AGGREGATE_OUT_OF_MEMORY at cap 24) —
-    // the full-board sf10 column caught both. DISK_ONLY keeps the whole
-    // unified-memory budget with execution; the re-reads are sequential
-    // local-disk streams, shuffle-file economics.
-    suffixes.persist(StorageLevel.DISK_ONLY)
-    val idType = df.schema(idCol).dataType
-    val pairDf = if (blockPath)
-        blockDocScan(suffixes, idCol, floor, cap, minDocs)
-      else {
-        val keyIdx = if (crossDoc) 3 else 2
-        val rdd = suffixes.rdd
-        val pairSchema = StructType(Seq(
-          StructField(idCol, idType),
-          StructField("__p", IntegerType, nullable = false),
-          StructField("__l", IntegerType, nullable = false)))
-        spark.createDataFrame(if (crossDoc) crossDocScan(rdd)
-          else occurrenceScan(rdd, keyIdx, minCount), pairSchema)
-      }
-    if (pairsOnly) {
-      Release.datasetAfterNextAction(suffixes)
-      Release.datasetAfterNextAction(toks)
-      return (pairDf, None)
-    }
+      .filter(col("__n") >= b.censusMin).select(col("__fh"))
+    val cand = candidateStarts(occ,
+      joinSide(dup, broadcastDups.getOrElse(smallOrUnknown(df))), idCol)
+    val pairs = suffixPairs(th.join(cand, Seq(idCol)), idCol, b,
+      blockScanAtD2)
     // per-position max + r >= floor cut (sub-floor rows exist only via a
     // census hash collision and would be dropped by every valid query's
     // r >= minLen filter anyway) + regroup, in ONE exchange
     val repIndex = regroupPairs(
-        pairDf.select(col(idCol), col("__p"), col("__l").as("__r")),
+        pairs.select(col(idCol), col("__p"), col("__l").as("__r")),
         idCol, floor)
       .withColumnRenamed(idCol, "__ridx")
     // re-expand representative rows to every group member (identical
@@ -420,33 +465,107 @@ object SpanIndex {
     // Dedup; nothing here is quadratic in group size.
     val index = repIndex
       .join(members, repIndex("__ridx") === members("__rep"))
-      .select(col("__member").as(idCol),
-        col("positions"), col("rlens"),
-        lit(floor).as("__floor"), lit(cap).as("__cap"),
-        lit(censusMin).as("__minc"), lit(crossDoc).as("__cross"))
+      .select(Seq(col("__member").as(idCol), col("positions"),
+        col("rlens")) ++ b.header: _*)
     // one tokenize pass serves BOTH outputs: the census gram rows are the
     // build's own floor-occurrence frame re-aggregated per (group, gram),
     // and members come from the same md5 keying — no second corpus pass
     val censusOpt = if (!withCensus) None else Some(SpanCensus(
-      occ.groupBy(col(idCol), col("__fh"))
-        .agg(count(lit(1)).as("__pcnt"))
-        .select(col(idCol).as("__gid"), col("__fh"), col("__pcnt"),
-          lit(floor).as("__floor")),
+      censusGrams(occ, idCol, floor),
       keyed.join(groups, Seq("__gk"))
         .select(col("__gk"), col("__rep").as("__gid"),
           col(idCol).as("__member"))))
-    // the index's consuming action crosses an RDD boundary (the scan),
-    // so plan containment can't identify either snapshot — unconditional
-    // variant for both (the consuming variant would only ever hit its
-    // 64-action leak backstop here). With a census riding the same toks
-    // snapshot, toks instead waits for the census-consuming action
-    // (writeSpanCensus — a pure Dataset derivation, so containment DOES
-    // identify it); callers materialize the index first (see the
-    // WithCensus scaladoc ordering contract).
-    Release.datasetAfterNextAction(suffixes)
+    // the index's consuming action crosses an RDD boundary (the scan), so
+    // plan containment can't identify it — unconditional release. With a
+    // census riding the same toks snapshot, toks instead waits for the
+    // census-consuming action (writeSpanCensus — a pure Dataset
+    // derivation, so containment DOES identify it); callers materialize
+    // the index first (see the WithCensus scaladoc ordering contract).
     if (withCensus) Release.datasetAfterConsumingAction(toks)
     else Release.datasetAfterNextAction(toks)
     (index, censusOpt)
+  }
+
+  /** Plan-statistics size of `df` (file-size estimates — no Spark job);
+    * None when the planner does not know it (the defaultSizeInBytes
+    * sentinel: RDD-backed frames, some views).
+    */
+  private def planBytes(df: DataFrame): Option[BigInt] = {
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (bytes == df.sparkSession.sessionState.conf.defaultSizeInBytes) None
+    else Some(bytes)
+  }
+
+  /** Whether `df` is small — at most [[Corpus.BroadcastDupsMaxInputBytes]]
+    * by plan statistics — or of unknown size: the broadcast choice for
+    * the census joins, and the legacy append's disjoint-id check.
+    */
+  private def smallOrUnknown(df: DataFrame): Boolean =
+    planBytes(df).forall(_ <= Corpus.BroadcastDupsMaxInputBytes)
+
+  /** The append-vs-rebuild decision from PLAN STATISTICS only (file-size
+    * estimates — building this predicate runs no Spark job): rebuild when
+    * the delta's bytes exceed `rebuildFraction` × the old corpus'.
+    * Unknown stats on either side choose the incremental path — the
+    * function's purpose, and a pure cost trade since both branches are
+    * exact. Spec-pinned (SpanIndexSpec) so a regression back to eager
+    * corpus counts cannot land silently.
+    */
+  private[graft] def shouldRebuild(oldDocs: DataFrame, newDocs: DataFrame,
+      rebuildFraction: Double): Boolean =
+    (planBytes(oldDocs), planBytes(newDocs)) match {
+      case (Some(ob), Some(nb)) =>
+        BigDecimal(nb) > BigDecimal(ob) * rebuildFraction
+      case _ => false
+    }
+
+  /** Pre-flight of both appends: `rebuildFraction` and the index header —
+    * one row read from `index` must record the append's band and
+    * counting mode. An EMPTY index (dup-free old corpus) carries no rows
+    * to validate against; the explicit parameters are the contract there.
+    */
+  private def checkAppendTo(index: DataFrame, b: Band,
+      rebuildFraction: Double): Unit = {
+    require(rebuildFraction >= 0.0, "rebuildFraction must be >= 0")
+    index.select(col("__floor"), col("__cap"), col("__minc"),
+        col("__cross")).limit(1).collect().foreach { r =>
+      require(r.getInt(0) == b.floor && r.getInt(1) == b.cap &&
+          r.getInt(2) == b.censusMin && r.getBoolean(3) == b.crossDoc,
+        s"index records (floor=${r.getInt(0)}, cap=${r.getInt(1)}, " +
+          s"minCount/minDocs=${r.getInt(2)}, crossDoc=${r.getBoolean(3)}); " +
+          s"append called with (floor=${b.floor}, cap=${b.cap}, " +
+          s"minCount/minDocs=${b.censusMin}, crossDoc=${b.crossDoc})")
+    }
+  }
+
+  /** The delta side of an append, the same whichever source supplies the
+    * old corpus' counts: the new docs' token hashes (DISK_ONLY per the
+    * SCALE.md r10 persist rule — delta-sized token arrays live across
+    * the census and the suffix-key slice), their floor-gram occurrences
+    * `occ`, the per-gram count they contribute (`__nn`: total positions,
+    * or distinct documents under crossDoc), and that gram set as `keys`
+    * and as a join side. The gram side is the DELTA's distinct grams
+    * (small), broadcast unless the caller or the stats guard says
+    * otherwise.
+    */
+  private final class Delta(newDocs: DataFrame, idCol: String,
+      textCol: String, floor: Int, crossDoc: Boolean,
+      broadcastDups: Option[Boolean]) {
+    val th: DataFrame = hashedDocs(newDocs, idCol, textCol)
+      .persist(StorageLevel.DISK_ONLY)
+    val occ: DataFrame = floorGrams(th, floor)
+    private val counts = gramCounts(occ, idCol, crossDoc, "__nn")
+    val small: Boolean = broadcastDups.getOrElse(smallOrUnknown(newDocs))
+    val keys: DataFrame = counts.select(col("__fh"))
+    val gramSide: DataFrame = joinSide(keys, small)
+
+    /** Union-count candidate grams — this delta's count plus the old
+      * corpus' `__no` (absent: 0) reaches `censusMin` — as a join side.
+      */
+    def dupSide(oldCounts: DataFrame, censusMin: Int): DataFrame =
+      joinSide(counts.join(oldCounts, Seq("__fh"), "left")
+        .filter(col("__nn") + coalesce(col("__no"), lit(0L)) >= censusMin)
+        .select(col("__fh")), small)
   }
 
   /** INCREMENTAL index maintenance: extend an index built over `oldDocs`
@@ -515,25 +634,6 @@ object SpanIndex {
     * Callers that pass a persisted `index` (every gate in this repo)
     * are unaffected.
     */
-  /** The append-vs-rebuild decision from PLAN STATISTICS only (file-size
-    * estimates — building this predicate runs no Spark job): rebuild when
-    * the delta's bytes exceed `rebuildFraction` × the old corpus'.
-    * Unknown stats on either side (the defaultSizeInBytes sentinel:
-    * RDD-backed frames, some views) choose the incremental path — the
-    * function's purpose, and a pure cost trade since both branches are
-    * exact. Spec-pinned (SpanIndexSpec) so a regression back to eager
-    * corpus counts cannot land silently.
-    */
-  private[graft] def shouldRebuild(oldDocs: DataFrame, newDocs: DataFrame,
-      rebuildFraction: Double): Boolean = {
-    val conf = oldDocs.sparkSession.sessionState.conf
-    val ob = oldDocs.queryExecution.optimizedPlan.stats.sizeInBytes
-    val nb = newDocs.queryExecution.optimizedPlan.stats.sizeInBytes
-    val unknown = ob == conf.defaultSizeInBytes ||
-      nb == conf.defaultSizeInBytes
-    !unknown && BigDecimal(nb) > BigDecimal(ob) * rebuildFraction
-  }
-
   def appendToSpanIndex(index: DataFrame, oldDocs: DataFrame,
       newDocs: DataFrame, idCol: String, textCol: String,
       floor: Int = 8, cap: Int = 64, minCount: Int = 2,
@@ -541,38 +641,10 @@ object SpanIndex {
       broadcastDups: Option[Boolean] = None,
       validateDisjointIds: Option[Boolean] = None,
       minDocs: Int = 2): DataFrame = {
-    require(floor >= 1, s"floor must be >= 1, got $floor")
-    require(cap >= floor, s"cap must be >= floor; got cap=$cap floor=$floor")
-    require(minCount >= 2 && minCount <= 4096,
-      s"minCount must be in [2, 4096], got $minCount")
-    require(minDocs >= 2 && minDocs <= 4096,
-      s"minDocs must be in [2, 4096], got $minDocs")
-    require(!crossDoc || minCount == 2,
-      "crossDoc counting is parameterized by minDocs; minCount applies " +
-        "to occurrence mode only and must stay 2 under crossDoc")
-    require(crossDoc || minDocs == 2,
-      "minDocs > 2 is a distinct-document threshold — pass crossDoc = true")
-    require(rebuildFraction >= 0.0, "rebuildFraction must be >= 0")
-    val censusMin = if (crossDoc) minDocs else minCount
-    val spark = oldDocs.sparkSession
-    // an EMPTY index (dup-free old corpus) carries no rows to validate
-    // against — the explicit parameters are the contract there
-    index.select(col("__floor"), col("__cap"), col("__minc"),
-        col("__cross")).limit(1).collect().foreach { r =>
-      require(r.getInt(0) == floor && r.getInt(1) == cap &&
-          r.getInt(2) == censusMin && r.getBoolean(3) == crossDoc,
-        s"index records (floor=${r.getInt(0)}, cap=${r.getInt(1)}, " +
-          s"minCount/minDocs=${r.getInt(2)}, crossDoc=${r.getBoolean(3)}); " +
-          s"append called with (floor=$floor, cap=$cap, " +
-          s"minCount/minDocs=$censusMin, crossDoc=$crossDoc)")
-    }
-    val union = oldDocs.select(col(idCol), col(textCol))
-      .unionByName(newDocs.select(col(idCol), col(textCol)))
-    val oldBytes = oldDocs.queryExecution.optimizedPlan.stats.sizeInBytes
-    val oldUnknown = oldBytes == spark.sessionState.conf.defaultSizeInBytes
-    val doValidate = validateDisjointIds.getOrElse(
-      oldUnknown || oldBytes <= Corpus.BroadcastDupsMaxInputBytes)
-    if (doValidate)
+    val b = Band(floor, cap, minCount, crossDoc, minDocs)
+    checkAppendTo(index, b, rebuildFraction)
+    val union = unionDocs(oldDocs, newDocs, idCol, textCol)
+    if (validateDisjointIds.getOrElse(smallOrUnknown(oldDocs)))
       require(newDocs.select(col(idCol))
           .join(oldDocs.select(col(idCol)), Seq(idCol), "left_semi").isEmpty,
         "appendToSpanIndex: oldDocs and newDocs share document ids — " +
@@ -582,62 +654,25 @@ object SpanIndex {
       return buildDuplicateSpanIndex(union, idCol, textCol, floor, cap,
         minCount, broadcastDups, crossDoc, minDocs)
 
-    def tokHash(df: DataFrame): DataFrame = df.select(col(idCol),
-      transform(Text.tokens(col(textCol)), t => xxhash64(t)).as("__th"))
-    def floorOcc(th: DataFrame): DataFrame = th
-      .filter(size(col("__th")) >= floor)
-      .select(col(idCol), posexplode(
-        transform(sequence(lit(1), size(col("__th")) - (floor - 1)),
-          p => xxhash64(slice(col("__th"), p, lit(floor)))))
-        .as(Seq("__i", "__fh")))
-      .select(col(idCol), (col("__i") + 1).as("__p"), col("__fh"))
-
-    // delta-sized token arrays, live across the census and the suffix-
-    // key slice — DISK_ONLY per the SCALE.md r10 persist rule
-    val newTh = tokHash(newDocs).persist(StorageLevel.DISK_ONLY)
-    val newOcc = floorOcc(newTh)
-    // per-gram count contributed by the new docs (occurrence: total
-    // positions; crossDoc: distinct documents)
-    val newAgg = (if (crossDoc)
-        newOcc.select(col("__fh"), col(idCol)).distinct()
-      else newOcc)
-      .groupBy(col("__fh")).agg(count(lit(1)).as("__nn"))
+    val delta = new Delta(newDocs, idCol, textCol, floor, crossDoc,
+      broadcastDups)
     // old positions matching a NEW gram — the only old positions whose R
-    // can change; the gram side is the DELTA's distinct grams (small),
-    // broadcast unless the caller or the stats guard says otherwise
-    val doBroadcast = broadcastDups.getOrElse {
-      val bytes = newDocs.queryExecution.optimizedPlan.stats.sizeInBytes
-      val unknown =
-        bytes == spark.sessionState.conf.defaultSizeInBytes
-      unknown || bytes <= Corpus.BroadcastDupsMaxInputBytes
-    }
-    val gramKeys = newAgg.select(col("__fh"))
-    val gramSide =
-      if (doBroadcast) broadcast(gramKeys) else gramKeys.hint("shuffle_hash")
-    // persisted: fixed-width (id, p, fh) scalars, read by the union-
-    // count aggregate AND the candidate union below — unpersisted, each
-    // consumer re-tokenizes and re-explodes the whole old corpus
-    val oldOccM = floorOcc(tokHash(oldDocs))
-      .join(gramSide, Seq("__fh"), "left_semi")
+    // can change. Persisted: fixed-width (id, p, fh) scalars, read by the
+    // union-count aggregate AND the candidate union below — unpersisted,
+    // each consumer re-tokenizes and re-explodes the whole old corpus
+    val oldOccM = floorGrams(hashedDocs(oldDocs, idCol, textCol), floor)
+      .join(delta.gramSide, Seq("__fh"), "left_semi")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // union-count candidate grams: new contribution + matched-old
-    // contribution >= the threshold
-    val oldAgg = (if (crossDoc)
-        oldOccM.select(col("__fh"), col(idCol)).distinct()
-      else oldOccM)
-      .groupBy(col("__fh")).agg(count(lit(1)).as("__no"))
-    val dup = newAgg.join(oldAgg, Seq("__fh"), "left")
-      .filter(col("__nn") + coalesce(col("__no"), lit(0L)) >= censusMin)
-      .select(col("__fh"))
-    val dupSide = if (doBroadcast) broadcast(dup) else dup.hint("shuffle_hash")
+    val dupSide = delta.dupSide(
+      gramCounts(oldOccM, idCol, crossDoc, "__no"), b.censusMin)
     // persisted DISK_ONLY (per-doc int arrays, the r10 rule): consumed
     // by the collapse keying and the suffix-key slice — each use would
     // otherwise re-run the whole census chain (measured 9 -> 23 s at
     // sf1 when the collapse landed unpersisted)
-    val cand = newOcc.select(col(idCol), col("__p"), col("__fh"))
-      .unionByName(oldOccM.select(col(idCol), col("__p"), col("__fh")))
-      .join(dupSide, Seq("__fh"), "left_semi")
-      .groupBy(col(idCol)).agg(collect_list(col("__p")).as("__ps"))
+    val cand = candidateStarts(
+        delta.occ.select(col(idCol), col("__p"), col("__fh"))
+          .unionByName(oldOccM.select(col(idCol), col("__p"), col("__fh"))),
+        dupSide, idCol)
       .persist(StorageLevel.DISK_ONLY)
     // identical-text COLLAPSE over the CANDIDATE docs (new ∪ matched
     // old), exactly the build's: identical docs are either all matched
@@ -654,50 +689,40 @@ object SpanIndex {
     // (id, md5) scalars read by the group aggregate and the member join
     val candKeyed = union
       .join(cand.select(col(idCol)), Seq(idCol), "left_semi")
-      .select(col(idCol),
-        md5(coalesce(col(textCol).cast("string"), lit(""))).as("__gk"))
+      .select(col(idCol), textKey(textCol))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // (gk, rep, m) scalars read by members, the rep-doc join, and the
     // slice's group-size join
-    val candGroups = candKeyed.groupBy(col("__gk"))
-      .agg(min(col(idCol)).as("__rep"), count(lit(1)).as("__m"))
+    val candGroups = textGroups(candKeyed, idCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val candMembers = candKeyed.join(candGroups, Seq("__gk"))
       .select(col("__rep"), col(idCol).as("__member"))
     // token arrays travel once per REPRESENTATIVE into the slice; old
     // docs are re-tokenized only when matched (delta-neighborhood-sized)
-    val repTh = tokHash(union.join(
+    val repTh = hashedDocs(union.join(
         candGroups.select(col("__rep")), union(idCol) === col("__rep"))
-      .select(col(idCol), col(textCol)))
+      .select(col(idCol), col(textCol)), idCol, textCol)
     val out = appendScanMerge(index, repTh, cand,
       candGroups.select(col("__rep").as(idCol), col("__m")), candMembers,
-      idCol, oldDocs.schema(idCol).dataType, floor, cap, minCount,
-      crossDoc, minDocs, doBroadcast)
-    Release.datasetAfterNextAction(newTh)
-    Release.datasetAfterNextAction(oldOccM)
-    Release.datasetAfterNextAction(cand)
-    Release.datasetAfterNextAction(candKeyed)
-    Release.datasetAfterNextAction(candGroups)
+      idCol, b, delta.small)
+    Seq(delta.th, oldOccM, cand, candKeyed, candGroups)
+      .foreach(Release.datasetAfterNextAction)
     out
   }
 
   /** Shared tail of both append paths (legacy full-scan and census-
-    * sidecar): capped suffix keys over the candidate REPRESENTATIVES,
-    * the build's sort + DISK_ONLY snapshot posture, the mode-matched
-    * scan, member re-expansion, and the per-position max merge against
-    * the stored index. Inputs are the delta-neighborhood frames the two
-    * paths compute differently: `repTh` (rep id, token hashes), `cand`
-    * (rep id, candidate positions), `candM` (rep id, UNION group size),
-    * `candMembers` (`__rep`, `__member`) mapping each rep to every union
-    * member owed an index row.
+    * sidecar): the build's suffix-sort step ([[suffixPairs]]) over the
+    * candidate REPRESENTATIVES, member re-expansion, and the
+    * per-position max merge against the stored index. Inputs are the
+    * delta-neighborhood frames the two paths compute differently:
+    * `repTh` (rep id, token hashes), `cand` (rep id, candidate
+    * positions), `candM` (rep id, UNION group size), `candMembers`
+    * (`__rep`, `__member`) mapping each rep to every union member owed
+    * an index row.
     */
   private def appendScanMerge(index: DataFrame, repTh: DataFrame,
       cand: DataFrame, candM: DataFrame, candMembers: DataFrame,
-      idCol: String, idType: org.apache.spark.sql.types.DataType,
-      floor: Int, cap: Int, minCount: Int, crossDoc: Boolean,
-      minDocs: Int, broadcastCands: Boolean): DataFrame = {
-    val spark = index.sparkSession
-    val censusMin = if (crossDoc) minDocs else minCount
+      idCol: String, b: Band, broadcastCands: Boolean): DataFrame = {
     // The pass-through split below references `index` TWICE (semi + anti).
     // Two references to an UNMATERIALIZED cached plan inside one action
     // race under AQE's concurrent query-stage scheduling — each branch
@@ -720,52 +745,15 @@ object SpanIndex {
       else index
     idx.count()
     if (idxOwned) Release.datasetAfterConsumingAction(idx)
-    val withKeys = repTh.join(cand, Seq(idCol))
-      .join(candM, Seq(idCol))
-      .select(col(idCol), col("__m"), explode(transform(col("__ps"),
-        p => struct(p.as("p"), slice(col("__th"), p, lit(cap)).as("k"))))
-        .as("__s"))
-      .select(col(idCol), col("__m"), col("__s.p").as("__p"),
-        col("__s.k").as("__key"))
-    // same sort + DISK_ONLY snapshot posture as the build, including the
-    // block-path frame shape for d >= 3 (one row per rep suffix with __m)
-    val blockPath = crossDoc && minDocs > 2
-    val suffixes = (if (blockPath)
-        withKeys.select(col(idCol), col("__p"), col("__m"), col("__key"))
-          .repartitionByRange(col("__key"), col(idCol), col("__p"))
-          .sortWithinPartitions(col("__key"), col(idCol), col("__p"))
-      else {
-        val withCp = withKeys
-          .select(col(idCol), col("__p"), col("__key"),
-            explode(sequence(lit(1L),
-              least(lit(minCount.toLong), col("__m")))).as("__cp"))
-        if (crossDoc)
-          withCp.select(col(idCol), col("__p"), col("__cp"), col("__key"))
-            .repartitionByRange(col("__key"), col(idCol), col("__p"))
-            .sortWithinPartitions(
-              col("__key"), col(idCol), col("__p"), col("__cp"))
-        else
-          withCp.select(col(idCol), col("__p"), col("__key"))
-            .repartitionByRange(col("__key"), col(idCol), col("__p"))
-            .sortWithinPartitions(col("__key"), col(idCol), col("__p"))
-      })
-    suffixes.persist(StorageLevel.DISK_ONLY)
-    val pairDf = if (blockPath)
-        blockDocScan(suffixes, idCol, floor, cap, minDocs)
-      else {
-        val keyIdx = if (crossDoc) 3 else 2
-        val rdd = suffixes.rdd
-        val pairSchema = StructType(Seq(
-          StructField(idCol, idType),
-          StructField("__p", IntegerType, nullable = false),
-          StructField("__l", IntegerType, nullable = false)))
-        spark.createDataFrame(if (crossDoc) crossDocScan(rdd)
-          else occurrenceScan(rdd, keyIdx, minCount), pairSchema)
-      }
+    // d >= 3 takes the block path here too (one row per rep suffix with
+    // its union group size __m)
+    val pairs = suffixPairs(
+      repTh.join(cand, Seq(idCol)).join(candM, Seq(idCol)), idCol, b,
+      blockScanAtD2 = false)
     // scan results are per REPRESENTATIVE — re-expand to every candidate
     // group member (identical text -> identical R), the build's linear
     // single-key fan-out
-    val scanR = pairDf
+    val scanR = pairs
       .groupBy(col(idCol), col("__p")).agg(max(col("__l")).as("__r"))
       .withColumnRenamed(idCol, "__ridx")
       .join(candMembers, col("__ridx") === col("__rep"))
@@ -780,9 +768,9 @@ object SpanIndex {
     // candidate-neighborhood bytes, not the whole index). The candidate
     // id set is delta-neighborhood-sized, so it rides the same
     // broadcast/shuffle decision as the other delta frames.
-    val candIds = candMembers.select(col("__member").as(idCol)).distinct()
-    val candSide = if (broadcastCands) broadcast(candIds)
-      else candIds.hint("shuffle_hash")
+    val candSide = joinSide(
+      candMembers.select(col("__member").as(idCol)).distinct(),
+      broadcastCands)
     val untouched = idx.join(candSide, Seq(idCol), "left_anti")
       .select(col(idCol), col("positions"), col("rlens"),
         col("__floor"), col("__cap"), col("__minc"), col("__cross"))
@@ -791,13 +779,10 @@ object SpanIndex {
         col("rlens"))).as("__pr"))
       .select(col(idCol), col("__pr.positions").as("__p"),
         col("__pr.rlens").as("__r"))
-    val out = regroupPairs(scanR.unionByName(oldPairs), idCol, floor)
-      .select(col(idCol), col("positions"), col("rlens"),
-        lit(floor).as("__floor"), lit(cap).as("__cap"),
-        lit(censusMin).as("__minc"), lit(crossDoc).as("__cross"))
+    regroupPairs(scanR.unionByName(oldPairs), idCol, b.floor)
+      .select(Seq(col(idCol), col("positions"), col("rlens")) ++
+        b.header: _*)
       .unionByName(untouched)
-    Release.datasetAfterNextAction(suffixes)
-    out
   }
 
   /** Census SIDECAR (round 14 — keeps appends off the old TEXT): the
@@ -961,21 +946,21 @@ object SpanIndex {
     bos.toByteArray
   }
 
-  /** Per-(group, floor-gram) rows of [[SpanCensus]] over `docs`
-    * restricted to one representative per identical-text group —
-    * `repDocs` must already be rep-only; ids pass through as `__gid`.
+  /** Per-(group, floor-gram) rows of [[SpanCensus]] from the floor-gram
+    * occurrences `occ` of one representative per identical-text group;
+    * ids pass through as `__gid`.
     */
-  private def gramRows(repDocs: DataFrame, idCol: String, textCol: String,
+  private def censusGrams(occ: DataFrame, idCol: String,
       floor: Int): DataFrame =
-    repDocs.select(col(idCol),
-        transform(Text.tokens(col(textCol)), t => xxhash64(t)).as("__th"))
-      .filter(size(col("__th")) >= floor)
-      .select(col(idCol), explode(
-        transform(sequence(lit(1), size(col("__th")) - (floor - 1)),
-          p => xxhash64(slice(col("__th"), p, lit(floor))))).as("__fh"))
-      .groupBy(col(idCol), col("__fh")).agg(count(lit(1)).as("__pcnt"))
+    occ.groupBy(col(idCol), col("__fh")).agg(count(lit(1)).as("__pcnt"))
       .select(col(idCol).as("__gid"), col("__fh"), col("__pcnt"),
         lit(floor).as("__floor"))
+
+  /** [[censusGrams]] over `repDocs`, which must already be rep-only. */
+  private def gramRows(repDocs: DataFrame, idCol: String, textCol: String,
+      floor: Int): DataFrame =
+    censusGrams(floorGrams(hashedDocs(repDocs, idCol, textCol), floor),
+      idCol, floor)
 
   /** Build the [[SpanCensus]] sidecar for an index over `df` with the
     * same `floor`. One tokenize + explode + aggregate pass over the
@@ -987,8 +972,7 @@ object SpanIndex {
   def buildSpanCensus(df: DataFrame, idCol: String, textCol: String,
       floor: Int): SpanCensus = {
     require(floor >= 1, s"floor must be >= 1, got $floor")
-    val keyed = df.select(col(idCol),
-      md5(coalesce(col(textCol).cast("string"), lit(""))).as("__gk"))
+    val keyed = df.select(col(idCol), textKey(textCol))
     val groups = keyed.groupBy(col("__gk")).agg(min(col(idCol)).as("__gid"))
     val members = keyed.join(groups, Seq("__gk"))
       .select(col("__gk"), col("__gid"), col(idCol).as("__member"))
@@ -1241,8 +1225,7 @@ object SpanIndex {
   private def censusDeltas(census: SpanCensus, newDocs: DataFrame,
       idCol: String, textCol: String,
       floor: Int): (DataFrame, DataFrame) = {
-    val newKeyed = newDocs.select(col(idCol),
-      md5(coalesce(col(textCol).cast("string"), lit(""))).as("__gk"))
+    val newKeyed = newDocs.select(col(idCol), textKey(textCol))
     val gidMap = census.members.select(col("__gk"), col("__gid")).distinct()
     val newGroupGid = newKeyed.join(gidMap, Seq("__gk"), "left_anti")
       .groupBy(col("__gk")).agg(min(col(idCol)).as("__gid"))
@@ -1255,6 +1238,14 @@ object SpanIndex {
       idCol, textCol, floor)
     (membersDelta, gramsDelta)
   }
+
+  /** The census' recorded floor (one row read) must be the append's. */
+  private def checkCensusFloor(census: SpanCensus, floor: Int): Unit =
+    census.grams.select(col("__floor")).limit(1).collect().foreach { r =>
+      require(r.getInt(0) == floor,
+        s"census was cut at floor=${r.getInt(0)}, append called with " +
+          s"floor=$floor — rebuild the sidecar at the index's band")
+    }
 
   /** Absorb a delta's gram hashes into a copy of `meta`'s bloom. Small
     * deltas (the append's whole reason to exist) put their hashes
@@ -1321,11 +1312,7 @@ object SpanIndex {
     val meta = census.bloom.getOrElse(throw new IllegalArgumentException(
       s"appendSpanCensusStore: no bloom row under $path — the store was " +
         "not written by writeSpanCensus; rewrite it before delta-appends"))
-    census.grams.select(col("__floor")).limit(1).collect().foreach { r =>
-      require(r.getInt(0) == floor,
-        s"census store was cut at floor=${r.getInt(0)}, delta-append " +
-          s"called with floor=$floor")
-    }
+    checkCensusFloor(census, floor)
     require(newDocs.select(col(idCol))
         .join(census.members.select(col("__member").as(idCol)),
           Seq(idCol), "left_semi").isEmpty,
@@ -1431,34 +1418,10 @@ object SpanIndex {
       broadcastDups: Option[Boolean] = None,
       validateDisjointIds: Option[Boolean] = None,
       minDocs: Int = 2): (DataFrame, SpanCensus) = {
-    require(floor >= 1, s"floor must be >= 1, got $floor")
-    require(cap >= floor, s"cap must be >= floor; got cap=$cap floor=$floor")
-    require(minCount >= 2 && minCount <= 4096,
-      s"minCount must be in [2, 4096], got $minCount")
-    require(minDocs >= 2 && minDocs <= 4096,
-      s"minDocs must be in [2, 4096], got $minDocs")
-    require(!crossDoc || minCount == 2,
-      "crossDoc counting is parameterized by minDocs; minCount applies " +
-        "to occurrence mode only and must stay 2 under crossDoc")
-    require(crossDoc || minDocs == 2,
-      "minDocs > 2 is a distinct-document threshold — pass crossDoc = true")
-    require(rebuildFraction >= 0.0, "rebuildFraction must be >= 0")
-    val censusMin = if (crossDoc) minDocs else minCount
+    val b = Band(floor, cap, minCount, crossDoc, minDocs)
     val spark = oldDocs.sparkSession
-    index.select(col("__floor"), col("__cap"), col("__minc"),
-        col("__cross")).limit(1).collect().foreach { r =>
-      require(r.getInt(0) == floor && r.getInt(1) == cap &&
-          r.getInt(2) == censusMin && r.getBoolean(3) == crossDoc,
-        s"index records (floor=${r.getInt(0)}, cap=${r.getInt(1)}, " +
-          s"minCount/minDocs=${r.getInt(2)}, crossDoc=${r.getBoolean(3)}); " +
-          s"append called with (floor=$floor, cap=$cap, " +
-          s"minCount/minDocs=$censusMin, crossDoc=$crossDoc)")
-    }
-    census.grams.select(col("__floor")).limit(1).collect().foreach { r =>
-      require(r.getInt(0) == floor,
-        s"census was cut at floor=${r.getInt(0)}, append called with " +
-          s"floor=$floor — rebuild the sidecar at the index's band")
-    }
+    checkAppendTo(index, b, rebuildFraction)
+    checkCensusFloor(census, floor)
     if (validateDisjointIds.getOrElse(true)) {
       // DISJOINTNESS + symmetric STALENESS guard, folded to ONE job (r16,
       // guide §1.2 — each guard job pays fixed scheduling overhead per
@@ -1513,12 +1476,10 @@ object SpanIndex {
             s"($memberCount); rebuild the sidecar")
       }
     }
-    if (shouldRebuild(oldDocs, newDocs, rebuildFraction)) {
-      val union = oldDocs.select(col(idCol), col(textCol))
-        .unionByName(newDocs.select(col(idCol), col(textCol)))
+    val union = unionDocs(oldDocs, newDocs, idCol, textCol)
+    if (shouldRebuild(oldDocs, newDocs, rebuildFraction))
       return buildDuplicateSpanIndexWithCensus(union, idCol, textCol,
         floor, cap, minCount, broadcastDups, crossDoc, minDocs)
-    }
 
     // ---- sidecar update (all delta-sized) ----
     val (membersDelta, gramsDelta0) =
@@ -1556,29 +1517,8 @@ object SpanIndex {
       updStore._1, updStore._2)
 
     // ---- counts: delta census live, old census from the sidecar ----
-    def tokHash(df: DataFrame): DataFrame = df.select(col(idCol),
-      transform(Text.tokens(col(textCol)), t => xxhash64(t)).as("__th"))
-    def floorOcc(th: DataFrame): DataFrame = th
-      .filter(size(col("__th")) >= floor)
-      .select(col(idCol), posexplode(
-        transform(sequence(lit(1), size(col("__th")) - (floor - 1)),
-          p => xxhash64(slice(col("__th"), p, lit(floor)))))
-        .as(Seq("__i", "__fh")))
-      .select(col(idCol), (col("__i") + 1).as("__p"), col("__fh"))
-    val newTh = tokHash(newDocs).persist(StorageLevel.DISK_ONLY)
-    val newOcc = floorOcc(newTh)
-    val newAgg = (if (crossDoc)
-        newOcc.select(col("__fh"), col(idCol)).distinct()
-      else newOcc)
-      .groupBy(col("__fh")).agg(count(lit(1)).as("__nn"))
-    val doBroadcast = broadcastDups.getOrElse {
-      val bytes = newDocs.queryExecution.optimizedPlan.stats.sizeInBytes
-      val unknown = bytes == spark.sessionState.conf.defaultSizeInBytes
-      unknown || bytes <= Corpus.BroadcastDupsMaxInputBytes
-    }
-    val gramKeys = newAgg.select(col("__fh"))
-    val gramSide =
-      if (doBroadcast) broadcast(gramKeys) else gramKeys.hint("shuffle_hash")
+    val delta = new Delta(newDocs, idCol, textCol, floor, crossDoc,
+      broadcastDups)
     // per-group member counts: stored frame when the census carries one
     // (no corpus-rows aggregate per append), derived otherwise
     val mOld = census.counts
@@ -1608,7 +1548,7 @@ object SpanIndex {
       case (Some(gb), Some(meta)) =>
         val bfBc = spark.sparkContext.broadcast(bloomFromBytes(meta.bytes))
         val might = udf((fh: Long) => bfBc.value.mightContainLong(fh))
-        def surv = gramKeys.filter(might(col("__fh")))
+        def surv = delta.keys.filter(might(col("__fh")))
           .withColumn("__fb",
             pmod(col("__fh"), lit(meta.buckets)).cast("int"))
         val bset = surv.groupBy(col("__fb")).agg(count(lit(1)))
@@ -1620,17 +1560,16 @@ object SpanIndex {
           // ContextCleaner notices (ADVICE r15)
           bfBc.unpersist(blocking = false)
           if (bset.isEmpty) census.grams.filter(lit(false))
-          else census.grams.join(gramSide, Seq("__fh"), "left_semi")
+          else census.grams.join(delta.gramSide, Seq("__fh"), "left_semi")
         } else {
           // sparse path: `side` re-evaluates the bloom UDF at the
           // consuming action, so release only after that completes
           Release.broadcastAfterNextAction(spark, bfBc)
-          val side = if (doBroadcast) broadcast(surv.select(col("__fh")))
-            else surv.select(col("__fh")).hint("shuffle_hash")
+          val side = joinSide(surv.select(col("__fh")), delta.small)
           gb.filter(col("__fb").isin(bset: _*)).drop("__fb")
             .join(side, Seq("__fh"), "left_semi")
         }
-      case _ => census.grams.join(gramSide, Seq("__fh"), "left_semi")
+      case _ => census.grams.join(delta.gramSide, Seq("__fh"), "left_semi")
     }
     val oldMatched = matchedGrams
       .join(mOld, Seq("__gid"))
@@ -1638,15 +1577,12 @@ object SpanIndex {
     val oldAgg = oldMatched.groupBy(col("__fh"))
       .agg((if (crossDoc) sum(col("__mo"))
         else sum(col("__pcnt") * col("__mo"))).as("__no"))
-    val dup = newAgg.join(oldAgg, Seq("__fh"), "left")
-      .filter(col("__nn") + coalesce(col("__no"), lit(0L)) >= censusMin)
-      .select(col("__fh"))
-    val dupSide = if (doBroadcast) broadcast(dup) else dup.hint("shuffle_hash")
+    val dupSide = delta.dupSide(oldAgg, b.censusMin)
 
     // ---- candidate groups: sidecar lookup, no corpus pass ----
     val matchedOldGids = oldMatched.join(dupSide, Seq("__fh"), "left_semi")
       .select(col("__gid")).distinct()
-    val newCandGids = newOcc.join(dupSide, Seq("__fh"), "left_semi")
+    val newCandGids = delta.occ.join(dupSide, Seq("__fh"), "left_semi")
       .select(col(idCol).as("__member")).distinct()
       .join(membersDelta.select(col("__gid"), col("__member")),
         Seq("__member"))
@@ -1666,28 +1602,21 @@ object SpanIndex {
     // ---- the one old-corpus touch: fetch matched representatives' text
     // (suffix keys need the tokens past each gram — irreducible); a
     // column-pruned semi-join, no tokenization outside the neighborhood
-    val unionDocs = oldDocs.select(col(idCol), col(textCol))
-      .unionByName(newDocs.select(col(idCol), col(textCol)))
-    val repDocs = unionDocs.join(candGids.select(col("__gid").as(idCol)),
+    val repDocs = union.join(candGids.select(col("__gid").as(idCol)),
       Seq(idCol), "left_semi")
-    val repTh = tokHash(repDocs).persist(StorageLevel.DISK_ONLY)
-    val cand = floorOcc(repTh).join(dupSide, Seq("__fh"), "left_semi")
-      .groupBy(col(idCol)).agg(collect_list(col("__p")).as("__ps"))
+    val repTh = hashedDocs(repDocs, idCol, textCol)
+      .persist(StorageLevel.DISK_ONLY)
+    val cand = candidateStarts(floorGrams(repTh, floor), dupSide, idCol)
     val out = appendScanMerge(index, repTh, cand, candM, candMembers,
-      idCol, oldDocs.schema(idCol).dataType, floor, cap, minCount,
-      crossDoc, minDocs, doBroadcast)
-    Release.datasetAfterNextAction(newTh)
-    Release.datasetAfterNextAction(gramsDelta)
-    Release.datasetAfterNextAction(oldMatched)
-    Release.datasetAfterNextAction(candGids)
-    Release.datasetAfterNextAction(candMembersAll)
-    Release.datasetAfterNextAction(repTh)
+      idCol, b, delta.small)
+    Seq(delta.th, gramsDelta, oldMatched, candGids, candMembersAll, repTh)
+      .foreach(Release.datasetAfterNextAction)
     (out, updated)
   }
 
   /** OCCURRENCE-counting R scan over the sorted capped suffixes — rows
     * with the id at ordinal 0, the position at 1, and the capped key at
-    * `keyIdx`. Every window of `c` consecutive suffixes contributes its
+    * 2. Every window of `c` consecutive suffixes contributes its
     * min adjacent LCP to ALL c member positions' running max (c=2: each
     * pair (a,b) contributes lcp(a,b) to both endpoints), so no
     * successor-side exchange is needed — a window is computed in the
@@ -1696,7 +1625,7 @@ object SpanIndex {
     * incremental append.
     */
   private def occurrenceScan(rdd: org.apache.spark.rdd.RDD[Row],
-      keyIdx: Int, c: Int): org.apache.spark.rdd.RDD[Row] = {
+      c: Int): org.apache.spark.rdd.RDD[Row] = {
     val (_, boundary) = BoundaryExchange.predecessors(rdd, c)
     rdd.zipPartitions(boundary) { (it, bit) =>
       // ring of the last c (id, pos) rows and the c-1 adjacent LCPs
@@ -1710,7 +1639,7 @@ object SpanIndex {
       var lh = 0 // slot of the oldest LCP
       var prevKey: Seq[Long] = null
       def push(r: Row, emit: Boolean): Iterator[Row] = {
-        val k = r.getSeq[Long](keyIdx)
+        val k = r.getSeq[Long](2)
         if (prevKey != null) {
           val l = lcp(prevKey, k)
           if (nl == c - 1) { lcs(lh) = l; lh = (lh + 1) % (c - 1) }

@@ -46,6 +46,33 @@ class ConnectedComponentsSpec extends SparkSpec {
     }
   }
 
+  test("exchange and broadcast round arms agree on every round") {
+    // the loop only takes the shared-exchange arm above
+    // BroadcastMinMaxEdges, which no gate-scale graph reaches: run both
+    // arms side by side on each round of a seeded random graph (the
+    // union-find oracle above covers the broadcast arm's labels)
+    val rnd = new scala.util.Random(7)
+    val edges = Seq.fill(300)((rnd.nextLong(250), rnd.nextLong(250)))
+      .filter { case (a, b) => a != b }.distinct
+    var cur = edges.toSet
+    var rounds = 0
+    var fixed = false
+    while (!fixed) {
+      val e = cur.toSeq.toDF("u", "v")
+      val viaExchange = ConnectedComponents.roundFor(e, broadcastMin = false)
+        .as[(Long, Long)].collect().toSet
+      val viaBroadcast = ConnectedComponents.roundFor(e, broadcastMin = true)
+        .as[(Long, Long)].collect().toSet
+      rounds += 1
+      assert(viaExchange === viaBroadcast, s"arms diverge in round $rounds")
+      fixed = viaExchange == cur
+      cur = viaExchange
+      assert(rounds <= 25, "no fixed point within 25 rounds")
+    }
+    assert(rounds >= 3, s"graph converged in $rounds rounds — fixture " +
+      "no longer exercises multi-round contraction")
+  }
+
   test("checkpointEvery bounds lineage on a deep-chain graph") {
     val ckDir = java.nio.file.Files.createTempDirectory("graft-cc-ck").toString
     val hadDir = spark.sparkContext.getCheckpointDir

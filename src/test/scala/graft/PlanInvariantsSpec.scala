@@ -29,6 +29,37 @@ class PlanInvariantsSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
+  test("connected-components round arms keep their exchange counts") {
+    // the round loop runs eagerly inside the cluster gates' builders, so
+    // the sweep above never sees a round plan; pin both arms of
+    // ConnectedComponents.roundFor on the static plan (AQE and
+    // auto-broadcast off, so only the arm's own broadcast hints apply)
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ReusedExchangeExec, ShuffleExchangeExec}
+    val bcKey = "spark.sql.autoBroadcastJoinThreshold"
+    val bcWas = spark.conf.getOption(bcKey)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set(bcKey, "-1")
+    try {
+      val e = spark.range(1000).selectExpr("id + 1 AS u", "id div 3 AS v")
+      def exchanges(broadcastMin: Boolean): (Int, Int, Int) = {
+        val p = graft.operators.ConnectedComponents
+          .roundFor(e, broadcastMin).queryExecution.executedPlan
+        (p.collect { case _: ShuffleExchangeExec => 1 }.size,
+          p.collect { case _: BroadcastExchangeExec => 1 }.size,
+          p.collect { case _: ReusedExchangeExec => 1 }.size)
+      }
+      // (shuffle, broadcast, reused) exchanges
+      assert(exchanges(broadcastMin = false) === ((4, 0, 2)),
+        "shared-exchange arm")
+      assert(exchanges(broadcastMin = true) === ((3, 2, 2)),
+        "broadcast-min arm")
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      bcWas.fold(spark.conf.unset(bcKey))(spark.conf.set(bcKey, _))
+    }
+  }
+
   test("allowlist names only declared queries (no stale exemptions)") {
     val stale = PlanInvariants.allow.keySet -- SparkEntry.queries.keySet
     assert(stale.isEmpty, s"allowlist entries without a query: $stale")

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.functions.{Corpus, SpanIndex}
 
 /** Census sidecar: append == rebuild, stored round trips, bloom/bucket
-  * accelerators, staleness guards, and the r16 regroup-arm pin. Split
-  * from SpanIndexSpec (r17).
+  * accelerators, staleness guards, and the single-exchange regroup pin.
+  * Split from SpanIndexSpec (r17).
   */
 class SpanIndexCensusSpec extends SpanIndexFixtures {
   import spark.implicits._
@@ -341,34 +341,44 @@ class SpanIndexCensusSpec extends SpanIndexFixtures {
     }
   }
 
-  test("r16 regroup arms equal: single-exchange == two-exchange, build and append") {
-    // the r16 single-exchange pair regroup (regroupPairs) must compute
-    // EXACTLY the historical two-exchange chain, on the build AND on the
-    // append path (which also exercises the pass-through merge: docs the
-    // delta never touches must come out byte-identical to their stored
-    // rows); both arms must equal the rebuild over the union
-    def withArm[A](arm: Boolean)(body: => A): A = {
-      spark.conf.set("graft.regroupSingleExchange", arm.toString)
-      try body
-      finally spark.conf.unset("graft.regroupSingleExchange")
-    }
+  test("single-exchange regroup: append with pass-through rows == rebuild") {
+    // the append path's regroup merges scan pairs with the stored rows of
+    // touched docs while untouched docs pass through byte-identical;
+    // build and append must both equal the rebuild over the union
     def build(df: DataFrame) = SpanIndex.buildDuplicateSpanIndex(df,
       "doc_id", "text", floor = 3, cap = 6)
-    val bArms = Seq(true, false).map(a => withArm(a)(indexSet(build(corpus))))
-    assert(bArms(0) === bArms(1), "build arms diverge")
+    val full = indexSet(build(corpus))
     val old = corpus.filter($"doc_id" =!= 2L)
     val nw = corpus.filter($"doc_id" === 2L)
-    val aArms = Seq(true, false).map { a =>
-      withArm(a) {
-        val idx0 = build(old)
-        idx0.persist()
-        val r = indexSet(SpanIndex.appendToSpanIndex(idx0, old, nw,
-          "doc_id", "text", floor = 3, cap = 6, rebuildFraction = 1000.0))
-        idx0.unpersist()
-        r
-      }
-    }
-    assert(aArms(0) === aArms(1), "append arms diverge")
-    assert(aArms(0) === bArms(0), "append != rebuild over the union")
+    val idx0 = build(old)
+    idx0.persist()
+    val app = indexSet(SpanIndex.appendToSpanIndex(idx0, old, nw,
+      "doc_id", "text", floor = 3, cap = 6, rebuildFraction = 1000.0))
+    idx0.unpersist()
+    assert(app === full, "append != rebuild over the union")
+  }
+
+  test("regroupPairs == the two-exchange regroup on hand-built pairs") {
+    // reference: the historical max -> floor cut -> collect chain
+    def twoExchange(pairs: DataFrame, floor: Int): DataFrame = pairs
+      .groupBy($"doc_id", $"__p").agg(max($"__r").as("__r"))
+      .filter($"__r" >= floor)
+      .groupBy($"doc_id")
+      .agg(array_sort(collect_list(struct($"__p", $"__r"))).as("__pr"))
+      .select($"doc_id", transform($"__pr", x => x("__p")).as("positions"),
+        transform($"__pr", x => x("__r")).as("rlens"))
+    // unsorted input; repeated positions with different __r (the max must
+    // win, including a sub-floor repeat of an above-floor position);
+    // sub-floor rows beside kept ones; doc 3 is entirely sub-floor and
+    // must vanish; doc 4 is one row
+    val pairs = Seq(
+      (1L, 9, 3), (1L, 2, 5), (1L, 9, 7), (1L, 2, 1), (1L, 5, 2),
+      (1L, 2, 4), (2L, 4, 3), (2L, 1, 6), (2L, 4, 2), (2L, 7, 1),
+      (3L, 1, 2), (3L, 3, 1), (3L, 1, 1), (4L, 6, 3))
+      .toDF("doc_id", "__p", "__r").repartition(3)
+    val got = indexSet(SpanIndex.regroupPairs(pairs, "doc_id", 3))
+    assert(got === indexSet(twoExchange(pairs, 3)))
+    assert(got === Set((1L, Seq(2, 9), Seq(5, 7)), (2L, Seq(1, 4), Seq(6, 3)),
+      (4L, Seq(6), Seq(3))))
   }
 }
