@@ -87,7 +87,6 @@ object Bench {
       // minhash) are parallelism-starved at 4m, and at these row widths
       // the extra task overhead is noise.
       .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.codegen.wholeStage", sys.env.getOrElse("SPARK_GRAFT_CODEGEN", "true"))
       // Runtime bloom-filter join pruning (the Spark analog of the
       // reference's join location-detection idea): ADOPTED at stock
       // thresholds, pinned explicitly so a Spark default change can't

@@ -11,8 +11,35 @@ import java.nio.file.{Files, Paths}
   * arms [[graft.queries.FacadeQueries.eagerPlanCapture]] and RUNS the
   * query builder, so every pre-collect plan that executed inside the gate
   * is captured and written alongside the final frame's plan.
+  *
+  * The files are reproducible: [[stable]] masks every token that changes
+  * from run to run, so two runs on one tree write byte-identical files and
+  * a plan diff between two trees shows only plan changes.
   */
 object PlanDump {
+  /** Run-specific tokens of a formatted plan and their masks: expression
+    * ids, exchange plan ids, AQE codegen-stage ids, AQE query-stage ids
+    * (the `Arguments` of a `*QueryStage` node), AQE runtime statistics,
+    * lambda variable names, RDD ids with their call-site lines, temp-dir
+    * suffixes and parquet part names. Operator names and exchange nodes
+    * are left as they are.
+    */
+  private val runSpecific: Seq[(String, String)] = Seq(
+    "#\\d+" -> "#x",
+    "plan_id=\\d+" -> "plan_id=x",
+    "\\[codegen id : \\d+\\]" -> "[codegen id : x]",
+    "(\\(\\d+\\) \\w*QueryStage\n(?:[^\n]+\n)*?Arguments: )\\d+" -> "$1x",
+    "Statistics\\(sizeInBytes=[^)]*\\)" -> "Statistics(x)",
+    "\\bx_\\d+" -> "x_x",
+    "RDD\\[\\d+\\]" -> "RDD[x]",
+    "\\.scala:\\d+" -> ".scala:x",
+    "(/\\w+?_)\\d+(?=/)" -> "$1x",
+    "part-\\d+-[0-9a-f-]{36}([.-]c\\d+)?" -> "part-x")
+
+  /** `plan` with its run-specific tokens masked. */
+  private[graft] def stable(plan: String): String =
+    runSpecific.foldLeft(plan) { case (s, (re, mask)) => s.replaceAll(re, mask) }
+
   def main(args: Array[String]): Unit = {
     if (args.length < 4) {
       System.err.println(
@@ -53,7 +80,7 @@ object PlanDump {
           "\n== Final (post-collect) frame ==\n\n" + fin
       } catch { case e: Throwable => s"PLAN FAILED: ${e.getMessage}" }
       finally graft.queries.FacadeQueries.eagerPlanCapture.set(null)
-      Files.writeString(Paths.get(s"$outDir/${n}_$suffix.txt"), plan)
+      Files.writeString(Paths.get(s"$outDir/${n}_$suffix.txt"), stable(plan))
       println(s"[plandump] $n -> $outDir/${n}_$suffix.txt")
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))

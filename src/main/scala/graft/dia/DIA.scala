@@ -3,7 +3,7 @@ package graft.dia
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.immutable.ArraySeq
 import scala.reflect.ClassTag
 
 /** Typed facade over `Dataset[T]` giving a 1:1 named equivalent for every
@@ -60,18 +60,12 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
 
   /** Rebalance (thrill/api/rebalance.hpp:30-133): even partitions, keep
     * global order. The index space is dense and its size known, so the
-    * range split is computed arithmetically (DenseIndexPartitioner) —
-    * exactly even partitions, one shuffle, no sortBy sampling pass.
+    * one-input aligned scatter ([[alignedBlocks]]) computes the range split
+    * arithmetically — exactly even partitions, one shuffle, no sortBy
+    * sampling pass.
     */
-  def rebalance(numPartitions: Int): DIA[T] = {
-    val indexed = ds.rdd.zipWithIndex().map(_.swap)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val total = indexed.count()
-    val part = new DenseIndexPartitioner(numPartitions, math.max(total, 1L))
-    graft.operators.Release.afterNextAction(spark, indexed)
-    new DIA(spark.createDataset(
-      indexed.repartitionAndSortWithinPartitions(part).map(_._2)))
-  }
+  def rebalance(numPartitions: Int): DIA[T] =
+    alignedBlocks(Nil, Seq(1), None, numPartitions)(_(0)(0).asInstanceOf[T])
 
   // ===== Aggregations (SURVEY.md §2.3) ====================================
 
@@ -160,57 +154,26 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
   }
 
   /** Merge of sorted DIAs (thrill/api/merge.hpp:43-66) WITHOUT re-sorting —
-    * the reference's defining multi-sequence-selection property, realized
-    * Spark-natively: `partitionBy` over sampled range boundaries is a
-    * shuffle with NO sort step; each reducer receives a concatenation of
-    * sorted per-mapper runs, which [[graft.operators.RunMerge.mergeRuns]]
-    * restores to order by lazily k-way merging run heads — spilling
-    * completed runs to local disk past a row budget, as the reference
-    * buffers spillable per-worker Files (thrill/api/sort.hpp:672-694).
-    * Heap stays O(budget) however skewed a partition; correct under any
-    * shuffle block interleaving (see RunMerge's scaladoc).
+    * the reference's defining multi-sequence-selection property. The
+    * binary form of the k-ary [[merge]].
     */
-  def merge[K: Ordering: ClassTag](other: DIA[T])(key: T => K): DIA[T] = {
-    val ord = implicitly[Ordering[K]]
-    val pairOrd: Ordering[(K, T)] = Ordering.by[(K, T), K](_._1)(ord)
-    val a = ds.rdd.map(t => (key(t), t))
-    val b = other.ds.rdd.map(t => (key(t), t))
-    val parts = math.max(a.getNumPartitions, b.getNumPartitions)
-    val part = new org.apache.spark.RangePartitioner(parts, a.union(b))
-    def restore(it: Iterator[(K, T)]): Iterator[(K, T)] =
-      graft.operators.RunMerge.mergeRuns(it, pairOrd)
-    val pa = a.partitionBy(part).mapPartitions(restore, preservesPartitioning = true)
-    val pb = b.partitionBy(part).mapPartitions(restore, preservesPartitioning = true)
-    val merged = pa.zipPartitions(pb) { (ia, ib) =>
-      graft.operators.RunMerge.kWayMerge(Seq(ia, ib), pairOrd).map(_._2)
-    }
-    new DIA(spark.createDataset(merged))
-  }
+  def merge[K: Ordering: ClassTag](other: DIA[T])(key: T => K): DIA[T] =
+    merge(Seq(other))(key)
 
   /** k-ary Merge — the reference's `Merge(less, dia0, dias...)` is variadic
-    * (thrill/api/merge.hpp:674); this generalizes the binary overload to
-    * any number of sorted inputs with the same single-shuffle, no-re-sort
-    * plan: ONE RangePartitioner sampled over the union scatters every
-    * input (shuffle without a sort step), [[graft.operators.RunMerge
-    * .mergeRuns]] restores each input's per-reducer run concatenation, and
-    * the k restored streams fold into a lazy chain of two-way head merges —
-    * each link an O(1)-memory iterator, ≤ k−1 comparisons per emitted row.
+    * (thrill/api/merge.hpp:674). Every input is keyed by `key` and merged
+    * by [[graft.operators.RunMerge.mergeSorted]]: one range scatter without
+    * a sort step, a spill-safe run merge per reducer (heap O(budget)
+    * however skewed a partition, as the reference buffers spillable
+    * per-worker Files, thrill/api/sort.hpp:672-694), and a lazy fold of
+    * two-way head merges across inputs.
     */
   def merge[K: Ordering: ClassTag](others: Seq[DIA[T]])(key: T => K): DIA[T] = {
     require(others.nonEmpty, "k-ary merge needs at least two inputs")
-    val ord = implicitly[Ordering[K]]
-    val pairOrd: Ordering[(K, T)] = Ordering.by[(K, T), K](_._1)(ord)
     val keyed = (this +: others).map(_.ds.rdd.map(t => (key(t), t)))
-    val parts = keyed.map(_.getNumPartitions).max
-    val part = new org.apache.spark.RangePartitioner(parts, keyed.reduce(_ union _))
-    val streams = keyed.map(_.partitionBy(part).mapPartitions(
-      it => graft.operators.RunMerge.mergeRuns(it, pairOrd),
-      preservesPartitioning = true))
-    val merged = streams.reduce((ra, rb) =>
-      ra.zipPartitions(rb) { (ia, ib) =>
-        graft.operators.RunMerge.kWayMerge(Seq(ia, ib), pairOrd)
-      })
-    new DIA(spark.createDataset(merged.map(_._2)(ct)))
+    val merged = graft.operators.RunMerge
+      .mergeSorted(keyed, keyed.map(_.getNumPartitions).max)
+    new DIA(spark.createDataset(merged.map(_._2)))
   }
 
   // ===== Positional ops (SURVEY.md §2.6) ==================================
@@ -222,70 +185,30 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
         implicitly[Encoder[U]].clsTag)))
 
   /** Zip by global index (thrill/api/zip.hpp:77-724). CutTag semantics:
-    * truncates to the shorter input.
-    *
-    * One shuffle per side: both indexed RDDs are partitioned by the SAME
-    * dense-range partitioner (mirroring the reference's scatter of aligned
-    * index ranges, zip.hpp:259-291) and sorted within partitions, so
-    * partition i of each side holds exactly the same index interval and the
-    * result is a partition-local 1:1 iterator zip — no join, no global
-    * re-sort. The indexed inputs are persisted (the length count and the
-    * shuffle both read them); blocks are reclaimed by Spark's
-    * ContextCleaner when the result's lineage goes unreachable, as in
-    * zipWindow.
+    * truncates to the shorter input. One shuffle per side through the
+    * aligned-scatter kernel ([[alignedBlocks]]): partition i of each side
+    * holds exactly the same index interval and the result is a
+    * partition-local 1:1 iterator zip — no join, no global re-sort. The
+    * indexed inputs are persisted (the length count and the shuffle both
+    * read them) and released by `Release.afterNextAction` once the
+    * consuming action ends.
     */
-  def zip[U, R: Encoder](other: DIA[U])(f: (T, U) => R): DIA[R] = {
-    implicit val uct: ClassTag[U] = other.enc.clsTag
-    implicit val rct: ClassTag[R] = implicitly[Encoder[R]].clsTag
-    val a = ds.rdd.zipWithIndex().map(_.swap)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val b = other.ds.rdd.zipWithIndex().map(_.swap)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val len = math.min(a.count(), b.count())
-    val parts = math.max(a.getNumPartitions, b.getNumPartitions)
-    val part = new DenseIndexPartitioner(parts, math.max(len, 1L))
-    val pa = a.filter(_._1 < len).repartitionAndSortWithinPartitions(part)
-    val pb = b.filter(_._1 < len).repartitionAndSortWithinPartitions(part)
-    val joined = pa.zipPartitions(pb) { (ia, ib) =>
-      ia.zip(ib).map { case ((_, t), (_, u)) => f(t, u) }
+  def zip[U, R: Encoder](other: DIA[U])(f: (T, U) => R): DIA[R] =
+    alignedBlocks(Seq(other), Seq(1, 1), None) { b =>
+      f(b(0)(0).asInstanceOf[T], b(1)(0).asInstanceOf[U])
     }
-    graft.operators.Release.afterNextAction(spark, a, b)
-    new DIA(spark.createDataset(joined)(implicitly[Encoder[R]]))
-  }
 
   /** Zip with PadTag semantics (thrill/api/zip.hpp:293-335): the result has
     * the length of the LONGER input; the exhausted side is padded with the
-    * given value. Same single-shuffle-per-side dense-range plan as [[zip]] —
-    * within a partition both sides cover the same index interval from its
-    * start, so the shorter side is a prefix and padding is the iterator
-    * remainder.
+    * given value. Same single-shuffle-per-side plan as [[zip]] — within a
+    * partition both sides cover the same index interval from its start, so
+    * the shorter side is a prefix and padding is the iterator remainder.
     */
   def zipPad[U, R: Encoder](other: DIA[U], padThis: T, padOther: U)(
-      f: (T, U) => R): DIA[R] = {
-    implicit val uct: ClassTag[U] = other.enc.clsTag
-    implicit val rct: ClassTag[R] = implicitly[Encoder[R]].clsTag
-    val a = ds.rdd.zipWithIndex().map(_.swap)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val b = other.ds.rdd.zipWithIndex().map(_.swap)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val len = math.max(a.count(), b.count())
-    val parts = math.max(a.getNumPartitions, b.getNumPartitions)
-    val part = new DenseIndexPartitioner(parts, math.max(len, 1L))
-    val pa = a.repartitionAndSortWithinPartitions(part)
-    val pb = b.repartitionAndSortWithinPartitions(part)
-    val joined = pa.zipPartitions(pb) { (ia, ib) =>
-      val xa = ia.map(_._2)
-      val xb = ib.map(_._2)
-      new Iterator[R] {
-        def hasNext: Boolean = xa.hasNext || xb.hasNext
-        def next(): R = f(
-          if (xa.hasNext) xa.next() else padThis,
-          if (xb.hasNext) xb.next() else padOther)
-      }
+      f: (T, U) => R): DIA[R] =
+    alignedBlocks(Seq(other), Seq(1, 1), Some(Seq(padThis, padOther))) { b =>
+      f(b(0)(0).asInstanceOf[T], b(1)(0).asInstanceOf[U])
     }
-    graft.operators.Release.afterNextAction(spark, a, b)
-    new DIA(spark.createDataset(joined)(implicitly[Encoder[R]]))
-  }
 
   /** Zip with NoRebalanceTag (thrill/api/zip.hpp:142-156): ZERO-shuffle
     * worker-local zip. Precondition, exactly as the reference documents
@@ -316,113 +239,37 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
   /** Heterogeneous 3-ary Zip — the reference's variadic zip takes
     * differently-typed DIAs (thrill/api/zip.hpp template parameter pack);
     * [[zipAll]] covers homogeneous k, this covers the mixed-type arity-3
-    * case directly (higher mixed arities nest). Same
-    * one-shuffle-per-input dense-range plan as [[zip]]: all three sides
-    * are partitioned by the shared index partitioner and zipped
-    * partition-locally in one 3-way zipPartitions.
+    * case directly (higher mixed arities nest). Same one-shuffle-per-input
+    * plan as [[zip]].
     */
-  def zip3[U, V, R: Encoder](db: DIA[U], dc: DIA[V])(f: (T, U, V) => R): DIA[R] = {
-    implicit val uct: ClassTag[U] = db.enc.clsTag
-    implicit val vct: ClassTag[V] = dc.enc.clsTag
-    implicit val rct: ClassTag[R] = implicitly[Encoder[R]].clsTag
-    val a = ds.rdd.zipWithIndex().map(_.swap)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val b = db.ds.rdd.zipWithIndex().map(_.swap)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val c = dc.ds.rdd.zipWithIndex().map(_.swap)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val len = math.min(a.count(), math.min(b.count(), c.count()))
-    val parts = math.max(a.getNumPartitions,
-      math.max(b.getNumPartitions, c.getNumPartitions))
-    val part = new DenseIndexPartitioner(parts, math.max(len, 1L))
-    val pa = a.filter(_._1 < len).repartitionAndSortWithinPartitions(part)
-    val pb = b.filter(_._1 < len).repartitionAndSortWithinPartitions(part)
-    val pc = c.filter(_._1 < len).repartitionAndSortWithinPartitions(part)
-    val joined = pa.zipPartitions(pb, pc) { (ia, ib, ic) =>
-      ia.zip(ib).zip(ic).map { case (((_, t), (_, u)), (_, v)) => f(t, u, v) }
+  def zip3[U, V, R: Encoder](db: DIA[U], dc: DIA[V])(f: (T, U, V) => R): DIA[R] =
+    alignedBlocks(Seq(db, dc), Seq(1, 1, 1), None) { b =>
+      f(b(0)(0).asInstanceOf[T], b(1)(0).asInstanceOf[U], b(2)(0).asInstanceOf[V])
     }
-    graft.operators.Release.afterNextAction(spark, a, b, c)
-    new DIA(spark.createDataset(joined)(implicitly[Encoder[R]]))
-  }
 
   /** k-ary Zip (thrill/api/zip.hpp takes `dias...`), homogeneous element
-    * type, CutTag semantics. One shuffle per input: every indexed input is
-    * partitioned by the same dense-range partitioner, then the k aligned
-    * iterators are zipped partition-locally (pairwise `zipPartitions`
-    * folds, no joins).
+    * type, CutTag semantics. One shuffle per input, then the k aligned
+    * iterators are zipped partition-locally (no joins).
     */
-  def zipAll[R: Encoder](others: Seq[DIA[T]])(f: Seq[T] => R): DIA[R] = {
-    implicit val rct: ClassTag[R] = implicitly[Encoder[R]].clsTag
-    val all = (this +: others).map(d => d.ds.rdd.zipWithIndex().map(_.swap)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val len = all.map(_.count()).min
-    val parts = all.map(_.getNumPartitions).max
-    val part = new DenseIndexPartitioner(parts, math.max(len, 1L))
-    val partitioned = all.map(
-      _.filter(_._1 < len).repartitionAndSortWithinPartitions(part))
-    val init = partitioned.head
-      .mapPartitions(_.map(p => Vector(p._2)), preservesPartitioning = true)
-    val combined = partitioned.tail.foldLeft(init) { (acc, r) =>
-      acc.zipPartitions(r) { (ia, ib) =>
-        ia.zip(ib).map { case (v, (_, t)) => v :+ t }
-      }
+  def zipAll[R: Encoder](others: Seq[DIA[T]])(f: Seq[T] => R): DIA[R] =
+    alignedBlocks(others, Seq.fill(others.length + 1)(1), None) { b =>
+      f(DIA.elems[T](b.map(_(0))))
     }
-    graft.operators.Release.afterNextAction(spark, all: _*)
-    new DIA(spark.createDataset(combined.map(f(_))))
-  }
 
-  /** k-ary ZipWindow (thrill/api/zip_window.hpp takes `dias...`),
-    * homogeneous element type: block j is (sizes(i)) consecutive elements
-    * of input i; only full blocks of every input participate (CutTag).
-    * Same one-shuffle-per-input streaming-block plan as [[zipWindow]].
+  /** ZipWindow (thrill/api/zip_window.hpp:175-865): zip two DIAs in blocks
+    * of (wThis, wOther) elements — block j of each input feeds one fn call.
+    * CutTag semantics: stops at the shorter *full*-block sequence. One
+    * shuffle per side: rows keep their global index as key, every row of
+    * block j lands in the partition of block j, and the within-partition
+    * index sort delivers each block contiguously and offset-ordered, so
+    * blocks assemble streaming. The shuffle payload is (index, element),
+    * never a materialized block.
     */
-  def zipWindowAll[R: Encoder](others: Seq[DIA[T]], sizes: Seq[Int])(
-      f: Seq[Seq[T]] => R): DIA[R] = {
-    val all = this +: others
-    require(sizes.length == all.length,
-      s"zipWindowAll: ${all.length} inputs but ${sizes.length} window sizes")
-    require(sizes.forall(_ >= 1), "window sizes must be >= 1")
-    implicit val rct: ClassTag[R] = implicitly[Encoder[R]].clsTag
-    val keyed = all.zip(sizes).map { case (d, w) =>
-      d.ds.rdd.zipWithIndex()
-        .map { case (t, i) => ((i / w, (i % w).toInt), t) }
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def zipWindow[U, R: Encoder](other: DIA[U], wThis: Int, wOther: Int)(
+      f: (Seq[T], Seq[U]) => R): DIA[R] =
+    alignedBlocks(Seq(other), Seq(wThis, wOther), None) { b =>
+      f(DIA.elems[T](b(0)), DIA.elems[U](b(1)))
     }
-    val len = keyed.zip(sizes).map { case (r, w) => r.count() / w }.min
-    val parts = keyed.map(_.getNumPartitions).max
-    val part = new BlockKeyPartitioner(parts, math.max(len, 1L))
-    val partitioned = keyed.map(
-      _.filter(_._1._1 < len).repartitionAndSortWithinPartitions(part))
-    // fold the k aligned block streams; each step appends one input's block
-    val wHead = sizes.head
-    val init = partitioned.head.mapPartitions({ it =>
-      new Iterator[Vector[Seq[T]]] {
-        def hasNext: Boolean = it.hasNext
-        def next(): Vector[Seq[T]] = {
-          val s = new ArrayBuffer[T](wHead)
-          var j = 0
-          while (j < wHead) { s += it.next()._2; j += 1 }
-          Vector(s.toSeq)
-        }
-      }
-    }, preservesPartitioning = true)
-    val combined = partitioned.tail.zip(sizes.tail).foldLeft(init) {
-      case (acc, (r, w)) =>
-        acc.zipPartitions(r) { (ia, ib) =>
-          new Iterator[Vector[Seq[T]]] {
-            def hasNext: Boolean = ia.hasNext
-            def next(): Vector[Seq[T]] = {
-              val s = new ArrayBuffer[T](w)
-              var j = 0
-              while (j < w) { s += ib.next()._2; j += 1 }
-              ia.next() :+ s.toSeq
-            }
-          }
-        }
-    }
-    graft.operators.Release.afterNextAction(spark, keyed: _*)
-    new DIA(spark.createDataset(combined.map(f(_))))
-  }
 
   /** Heterogeneous 3-ary ZipWindow — the reference's variadic zip_window
     * takes differently-typed DIAs (thrill/api/zip_window.hpp template
@@ -430,163 +277,126 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
     * the mixed-type arity-3 case directly (higher mixed arities nest).
     * Block j is `w` consecutive elements of each input at that input's own
     * window size; only full blocks of every input participate (CutTag).
-    * Same one-shuffle-per-input streaming-block plan as [[zipWindow]]: each
-    * input keyed by (block, offset), co-partitioned by the shared block
-    * partitioner, blocks assembled in one 3-way zipPartitions.
+    * Same one-shuffle-per-input plan as [[zipWindow]].
     */
   def zipWindow3[U, V, R: Encoder](db: DIA[U], dc: DIA[V],
       wThis: Int, wB: Int, wC: Int)(
-      f: (Seq[T], Seq[U], Seq[V]) => R): DIA[R] = {
-    require(wThis >= 1 && wB >= 1 && wC >= 1, "window sizes must be >= 1")
-    implicit val uct: ClassTag[U] = db.enc.clsTag
-    implicit val vct: ClassTag[V] = dc.enc.clsTag
-    implicit val rct: ClassTag[R] = implicitly[Encoder[R]].clsTag
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val ka = ds.rdd.zipWithIndex()
-      .map { case (t, i) => ((i / wThis, (i % wThis).toInt), t) }.persist(lvl)
-    val kb = db.ds.rdd.zipWithIndex()
-      .map { case (t, i) => ((i / wB, (i % wB).toInt), t) }.persist(lvl)
-    val kc = dc.ds.rdd.zipWithIndex()
-      .map { case (t, i) => ((i / wC, (i % wC).toInt), t) }.persist(lvl)
-    val len = math.min(ka.count() / wThis,
-      math.min(kb.count() / wB, kc.count() / wC))
-    val parts = math.max(ka.getNumPartitions,
-      math.max(kb.getNumPartitions, kc.getNumPartitions))
-    val part = new BlockKeyPartitioner(parts, math.max(len, 1L))
-    val pa = ka.filter(_._1._1 < len).repartitionAndSortWithinPartitions(part)
-    val pb = kb.filter(_._1._1 < len).repartitionAndSortWithinPartitions(part)
-    val pc = kc.filter(_._1._1 < len).repartitionAndSortWithinPartitions(part)
-    val joined = pa.zipPartitions(pb, pc) { (ia, ib, ic) =>
-      new Iterator[R] {
-        def hasNext: Boolean = ia.hasNext
-        def next(): R = {
-          val sa = new ArrayBuffer[T](wThis)
-          var j = 0
-          while (j < wThis) { sa += ia.next()._2; j += 1 }
-          val sb = new ArrayBuffer[U](wB)
-          j = 0
-          while (j < wB) { sb += ib.next()._2; j += 1 }
-          val sc = new ArrayBuffer[V](wC)
-          j = 0
-          while (j < wC) { sc += ic.next()._2; j += 1 }
-          f(sa.toSeq, sb.toSeq, sc.toSeq)
-        }
+      f: (Seq[T], Seq[U], Seq[V]) => R): DIA[R] =
+    alignedBlocks(Seq(db, dc), Seq(wThis, wB, wC), None) { b =>
+      f(DIA.elems[T](b(0)), DIA.elems[U](b(1)), DIA.elems[V](b(2)))
+    }
+
+  /** k-ary ZipWindow (thrill/api/zip_window.hpp takes `dias...`),
+    * homogeneous element type: block j is (sizes(i)) consecutive elements
+    * of input i; only full blocks of every input participate (CutTag).
+    * Same one-shuffle-per-input plan as [[zipWindow]].
+    */
+  def zipWindowAll[R: Encoder](others: Seq[DIA[T]], sizes: Seq[Int])(
+      f: Seq[Seq[T]] => R): DIA[R] = {
+    require(sizes.length == others.length + 1,
+      s"zipWindowAll: ${others.length + 1} inputs but ${sizes.length} window sizes")
+    alignedBlocks(others, sizes, None) { b =>
+      f(ArraySeq.unsafeWrapArray(b).map(DIA.elems[T]))
+    }
+  }
+
+  /** The aligned-scatter kernel under every shuffling zip and [[rebalance]]:
+    * Zip with Cut or Pad (thrill/api/zip.hpp:77-724) and ZipWindow
+    * (zip_window.hpp:175-865) over this DIA followed by `others`. Block j
+    * is `windows(i)` consecutive elements of input i.
+    *
+    * Each input is keyed by its global index and persisted — the length
+    * count and the shuffle both read it; the caches are released after the
+    * consuming action. Each input then shuffles ONCE through a
+    * [[DenseIndexPartitioner]] over the common block range, sorted by index
+    * within partitions (the reference's scatter of aligned index ranges,
+    * zip.hpp:259-291): partition p of every input holds the same block
+    * interval, offset-ordered, and blocks assemble by streaming `w` rows
+    * per input. Cut mode (`pads` empty) keeps the blocks that are full in
+    * every input; pad mode runs to the last, possibly partial, block of
+    * the longest input and fills exhausted inputs with their pad value.
+    * `emit` sees one array per input per block, in global block order.
+    */
+  private def alignedBlocks[R: Encoder](others: Seq[DIA[_]], windows: Seq[Int],
+      pads: Option[Seq[Any]], numPartitions: Int = 0)(
+      emit: Array[Array[Any]] => R): DIA[R] = {
+    require(windows.forall(_ >= 1), "window sizes must be >= 1")
+    val keyed = (this +: others).map(_.ds.rdd.zipWithIndex()
+      .map { case (t, i) => (i, t: Any) }
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val blocks = keyed.zip(windows).map { case (r, w) =>
+      val n = r.count()
+      if (pads.isEmpty) n / w else (n + w - 1) / w
+    }
+    val len = if (pads.isEmpty) blocks.min else blocks.max
+    val parts =
+      if (numPartitions > 0) numPartitions else math.max(1, keyed.map(_.getNumPartitions).max)
+    val range = new DenseIndexPartitioner(parts, len)
+    val scattered = keyed.zip(windows).map { case (r, w) =>
+      r.filter(_._1 / w < len)
+        .repartitionAndSortWithinPartitions(new DenseIndexPartitioner(parts, len, w))
+    }
+    val k = keyed.length
+    val (w0, pad0) = (windows.head, pads.map(_.head))
+    val init = scattered.head.mapPartitionsWithIndex { (pid, it) =>
+      (0L until range.blocks(pid)).iterator.map { _ =>
+        val b = new Array[Array[Any]](k)
+        b(0) = DIA.block(it, w0, pad0)
+        b
       }
     }
-    graft.operators.Release.afterNextAction(spark, ka, kb, kc)
-    new DIA(spark.createDataset(joined)(implicitly[Encoder[R]]))
+    val aligned = scattered.indices.tail.foldLeft(init) { (acc, i) =>
+      val (w, pad) = (windows(i), pads.map(_(i)))
+      acc.zipPartitions(scattered(i)) { (ia, ib) =>
+        ia.map { b => b(i) = DIA.block(ib, w, pad); b }
+      }
+    }
+    graft.operators.Release.afterNextAction(spark, keyed: _*)
+    new DIA(spark.createDataset(aligned.map(emit)(implicitly[Encoder[R]].clsTag)))
   }
 
   /** PrefixSum (thrill/api/prefix_sum.hpp:28-171): two-pass — per-partition
-    * fold, driver ExPrefixSum of the ≤#partitions partials, re-scan.
+    * fold, an ExPrefixSum of the ≤#partitions partials, re-scan.
     */
-  def prefixSum(f: (T, T) => T): DIA[T] = {
-    val rdd = ds.rdd
-    // cached: the boundary/metadata pass and the output pass both read it;
-    // released by Release.afterNextAction once the consuming action ends
-    rdd.cache()
-    val partials: Array[(Int, Option[T])] = rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        Iterator((pid, it.reduceOption(f)))
-      }.collect().sortBy(_._1)
-    val offsets = new Array[Option[T]](partials.length)
-    var acc: Option[T] = None
-    for (p <- partials.indices) {
-      offsets(p) = acc
-      acc = (acc, partials(p)._2) match {
-        case (Some(a), Some(b)) => Some(f(a, b))
-        case (a, b) => b.orElse(a)
-      }
-    }
-    val bc = spark.sparkContext.broadcast(offsets)
-    val out = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var running = bc.value(pid)
-      it.map { t =>
-        val v = running match { case Some(r) => f(r, t); case None => t }
-        running = Some(v)
-        v
-      }
-    }
-    graft.operators.Release.afterNextAction(spark, rdd)
-    new DIA(spark.createDataset(out))
-  }
+  def prefixSum(f: (T, T) => T): DIA[T] = scan(None, inclusive = true)(f)
 
   /** ExPrefixSum (thrill/api/ex_prefix_sum.hpp:24-61): exclusive scan —
     * out(0) = initial, out(i) = f(out(i-1), x(i-1)). Same two-pass shape
     * as prefixSum.
     */
-  def exPrefixSum(initial: T)(f: (T, T) => T): DIA[T] = {
+  def exPrefixSum(initial: T)(f: (T, T) => T): DIA[T] =
+    scan(Some(initial), inclusive = false)(f)
+
+  /** The two passes under both prefix sums: one job folds each partition
+    * to a partial, the ≤#partitions partials fold (seeded with `initial`)
+    * into per-partition starting values, one broadcast ships them,
+    * and the output pass re-scans each partition from its start, emitting
+    * the running value after (inclusive) or before (exclusive) each row.
+    */
+  private def scan(initial: Option[T], inclusive: Boolean)(f: (T, T) => T): DIA[T] = {
     val rdd = ds.rdd
-    // cached: the boundary/metadata pass and the output pass both read it;
+    // cached: the partials pass and the output pass both read it;
     // released by Release.afterNextAction once the consuming action ends
     rdd.cache()
-    val partials: Array[(Int, Option[T])] = rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        Iterator((pid, it.reduceOption(f)))
-      }.collect().sortBy(_._1)
-    val offsets = new Array[T](partials.length)
-    var acc: T = initial
-    for (p <- partials.indices) {
-      offsets(p) = acc
-      partials(p)._2.foreach(s => acc = f(acc, s))
+    val partials = rdd
+      .mapPartitionsWithIndex((pid, it) => Iterator((pid, it.reduceOption(f))))
+      .collect().sortBy(_._1).map(_._2)
+    val offsets = partials.scanLeft(initial) {
+      case (Some(a), Some(b)) => Some(f(a, b))
+      case (a, b) => b.orElse(a)
     }
     val bc = spark.sparkContext.broadcast(offsets)
     val out = rdd.mapPartitionsWithIndex { (pid, it) =>
       var running = bc.value(pid)
       it.map { t =>
-        val v = running
-        running = f(running, t)
+        val next = running match { case Some(r) => f(r, t); case None => t }
+        val v = if (inclusive) next else running.get
+        running = Some(next)
         v
       }
     }
     graft.operators.Release.afterNextAction(spark, rdd)
     new DIA(spark.createDataset(out))
-  }
-
-  /** ZipWindow (thrill/api/zip_window.hpp:175-865): zip two DIAs in blocks
-    * of (wThis, wOther) elements — block j of each input feeds one fn call.
-    * CutTag semantics: stops at the shorter *full*-block sequence.
-    *
-    * One shuffle per side (the v1 groupByKey + join + sortByKey is gone):
-    * rows are keyed (blockId, withinBlockOffset) and shuffled once by the
-    * shared dense-range partitioner on blockId with a within-partition
-    * sort on the composite key, so each partition receives its blocks
-    * contiguously and offset-ordered — blocks are assembled streaming, and
-    * the two sides align 1:1 by construction. The shuffle payload is
-    * (key, element), never materialized Seq blocks.
-    */
-  def zipWindow[U, R: Encoder](other: DIA[U], wThis: Int, wOther: Int)(
-      f: (Seq[T], Seq[U]) => R): DIA[R] = {
-    require(wThis >= 1 && wOther >= 1, s"window sizes must be >= 1")
-    implicit val uct: ClassTag[U] = other.enc.clsTag
-    implicit val rct: ClassTag[R] = implicitly[Encoder[R]].clsTag
-    val a = ds.rdd.zipWithIndex()
-      .map { case (t, i) => ((i / wThis, (i % wThis).toInt), t) }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val b = other.ds.rdd.zipWithIndex()
-      .map { case (u, i) => ((i / wOther, (i % wOther).toInt), u) }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val len = math.min(a.count() / wThis, b.count() / wOther) // full blocks
-    val parts = math.max(a.getNumPartitions, b.getNumPartitions)
-    val part = new BlockKeyPartitioner(parts, math.max(len, 1L))
-    val pa = a.filter(_._1._1 < len).repartitionAndSortWithinPartitions(part)
-    val pb = b.filter(_._1._1 < len).repartitionAndSortWithinPartitions(part)
-    val joined = pa.zipPartitions(pb) { (ia, ib) =>
-      new Iterator[R] {
-        def hasNext: Boolean = ia.hasNext
-        def next(): R = {
-          val sa = new ArrayBuffer[T](wThis)
-          val sb = new ArrayBuffer[U](wOther)
-          var j = 0
-          while (j < wThis) { sa += ia.next()._2; j += 1 }
-          j = 0
-          while (j < wOther) { sb += ib.next()._2; j += 1 }
-          f(sa.toSeq, sb.toSeq)
-        }
-      }
-    }
-    graft.operators.Release.afterNextAction(spark, a, b)
-    new DIA(spark.createDataset(joined)(implicitly[Encoder[R]]))
   }
 
   /** Sliding Window (thrill/api/window.hpp:32-571): fn over every k
@@ -640,7 +450,7 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
         val a = new Array[Any](size)
         var i = 0
         while (i < size) { a(i) = buf((head + i) % k); i += 1 }
-        scala.collection.immutable.ArraySeq.unsafeWrapArray(a)
+        ArraySeq.unsafeWrapArray(a)
           .asInstanceOf[Seq[T]]
       }
       bit.foreach(push)
@@ -794,41 +604,42 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
   def writeBinary(path: String): Unit = ds.write.parquet(path)
 }
 
-/** Range partitioner for a DENSE Long index in [0, total): partition i
-  * covers an equal contiguous index interval. No sampling pass (unlike
+/** Range partitioner for `totalBlocks` blocks of `window` consecutive
+  * DENSE Long indices: index i belongs to block i / window, and partition p
+  * covers an equal contiguous block interval. No sampling pass (unlike
   * RangePartitioner) — the key space is known exactly, so the split is
   * computed arithmetically, mirroring the reference's equal-range scatter
   * plan (thrill/api/zip.hpp:259-291).
   */
-private[graft] class DenseIndexPartitioner(parts: Int, total: Long)
+private[graft] class DenseIndexPartitioner(parts: Int, totalBlocks: Long, window: Int = 1)
     extends org.apache.spark.Partitioner {
-  require(parts >= 1 && total >= 1)
-  private val per = math.max(1L, (total + parts - 1) / parts)
-  override def numPartitions: Int = parts
-  override def getPartition(key: Any): Int =
-    math.min(key.asInstanceOf[Long] / per, parts - 1L).toInt
-}
-
-/** Same dense-range split, keyed by (blockId, withinBlockOffset): rows of
-  * one block land in one partition, and the within-partition sort on the
-  * full composite key delivers them offset-ordered — blocks reassemble by
-  * streaming take-w, no grouping shuffle.
-  */
-private[graft] class BlockKeyPartitioner(parts: Int, totalBlocks: Long)
-    extends org.apache.spark.Partitioner {
-  require(parts >= 1 && totalBlocks >= 1)
+  require(parts >= 1 && totalBlocks >= 0 && window >= 1)
   private val per = math.max(1L, (totalBlocks + parts - 1) / parts)
   override def numPartitions: Int = parts
-  override def getPartition(key: Any): Int = {
-    val block = key.asInstanceOf[(Long, Int)]._1
-    math.min(block / per, parts - 1L).toInt
-  }
+  override def getPartition(key: Any): Int =
+    math.min(key.asInstanceOf[Long] / window / per, parts - 1L).toInt
+  /** Number of blocks partition `p` covers. */
+  def blocks(p: Int): Long = math.max(0L, math.min(per, totalBlocks - p * per))
 }
 
 /** Source factories (SURVEY.md §2.1). */
 object DIA {
 
   def apply[T: Encoder](ds: Dataset[T]): DIA[T] = new DIA(ds)
+
+  /** One aligned block as the user-facing Seq, without a copy. */
+  private def elems[T](block: Array[Any]): Seq[T] =
+    ArraySeq.unsafeWrapArray(block).asInstanceOf[Seq[T]]
+
+  /** The next `w` rows of one input's sorted partition stream; a present
+    * `pad` fills the rows past its end.
+    */
+  private def block(it: Iterator[(Long, Any)], w: Int, pad: Option[Any]): Array[Any] = {
+    val b = new Array[Any](w)
+    var j = 0
+    while (j < w) { b(j) = if (pad.isEmpty || it.hasNext) it.next()._2 else pad.get; j += 1 }
+    b
+  }
 
   /** ReducePair (thrill/api/reduce_by_key.hpp:368-463): ReduceByKey
     * specialization for DIA[(K,V)] reducing only the value.

@@ -208,13 +208,10 @@ object Positional {
 
   /** Merge WITHOUT re-sorting, exploiting that every input is already
     * globally sorted — the reference's defining Merge property
-    * (merge.hpp:43-66 multi-sequence selection). Plan: sample ONE set of
-    * range boundaries over the union, scatter each input with
-    * `partitionBy` (a shuffle with NO sort step); a reducer then holds,
-    * per input, a concatenation of sorted per-mapper runs, which
-    * [[RunMerge.mergeRuns]] restores to sorted order by lazily k-way
-    * merging run heads. The k per-input streams are then lazily two-way
-    * merged. No TimSort/ExternalSorter pass anywhere.
+    * (merge.hpp:43-66 multi-sequence selection), through
+    * [[RunMerge.mergeSorted]]: one range scatter with no sort step, then a
+    * lazy merge of each reducer's sorted runs. No TimSort/ExternalSorter
+    * pass anywhere.
     *
     * Memory: bounded at `budgetRows` (+ one chunk) rows per partition —
     * completed runs past the budget spill to local disk, mirroring the
@@ -227,23 +224,14 @@ object Positional {
       numPartitions: Int = 0,
       budgetRows: Int = RunMerge.DefaultBudgetRows): DataFrame = {
     require(inputs.nonEmpty, "mergeSortedNoResort of zero inputs")
-    val spark = inputs.head.sparkSession
     val schema = inputs.head.schema
-    val fieldIdx = sortCols.map(schema.fieldIndex)
-    val ord = new RowKeyOrdering(fieldIdx)
-    implicit val rowOrd: Ordering[Row] = ord
+    implicit val rowOrd: Ordering[Row] = new RowKeyOrdering(sortCols.map(schema.fieldIndex))
     val keyed = inputs.map(_.rdd.map(r => (r, ())))
     val parts =
       if (numPartitions > 0) numPartitions
       else math.max(1, keyed.map(_.getNumPartitions).max)
-    val partitioner =
-      new org.apache.spark.RangePartitioner(parts, keyed.reduce(_ union _))
-    val streams = keyed.map(_.partitionBy(partitioner)
-      .mapPartitions(it => RunMerge.mergeRuns(it.map(_._1), ord, budgetRows),
-        preservesPartitioning = true))
-    val merged = streams.reduce((ra, rb) =>
-      ra.zipPartitions(rb)((ia, ib) => RunMerge.kWayMerge(Seq(ia, ib), ord)))
-    spark.createDataFrame(merged, schema)
+    val merged = RunMerge.mergeSorted(keyed, parts, budgetRows).map(_._1)
+    inputs.head.sparkSession.createDataFrame(merged, schema)
   }
 
   /** Rebalance (thrill/api/rebalance.hpp:30-133): even out per-partition row

@@ -1,13 +1,13 @@
 package graft.operators
 
-import org.apache.spark.{SparkEnv, TaskContext}
+import org.apache.spark.{RangePartitioner, SparkEnv, TaskContext}
+import org.apache.spark.rdd.RDD
 
 import scala.collection.mutable.{ArrayBuffer, PriorityQueue}
 import scala.reflect.ClassTag
 
 /** Spill-safe streaming merge of the sorted runs inside one shuffle-read
-  * partition — the engine under `Positional.mergeSortedNoResort` and the
-  * typed `DIA.merge`.
+  * partition, and the no-re-sort merge of sorted inputs built on it.
   *
   * A `partitionBy` shuffle (no sort step) delivers each mapper's records
   * contiguously, so a reducer partition of a globally-sorted input is a
@@ -145,6 +145,25 @@ object RunMerge {
         spilled.iterator.map { case (off, n) => spill.read(off, n) }
 
     kWayMerge(runIters, ord)
+  }
+
+  /** Merge globally sorted keyed inputs WITHOUT re-sorting — the engine
+    * under `DIA.merge` and `Positional.mergeSortedNoResort`, realizing the
+    * reference's multi-sequence-selection Merge (thrill/api/merge.hpp:43-66).
+    * ONE RangePartitioner sampled over the union scatters every input with
+    * `partitionBy` (a shuffle with NO sort step), [[mergeRuns]] restores
+    * each input's per-reducer run concatenation, and the k restored streams
+    * fold into a lazy chain of two-way head merges — each link an
+    * O(1)-memory iterator, ≤ k−1 comparisons per emitted row; equal keys
+    * keep input order.
+    */
+  def mergeSorted[K: Ordering: ClassTag, V: ClassTag](inputs: Seq[RDD[(K, V)]],
+      numPartitions: Int, budgetRows: Int = DefaultBudgetRows): RDD[(K, V)] = {
+    val ord: Ordering[(K, V)] = Ordering.by[(K, V), K](_._1)
+    val part = new RangePartitioner(numPartitions, inputs.reduce(_ union _))
+    inputs.map(_.partitionBy(part)
+      .mapPartitions(mergeRuns(_, ord, budgetRows), preservesPartitioning = true))
+      .reduce((ra, rb) => ra.zipPartitions(rb)((ia, ib) => kWayMerge(Seq(ia, ib), ord)))
   }
 
   /** Lazy k-way merge of individually-sorted iterators; ties broken by

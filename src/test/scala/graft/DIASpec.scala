@@ -1,6 +1,7 @@
 package graft
 
 import graft.dia.DIA
+import org.apache.spark.sql.Encoder
 
 class DIASpec extends SparkSpec {
   import spark.implicits._
@@ -88,6 +89,53 @@ class DIASpec extends SparkSpec {
     val c = DIA.equalToDIA(spark, (0L until 9L).map(_ * 100))
     val got = a.zipAll(Seq(b, c))(_.sum).allGather()
     assert(got === (0L until 8L).map(i => i * 111))
+  }
+
+  test("zip family equals a Seq model on empty, sub-block and ragged inputs") {
+    // order-preserving input over exactly `p` slices (empty ones included)
+    def dia[X: Encoder](xs: Seq[X], p: Int): DIA[X] = new DIA(spark.createDataset(
+      spark.sparkContext.parallelize(xs, p)(implicitly[Encoder[X]].clsTag)))
+    // the block edges of window w: empty, one row, one short of a block,
+    // exactly one block, two blocks and a ragged row
+    def sizes(w: Int): Seq[Int] = Seq(0, 1, w - 1, w, 2 * w + 1)
+    def full[X](xs: Seq[X], w: Int): Seq[Seq[X]] = xs.grouped(w).filter(_.size == w).toSeq
+    def cut[X](cols: Seq[Seq[X]]): Seq[Seq[X]] =
+      (0 until cols.map(_.size).min).map(i => cols.map(_(i)))
+    val (wa, wb, wc) = (3, 2, 4)
+    def longs(w: Int, c: Int, base: Long) = (0 until sizes(w)(c)).map(base + _)
+    for (p <- Seq(1, 3, 7)) {
+      // binary: every ordered pair of edge sizes, so zipPad pads either side
+      for (i <- 0 until 5; j <- 0 until 5) {
+        val (ta, tb) = (longs(wa, i, 0L), longs(wb, j, 1000L))
+        val (a, b) = (dia(ta, p), dia(tb, p))
+        val ctx = s"p=$p sizes=${ta.size}/${tb.size}"
+        assert(a.zip(b)((x, y) => (x, y)).allGather() === ta.zip(tb), s"zip $ctx")
+        assert(a.zipPad(b, -1L, -2L)((x, y) => (x, y)).allGather() ===
+          ta.zipAll(tb, -1L, -2L), s"zipPad $ctx")
+        assert(a.zipWindow(b, wa, wb)((xs, ys) => (xs, ys)).allGather() ===
+          full(ta, wa).zip(full(tb, wb)), s"zipWindow $ctx")
+      }
+      // ternary: each input runs through every edge size once
+      for (i <- 0 until 5) {
+        val (ta, tb, tc) = (longs(wa, i, 0L), longs(wb, (i + 1) % 5, 1000L),
+          longs(wc, (i + 3) % 5, 2000L))
+        val (sb, dc) = (tb.map(_.toString), tc.map(_ * 0.5))
+        val (a, b, c) = (dia(ta, p), dia(tb, p), dia(tc, p))
+        val (hb, hc) = (dia(sb, p), dia(dc, p))
+        val ctx = s"p=$p sizes=${ta.size}/${tb.size}/${tc.size}"
+        assert(a.zipLocal(a.map(_ + 1))((x, y) => (x, y)).allGather() ===
+          ta.map(x => (x, x + 1)), s"zipLocal $ctx")
+        assert(a.zip3(hb, hc)((x, y, z) => (x, y, z)).allGather() ===
+          cut(Seq(ta, sb, dc)).map(r => (r(0), r(1), r(2))), s"zip3 $ctx")
+        assert(a.zipAll(Seq(b, c))(identity).allGather() === cut(Seq(ta, tb, tc)),
+          s"zipAll $ctx")
+        assert(a.zipWindow3(hb, hc, wa, wb, wc)((xs, ys, zs) => (xs, ys, zs)).allGather() ===
+          cut(Seq(full(ta, wa), full(sb, wb), full(dc, wc))).map(r => (r(0), r(1), r(2))),
+          s"zipWindow3 $ctx")
+        assert(a.zipWindowAll(Seq(b, c), Seq(wa, wb, wc))(identity).allGather() ===
+          cut(Seq(full(ta, wa), full(tb, wb), full(tc, wc))), s"zipWindowAll $ctx")
+      }
+    }
   }
 
   test("zipLocal zero-shuffle zip; rejects misaligned inputs") {

@@ -183,6 +183,12 @@ class InvarianceSpec extends SparkSpec {
     assert(shuffles(a.zipWindow(b, 5, 3)((xs, ys) => xs.sum + ys.sum)) === 2,
       "zipWindow: one per side")
     assert(shuffles(a.zipAll(Seq(b))(_.sum)) === 2, "zipAll: one per input")
+    val c = dia((1 to 200).toSeq, 5)
+    assert(shuffles(a.zip3(b, c)((x, y, z) => x + y + z)) === 3, "zip3: one per input")
+    assert(shuffles(a.zipWindow3(b, c, 5, 3, 2)((xs, ys, zs) => xs.sum + ys.sum + zs.sum)) === 3,
+      "zipWindow3: one per input")
+    assert(shuffles(a.zipWindowAll(Seq(b, c, a), Seq(5, 3, 2, 4))(_.map(_.sum).sum)) === 4,
+      "zipWindowAll: one per input")
     assert(shuffles(a.concat(b)) === 0, "concat: zero shuffles")
   }
 
