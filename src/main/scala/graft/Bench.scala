@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every declared query at the given SF and
   * prints one JSON line. Each query is fully materialized via a noop-format
   * write (count() would let Catalyst prune computed columns and understate
@@ -74,36 +72,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // test tables are single ~1-200 MB parquet files; the default 128 MB
-      // split would scan each on one core. 1m beats the previous 4m by 18%
-      // at sf0.1 and 33% on the document-heavy sf1 queries (A/B recorded in
-      // SCALE.md): the CPU-bound map stages (regex scrub, shingling,
-      // minhash) are parallelism-starved at 4m, and at these row widths
-      // the extra task overhead is noise.
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      // Runtime bloom-filter join pruning (the Spark analog of the
-      // reference's join location-detection idea): ADOPTED at stock
-      // thresholds, pinned explicitly so a Spark default change can't
-      // silently flip it. Stock means: inject only when the probe-side
-      // scan exceeds 10 GiB — never at bench SFs, exactly right at real
-      // scale. Forcing injection at sf1 scan sizes was A/B'd and REJECTED
-      // (q4_priority 1.16 -> 2.19 s median; SCALE.md round-8 entry).
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.parquet.filterPushdown", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // A/B plan experiments, e.g. "spark.sql.optimizer.runtime.bloomFilter.enabled=true"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';')
-      .filter(_.indexOf('=') > 0) // non-empty key (ADVICE r16)
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get()
     // Untimed warm-up: JVM/codegen/parquet-footer caches, same as any
     // long-running cluster where these costs amortize to zero.
     SparkEntry.queries.get("q1_agg").foreach(_(spark, sfDir).count())
@@ -199,16 +168,7 @@ object Bench {
       if (warm) {
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case _: Throwable => () } // the timed run reports the error
-        // same tolerated race as the timed path's cleanup below: the
-        // Release listener's async unpersist can beat this blocking one
-        // and the wait then throws "Block does not exist" — stale-state
-        // noise; unwrapped it killed the whole isolated-warm JVM
-        // (q_span_index_append, r14 sf1 column — both attempts)
-        spark.sparkContext.getPersistentRDDs.values.foreach { r =>
-          try r.unpersist(blocking = true)
-          catch { case _: org.apache.spark.SparkException => }
-        }
-        spark.catalog.clearCache()
+        GraftSession.reset(spark)
       }
       def timedOnce(): (Double, Boolean) = {
         val t0 = System.nanoTime()
@@ -219,23 +179,7 @@ object Bench {
             false
           }
         val elapsed = (System.nanoTime() - t0) / 1e9
-        // Untimed inter-query cleanup: facade operators persist() intermediate
-        // RDDs and rely on the ContextCleaner to reclaim them once the query's
-        // references drop; across 79 back-to-back queries the cleaner lags and
-        // stale blocks cause eviction/GC churn that bleeds 2-4x into later
-        // queries' times (measured: q_reduce_pair 3.4s in-suite vs 1.5s
-        // isolated). Each query is an independent workload to the driver, so
-        // start it with clean block-manager state.
-        // blocking: async removal would overlap the NEXT query's timed window.
-        // Tolerate the race with Release.afterNextAction's own (async)
-        // unpersist of the same RDDs: a block the listener already removed
-        // makes the blocking wait throw "Block does not exist" — stale-state
-        // noise, not a failure.
-        spark.sparkContext.getPersistentRDDs.values.foreach { r =>
-          try r.unpersist(blocking = true)
-          catch { case _: org.apache.spark.SparkException => }
-        }
-        spark.catalog.clearCache()
+        GraftSession.reset(spark) // untimed
         (elapsed, ok)
       }
       val (elapsed, ok) =

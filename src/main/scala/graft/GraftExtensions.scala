@@ -1,52 +1,50 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{GraftColumnShim, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 
-import graft.functions.RollingHash
+import graft.functions.{CosineSim, RollingHash, SimHash64Expr, Text, TokenCount}
 
-/** Session extensions exposing graft's custom Catalyst expressions to SQL.
-  * Activate with `--conf spark.sql.extensions=graft.GraftExtensions`, or
-  * call `GraftExtensions.register(spark)` on a live session.
+/** Session extensions exposing graft's SQL functions. Activate with
+  * `--conf spark.sql.extensions=graft.GraftExtensions`, or call
+  * `GraftExtensions.register(spark)` on a live session ([[GraftSession]]
+  * does). Both install exactly [[GraftExtensions.functions]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),
-      (exprs: Seq[Expression]) => RollingHash(exprs.head)))
-    e.injectFunction((
-      new FunctionIdentifier("token_count"),
-      new ExpressionInfo(classOf[graft.functions.TokenCount].getName, "token_count"),
-      (exprs: Seq[Expression]) => graft.functions.TokenCount(exprs.head)))
-    e.injectFunction((
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[graft.functions.CosineSim].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => graft.functions.CosineSim(exprs(0), exprs(1))))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, builder) =>
+      e.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), builder))
+    }
 }
 
 object GraftExtensions {
-  def register(spark: SparkSession): Unit = {
-    org.apache.spark.sql.GraftColumnShim.registerFunction(
-      spark, "rolling_hash", exprs => RollingHash(exprs.head))
-    // UDF-backed training-data functions, exposed to SQL users. (The pure
-    // Column combinators in graft.functions.Text need no registration —
-    // they compile to built-in expressions usable from SQL already.)
-    spark.udf.register("lang_id", graft.functions.Text.langIdF)
-    spark.udf.register("nfc_normalize", (s: String) =>
-      if (s == null) null
-      else java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFC))
-    spark.udf.register("simhash64",
-      (toks: Seq[String]) => // null in → null out, like built-ins
-        if (toks == null) null
-        else java.lang.Long.valueOf(graft.functions.Dedup.simHash64(toks)))
-    org.apache.spark.sql.GraftColumnShim.registerFunction(
-      spark, "cosine_sim",
-      exprs => graft.functions.CosineSim(exprs(0), exprs(1)))
-    org.apache.spark.sql.GraftColumnShim.registerFunction(
-      spark, "token_count",
-      exprs => graft.functions.TokenCount(exprs.head))
+  /** A Scala UDF as a Catalyst builder, named `name` in SQL output. */
+  private def viaUdf(name: String, f: UserDefinedFunction): Seq[Expression] => Expression = {
+    val named = f.withName(name)
+    exprs => GraftColumnShim.udfExpression(named, exprs)
   }
+
+  /** Every graft SQL function: name -> Catalyst builder. (The pure Column
+    * combinators in graft.functions.Text need no registration — they
+    * compile to built-in expressions usable from SQL already.)
+    */
+  private[graft] val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "rolling_hash" -> (exprs => RollingHash(exprs.head)),
+    "token_count" -> (exprs => TokenCount(exprs.head)),
+    "cosine_sim" -> (exprs => CosineSim(exprs(0), exprs(1))),
+    "simhash64" -> (exprs => SimHash64Expr(exprs.head)),
+    "lang_id" -> viaUdf("lang_id", Text.langIdUdf),
+    "nfc_normalize" -> viaUdf("nfc_normalize", Text.nfcUdf))
+
+  /** Installs the [[functions]] `spark` does not have yet; idempotent,
+    * like the extension class's injection, which it then finds in place.
+    */
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (name, builder) =>
+      if (!spark.catalog.functionExists(name))
+        GraftColumnShim.registerFunction(spark, name, builder)
+    }
 }

@@ -7,9 +7,11 @@ import org.apache.spark.sql.functions._
 /** Named A/B micro-benchmarks backing the measurements quoted in SCALE.md.
   * Each experiment times alternative plans for the same result on the
   * given SF dir (median of 3 runs after one warm-up, noop-write
-  * materialization like Bench). Keeping this a checked-in main makes every
+  * materialization like Bench). Keeping the arms checked in makes every
   * SCALE.md number reproducible: `SPARK_GRAFT_SF_DIR=... sbt "runMain
-  * graft.MicroBench topk"`.
+  * graft.Tool micro topk"`. The arms run on the bench's session (1m
+  * splits); numbers SCALE.md quotes at 4m splits reproduce with
+  * `SPARK_GRAFT_EXTRA_CONF=spark.sql.files.maxPartitionBytes=4m`.
   */
 object MicroBench {
 
@@ -25,26 +27,9 @@ object MicroBench {
     println(f"[microbench] $name%-28s ${ts(1)}%6.3f s  (min ${ts.head}%.3f max ${ts.last}%.3f)")
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // A/B plan experiments, same spelling as Bench (r16)
-    // key must be non-empty (ADVICE r16: '=v' passed the contains filter
-    // and failed session build with an unhelpful error)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';')
-      .filter(_.indexOf('=') > 0).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val which = args.headOption.getOrElse("all")
+  /** Runs arm `which` ("all" runs the arms marked so) on `sfDir`. */
+  def run(spark: SparkSession, sfDir: String, which: String): Unit = {
+    val cpus = spark.sparkContext.defaultParallelism
 
     if (which == "topk" || which == "all") {
       // grouped top-k: bounded-buffer aggregator vs window row_number.
@@ -184,7 +169,7 @@ object MicroBench {
       // re-execution, not a fresh full build invocation.
       val idxPath = "/tmp/graft_mb_spanindex"
       built
-        .repartition(cpus.toInt, col("doc_id"))
+        .repartition(cpus, col("doc_id"))
         .write.mode("overwrite").parquet(idxPath)
       val idx = spark.read.parquet(idxPath)
       for (l <- ls)
@@ -216,7 +201,7 @@ object MicroBench {
       val idx99Path = "/tmp/graft_mb_spanindex_99"
       graft.functions.SpanIndex.buildDuplicateSpanIndex(old99,
           "doc_id", "text", floor = 8, cap = 24)
-        .repartition(cpus.toInt, col("doc_id"))
+        .repartition(cpus, col("doc_id"))
         .write.mode("overwrite").parquet(idx99Path)
       val idx99 = spark.read.parquet(idx99Path)
       bench("spanindex: append 1% delta")(
@@ -239,7 +224,7 @@ object MicroBench {
       }
       val idxXPath = "/tmp/graft_mb_spanindex_x"
       builtX
-        .repartition(cpus.toInt, col("doc_id"))
+        .repartition(cpus, col("doc_id"))
         .write.mode("overwrite").parquet(idxXPath)
       val idxX = spark.read.parquet(idxXPath)
       for (l <- ls)
@@ -259,7 +244,7 @@ object MicroBench {
       val idxPath = "/tmp/graft_mb_spanindexq"
       graft.functions.SpanIndex.buildDuplicateSpanIndex(docs,
           "doc_id", "text", floor = 8, cap = 24)
-        .repartition(cpus.toInt, col("doc_id"))
+        .repartition(cpus, col("doc_id"))
         .write.mode("overwrite").parquet(idxPath)
       val idx = spark.read.parquet(idxPath)
       for (l <- Seq(8, 16)) {
@@ -321,7 +306,7 @@ object MicroBench {
         val p = s"/tmp/graft_mb_spanappend_$dpc"
         graft.functions.SpanIndex.buildDuplicateSpanIndex(old,
             "doc_id", "text", floor = 8, cap = 24)
-          .repartition(cpus.toInt, col("doc_id"))
+          .repartition(cpus, col("doc_id"))
           .write.mode("overwrite").parquet(p)
         val idx = spark.read.parquet(p)
         bench(s"spanappend: delta $dpc pct")(
@@ -360,7 +345,7 @@ object MicroBench {
           val (idx0, cen0) = graft.functions.SpanIndex
             .buildDuplicateSpanIndexWithCensus(old, "doc_id", "text",
               floor = 8, cap = 24)
-          idx0.repartition(cpus.toInt, col("doc_id"))
+          idx0.repartition(cpus, col("doc_id"))
             .write.mode("overwrite").parquet(s"$p/idx")
           graft.functions.SpanIndex.writeSpanCensus(cen0, s"$p/cen",
             buckets = sys.env.getOrElse("SPARK_GRAFT_CENSUS_BUCKETS", "")
@@ -427,7 +412,7 @@ object MicroBench {
         val (idx0, cen0) = graft.functions.SpanIndex
           .buildDuplicateSpanIndexWithCensus(oldBase, "doc_id", "text",
             floor = 8, cap = 24)
-        idx0.repartition(cpus.toInt, col("doc_id"))
+        idx0.repartition(cpus, col("doc_id"))
           .write.mode("overwrite").parquet(s"$p/idx")
         graft.functions.SpanIndex.writeSpanCensus(cen0, s"$p/cen")
         val idx0r = spark.read.parquet(s"$p/idx")
@@ -719,7 +704,7 @@ object MicroBench {
           explode(Text.shinglesOfTokens(col("__toks"), 4)).as("tok"))
       if (sys.env.contains("SPARK_GRAFT_JGATE_PLAN")) {
         exploded.groupBy(col("tok")).agg(count(lit(1)).as("f")).explain(true)
-        spark.stop(); sys.exit(0)
+        return
       }
       bench("jgate: exploded")(exploded)
       val freq = exploded.groupBy(col("tok")).agg(count(lit(1)).as("f"))
@@ -927,7 +912,5 @@ object MicroBench {
       bench("minhash: two-UDF pipeline")(
         Dedup.minhashBandsUdf(docs, "doc_id", "text", 96, 24))
     }
-
-    spark.stop()
   }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.internal.SQLConf
 /** Suite-wide physical-plan DENYLIST — the structural scale-killers no
   * gate query may plan, asserted over every `SparkEntry.queries` entry by
   * PlanInvariantsSpec (and runnable standalone at any SF via
-  * `runMain graft.Explain check`):
+  * `runMain graft.Tool check`):
   *
   *  - `cartesian`: CartesianProductExec — an unkeyed all-pairs join is
   *    quadratic at any scale.

@@ -1,10 +1,10 @@
 package graft.functions
 
 /** Committed BPE merges fixture: 40 merges learned from the sf0.01
-  * `documents` corpus by `graft.TrainBpe` (Sennrich-style training,
+  * `documents` corpus by `graft.Tool trainbpe` (Sennrich-style training,
   * [[Bpe.train]] — deterministic: most-frequent pair per round, ties
   * lexicographic). Regenerate with
-  * `sbt "runMain graft.TrainBpe /root/testdata/sf0.01 40"`; the q_bpe
+  * `sbt "runMain graft.Tool trainbpe <sf0.01 dir> 40"`; the q_bpe
   * DuckDB oracle inlines the SAME table as VALUES rows, so the gate proves
   * the Scala apply and an independent SQL re-application of the merges
   * agree token-for-token.

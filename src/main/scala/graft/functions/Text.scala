@@ -141,7 +141,7 @@ object Text {
       else best.toSeq.sortBy { case (lang, hits) => (-hits, lang) }.head._1
     }
   }
-  private val langIdUdf = udf(langIdF)
+  private[graft] val langIdUdf = udf(langIdF)
 
   def langId(c: Column): Column = langIdUdf(c)
 
@@ -189,7 +189,7 @@ object Text {
     * Pure map stage (null-safe UDF); at 100 TB this rides the scan like
     * the PII scrub.
     */
-  private val nfcUdf = udf((s: String) =>
+  private[graft] val nfcUdf = udf((s: String) =>
     if (s == null) null
     else java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFC))
 

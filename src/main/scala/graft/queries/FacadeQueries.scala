@@ -16,7 +16,7 @@ import graft.operators.Positional
   */
 object FacadeQueries {
 
-  /** When set (by [[graft.PlanDump]] only — never on driver paths),
+  /** When set (by `graft.Tool plans` only — never on Bench or Verify paths),
     * [[collectEager]] appends each frame's formatted plan here BEFORE
     * collecting. The r16 plan dumps for collectEager gates were vacuous
     * 8-line LocalTableScans (the post-collect plan); this hook captures

@@ -811,7 +811,7 @@ object TextQueries {
     }),
 
     // LEARNED-BPE tokenization (Sennrich 2016): apply the committed merges
-    // fixture (trained from this corpus by graft.TrainBpe) to the shared
+    // fixture (trained from this corpus by `graft.Tool trainbpe`) to the shared
     // regex pre-tokens. The oracle re-applies the SAME merges table in
     // DuckDB via a recursive CTE — per distinct word, repeatedly merge the
     // lowest-rank pair present until none remains (the canonical apply) —

@@ -11,6 +11,16 @@ object GraftColumnShim {
   def toColumn(e: Expression): Column = classic.ExpressionUtils.column(e)
   def toExpression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** A Scala UDF applied to Catalyst children: the ScalaUDF that
+    * `spark.udf.register` would build, for use in a function builder
+    * (`toExpression` of a UDF column is only resolved on the DataFrame
+    * path, not inside SQL analysis).
+    */
+  def udfExpression(udf: expressions.UserDefinedFunction,
+      children: Seq[Expression]): Expression =
+    classic.UserDefinedFunctionUtils.toScalaUDF(
+      udf.asInstanceOf[expressions.SparkUserDefinedFunction], children)
+
   /** Runtime registration of graft SQL functions on an existing session
     * (sessionState is private[sql] in Spark 4). For spark-submit users the
     * declarative path is `--conf spark.sql.extensions=graft.GraftExtensions`.

@@ -375,14 +375,12 @@ class FunctionsSpec extends SparkSpec {
         java.lang.Double.doubleToLongBits(h))
     }
     // and from SQL
-    graft.GraftExtensions.register(spark)
     df.createOrReplaceTempView("cos_t")
     val viaSql = spark.sql("SELECT cosine_sim(a, b) FROM cos_t").collect().map(_.getDouble(0))
     assert(viaSql.toSeq === both.map(_._1).toSeq)
   }
 
   test("cosine_sim rejects non-float arrays at analysis time") {
-    graft.GraftExtensions.register(spark)
     val err = intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql("SELECT cosine_sim(array(1.0D, 2.0D), array(3.0D, 4.0D))").collect()
     }
@@ -658,7 +656,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("lang_id and simhash64 are callable from SQL after registration") {
-    graft.GraftExtensions.register(spark)
     val lang = spark.sql("SELECT lang_id('the quick brown fox and the lazy dog') AS l")
       .head().getString(0)
     assert(lang === "en")
@@ -670,11 +667,26 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("rolling_hash is callable from SQL after registration") {
-    graft.GraftExtensions.register(spark)
     val got = spark.sql("SELECT rolling_hash('abc') AS h").head().getLong(0)
     var want = 0L
     "abc".getBytes("UTF-8").foreach(b => want = want * 31L + (b & 0xff))
     assert(got === want)
+  }
+
+  test("the suite session resolves every graft SQL function without a register call") {
+    val names = Seq("rolling_hash", "token_count", "cosine_sim", "lang_id",
+      "nfc_normalize", "simhash64")
+    assert(GraftExtensions.functions.map(_._1).sorted === names.sorted)
+    val decomposed = "e\u0301"
+    val r = spark.sql(s"""SELECT rolling_hash('abc'), token_count('a b c'),
+      cosine_sim(array(1.0F, 0.0F), array(1.0F, 0.0F)), lang_id('the quick brown fox and the lazy dog'),
+      nfc_normalize('$decomposed'), simhash64(array('a', 'b', 'c'))""").head()
+    assert(r.getLong(0) === ((97L * 31 + 98) * 31 + 99))
+    assert(r.getLong(1) === 3L)
+    assert(r.getDouble(2) === 1.0)
+    assert(r.getString(3) === "en")
+    assert(r.getString(4) === "\u00e9")
+    assert(r.getLong(5) === graft.functions.Dedup.simHash64(Seq("a", "b", "c")))
   }
 
   test("saltedJoin and saltedAgg equal their unsalted forms on skewed data") {

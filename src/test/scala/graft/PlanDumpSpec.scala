@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** PlanDump's masking of run-specific plan tokens: two runs of one gate
+/** `Tool plans`' masking of run-specific plan tokens: two runs of one gate
   * must write the same file, and masking must not hide a plan change.
   */
 class PlanDumpSpec extends AnyFunSuite {
@@ -25,13 +25,13 @@ class PlanDumpSpec extends AnyFunSuite {
     val a = run(2882, 5724, 9, 322, 319, "12377149384120479411", "a4b86fa4-9ee6-441b-a8fb-9e9fbb7163b1")
     val b = run(2879, 5813, 10, 131, 401, "8553117960461025241", "7eeebddb-2bfe-427c-b926-27f82158a1d1")
     assert(a !== b)
-    assert(PlanDump.stable(a) === PlanDump.stable(b))
-    val s = PlanDump.stable(a)
+    assert(Tool.stable(a) === Tool.stable(b))
+    val s = Tool.stable(a)
     Seq("ShuffleQueryStage (7)", "(5) HashAggregate", "hashpartitioning(doc_id#xL, 4)",
       "ENSURE_REQUIREMENTS", "(8) Project", "graft_spcen_x/cen/part-x.snappy.parquet",
       "... 3 entries").foreach(t => assert(s.contains(t), t))
     // a different operator or partition count still shows
-    assert(PlanDump.stable(a.replace("HashAggregate", "SortAggregate")) !== PlanDump.stable(b))
-    assert(PlanDump.stable(a.replace(", 4)", ", 8)")) !== PlanDump.stable(b))
+    assert(Tool.stable(a.replace("HashAggregate", "SortAggregate")) !== Tool.stable(b))
+    assert(Tool.stable(a.replace(", 4)", ", 8)")) !== Tool.stable(b))
   }
 }

@@ -8,7 +8,7 @@ package graft
   * this sweep catches the NEXT eager-broadcast-trap-shaped regression at
   * commit time instead of one bench column late (the round-8 trap was
   * found by a warm sf1 column). Same sweep standalone at any SF:
-  * `runMain graft.Explain check`.
+  * `runMain graft.Tool check`.
   */
 class PlanInvariantsSpec extends SparkSpec {
 

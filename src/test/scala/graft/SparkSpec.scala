@@ -3,26 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites. Deliberately multi-partition (local[4],
-  * 7 shuffle partitions) so order/boundary bugs in positional operators
-  * can't hide in a single-partition run — the Spark analog of the
-  * reference's multi-worker test matrix (api::RunLocalTests,
+/** Shared session for all suites: the bench's [[GraftSession]],
+  * deliberately multi-partition (local[4], 7 shuffle partitions) so
+  * order/boundary bugs in positional operators can't hide in a
+  * single-partition run — the Spark analog of the reference's
+  * multi-worker test matrix (api::RunLocalTests,
   * thrill/api/context.hpp:485-499).
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "7")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    // The suite runs >40k Spark stages; at INFO every one logs dozens of
-    // scheduler lines through sbt's output pipe — measured ~15% of suite
-    // wall (r17). Failures still surface: assertions carry their own
-    // messages and task errors log at ERROR.
-    s.sparkContext.setLogLevel("WARN")
+    val s = GraftSession.get(cpus = 4)
+    s.conf.set("spark.sql.shuffle.partitions", "7")
     s
   }
 }

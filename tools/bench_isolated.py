@@ -33,7 +33,6 @@ JAVA_CMD = ["java"]
 for p in ADDOPENS_PKGS:
     JAVA_CMD += ["--add-opens", f"{p}=ALL-UNNAMED"]
 JAVA_CMD += [
-    "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
     "-Xmx" + os.environ.get("SPARK_DRIVER_MEM", "8g"),
     "-cp", f"{REPO}/target/scala-2.13/classes:/opt/spark/jars/*",
     "graft.Bench",
