@@ -11,13 +11,14 @@ import org.apache.spark.sql.SparkSession
   * {{{
   * runMain graft.Tool plans <sfDir> <outDir> <suffix> <q1,q2,...>
   * runMain graft.Tool check [q ...]          (SPARK_GRAFT_SF_DIR)
-  * runMain graft.Tool micro <arm>            (SPARK_GRAFT_SF_DIR)
+  * runMain graft.Tool micro <arm>            (SPARK_GRAFT_SF_DIR; arms: MicroBench.arms)
   * runMain graft.Tool trainbpe <sfDir> [numMerges]
   * }}}
   */
 object Tool {
   private val usage = "usage: Tool plans <sfDir> <outDir> <suffix> <q1,q2,...>" +
-    " | check [q ...] | micro <arm> | trainbpe <sfDir> [numMerges]"
+    " | check [q ...] | micro <" + MicroBench.arms.keys.toSeq.sorted.mkString("|") +
+    "> | trainbpe <sfDir> [numMerges]"
 
   private def sfDir: String =
     sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -34,8 +35,8 @@ object Tool {
         }
         Some(plans(_, sf, outDir, suffix, qs))
       case "check" +: names => Some(check(_, names))
-      case Seq("micro", arm) =>
-        Some { spark => MicroBench.run(spark, sfDir, arm); 0 }
+      case Seq("micro", arm) if MicroBench.arms.contains(arm) =>
+        Some { spark => MicroBench.arms(arm)(spark, sfDir); 0 }
       case "trainbpe" +: sf +: rest if rest.size <= 1 =>
         Some(trainBpe(_, sf, rest.headOption.map(_.toInt).getOrElse(40)))
       case _ => None

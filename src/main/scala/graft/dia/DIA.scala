@@ -28,6 +28,10 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
   private implicit def ct: ClassTag[T] = enc.clsTag
   private def spark: SparkSession = ds.sparkSession
 
+  /** Runs an eager step of a DIA operator as jobs named `dia:<phase>`. */
+  private def named[A](phase: String)(body: => A): A =
+    graft.operators.Jobs.named(spark.sparkContext, s"dia:$phase")(body)
+
   // ===== LOps (thrill/api/dia.hpp:358-482) — narrow, fused by Catalyst ====
 
   def map[U: Encoder](f: T => U): DIA[U] = new DIA(ds.map(f))
@@ -114,9 +118,10 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
   }
 
   /** HyperLogLog action (thrill/api/hyperloglog.hpp:26-79) → Spark HLL++. */
-  def hyperloglog(rsd: Double = 0.05): Long =
+  def hyperloglog(rsd: Double = 0.05): Long = named("hyperloglog") {
     ds.toDF().select(approx_count_distinct(struct(ds.toDF().columns.map(col): _*), rsd))
       .head().getLong(0)
+  }
 
   // ===== Join (thrill/api/inner_join.hpp:61-827) ==========================
 
@@ -141,10 +146,12 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
     * per-partition external sort ≡ Spark's orderBy; opaque comparators go
     * through RDD sortBy on an extracted key.
     */
-  def sortBy[K: Ordering: ClassTag](key: T => K, numPartitions: Int = 0): DIA[T] = {
-    val n = if (numPartitions > 0) numPartitions else ds.rdd.getNumPartitions
-    new DIA(spark.createDataset(ds.rdd.sortBy(key, ascending = true, n)))
-  }
+  def sortBy[K: Ordering: ClassTag](key: T => K, numPartitions: Int = 0): DIA[T] =
+    // the range partitioner samples the input in a job of its own
+    named("sort_sample") {
+      val n = if (numPartitions > 0) numPartitions else ds.rdd.getNumPartitions
+      new DIA(spark.createDataset(ds.rdd.sortBy(key, ascending = true, n)))
+    }
 
   /** SortStable (thrill/api/sort.hpp:82-114): stability via index tiebreak. */
   def sortStableBy[K: Ordering: ClassTag](key: T => K): DIA[T] = {
@@ -181,7 +188,7 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
   /** ZipWithIndex (thrill/api/zip_with_index.hpp:38-179). */
   def zipWithIndex[U: Encoder](f: (T, Long) => U): DIA[U] =
     new DIA(spark.createDataset(
-      ds.rdd.zipWithIndex().map { case (t, i) => f(t, i) }(
+      named("zip_with_index_sizes")(ds.rdd.zipWithIndex()).map { case (t, i) => f(t, i) }(
         implicitly[Encoder[U]].clsTag)))
 
   /** Zip by global index (thrill/api/zip.hpp:77-724). CutTag semantics:
@@ -321,11 +328,13 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
       pads: Option[Seq[Any]], numPartitions: Int = 0)(
       emit: Array[Array[Any]] => R): DIA[R] = {
     require(windows.forall(_ >= 1), "window sizes must be >= 1")
-    val keyed = (this +: others).map(_.ds.rdd.zipWithIndex()
+    // RDD.zipWithIndex sizes the partitions of a multi-partition input
+    // in a job of its own
+    val keyed = (this +: others).map(d => named("align_sizes")(d.ds.rdd.zipWithIndex())
       .map { case (t, i) => (i, t: Any) }
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val blocks = keyed.zip(windows).map { case (r, w) =>
-      val n = r.count()
+      val n = named("align_count")(r.count())
       if (pads.isEmpty) n / w else (n + w - 1) / w
     }
     val len = if (pads.isEmpty) blocks.min else blocks.max
@@ -378,9 +387,9 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
     // cached: the partials pass and the output pass both read it;
     // released by Release.afterNextAction once the consuming action ends
     rdd.cache()
-    val partials = rdd
+    val partials = named("scan_partials")(rdd
       .mapPartitionsWithIndex((pid, it) => Iterator((pid, it.reduceOption(f))))
-      .collect().sortBy(_._1).map(_._2)
+      .collect()).sortBy(_._1).map(_._2)
     val offsets = partials.scanLeft(initial) {
       case (Some(a), Some(b)) => Some(f(a, b))
       case (a, b) => b.orElse(a)
@@ -429,7 +438,8 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
     // peer-to-peer predecessor rows (net.Predecessor topology): the driver
     // folds only per-partition COUNTS; the <=k-1 boundary rows per
     // partition move executor-to-executor through a keyed shuffle
-    val (starts, boundary) = graft.operators.BoundaryExchange.predecessors(rdd, k)
+    val (starts, boundary) =
+      named("window_counts")(graft.operators.BoundaryExchange.predecessors(rdd, k))
     val nParts = starts.length - 1
     val bcS = spark.sparkContext.broadcast(starts)
     implicit val uct: ClassTag[U] = implicitly[Encoder[U]].clsTag
@@ -525,9 +535,9 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
     // cached: the counts pass and the output pass both read it; released
     // by Release.afterNextAction after the consuming action
     rdd.cache()
-    val counts = rdd.mapPartitionsWithIndex { (pid, it) =>
+    val counts = named("sample_counts")(rdd.mapPartitionsWithIndex { (pid, it) =>
       Iterator((pid, it.size.toLong))
-    }.collect().sortBy(_._1).map(_._2)
+    }.collect()).sortBy(_._1).map(_._2)
     val total = counts.sum
     require(k <= total, s"sample($k) from $total elements")
     val alloc = graft.operators.Hypergeometric

@@ -177,7 +177,8 @@ object Corpus {
   }
 
   /** The pre-round-9 sort-based stratifiedSample — one window sort per
-    * stratum. Kept as the A/B counterpart (MicroBench `sample`) and for
+    * stratum. Kept as the reference CorpusSpec compares against (A/B:
+    * SCALE.md, "Round-9 sampling de-sort A/B") and for
     * callers whose id is not castable to long. Same output on the same
     * input when ids are integral and non-null (CorpusSpec pins equality,
     * including null order values and a null stratum); CAVEATS of the
@@ -865,7 +866,8 @@ object Corpus {
     * first cut ran [[graft.operators.Positional.prefixSumLong]] over the
     * frame CARRYING the token arrays: every row paid the Tungsten→
     * GenericRow→Tungsten round trip for its array, 4.4× slower than even
-    * a single-partition window cumsum at sf1 (MicroBench `pack`). Keeping
+    * a single-partition window cumsum at sf1 (SCALE.md, "Training-data
+    * ops", sequence packing). Keeping
     * the RDD leg scalar keeps the distributed-offset property AND the
     * columnar fast path.
     */

@@ -172,8 +172,9 @@ object Dedup {
 
   /** The pre-round-10 derivation of [[nearDupKeepCorpus]] THROUGH the pairs
     * operator (`verifiedNearDupPairs(...).select(id_b).distinct` anti-join)
-    * — kept as the readable reference and the A/B counterpart (`MicroBench
-    * megagroup`); its compute is quadratic per identical-text group, which
+    * — kept as the readable reference that specs compare against (the
+    * mega-group A/B is in SCALE.md, "Round-10: linear keep/cluster
+    * derivation"); its compute is quadratic per identical-text group, which
     * is the pairs operator's OUTPUT contract but not the keep form's.
     */
   private[graft] def nearDupKeepCorpusViaPairs(df: DataFrame, idCol: String,
@@ -463,8 +464,8 @@ object Dedup {
 
   /** The pre-fusion two-UDF pipeline (signature UDF, then banding UDF over
     * the materialized Seq[Long]) — reference implementation pinned equal
-    * to [[minhashBands]] by FunctionsSpec and A/B'd by `MicroBench
-    * minhash`; not used by the operators.
+    * to [[minhashBands]] by FunctionsSpec (its A/B is in SCALE.md,
+    * "Training-data ops"); not used by the operators.
     */
   private[graft] def minhashBandsUdf(df: DataFrame, idCol: String,
       textCol: String, numHashes: Int = 96, bands: Int = 24,
@@ -493,8 +494,8 @@ object Dedup {
     * out of the band table. Replaces the former
     * `count().over(Window.partitionBy(keys))` cap, which sort-shuffled the
     * ENTIRE (id, band, bucket) table (corpus × bands rows at 100 TB) just
-    * to compute group sizes. A/B: `MicroBench bucketcap`; the window form
-    * is kept below as the measured reference.
+    * to compute group sizes. A/B: SCALE.md, "Round-8 bucket-cap A/B"; the
+    * window form is kept below as the measured reference.
     *
     * The oversized-bucket set is tiny on any sane corpus (a bucket is
     * oversized only for degenerate content), but its size is bounded only
@@ -517,8 +518,8 @@ object Dedup {
   }
 
   /** The pre-r8 window-sort cap — pinned equal to [[dropOversizedBuckets]]
-    * by FunctionsSpec and A/B'd by `MicroBench bucketcap`; not used by the
-    * operators.
+    * by FunctionsSpec (A/B: SCALE.md, "Round-8 bucket-cap A/B"); not used
+    * by the operators.
     */
   private[graft] def dropOversizedBucketsWindow(bt: DataFrame, keys: Seq[String],
       maxBucketSize: Int): DataFrame = {
@@ -704,8 +705,8 @@ object Dedup {
     // exploding the alias lets InferFiltersFromGenerate's size()>0
     // predicate push below BOTH projections, inlining tokens() into every
     // element_at: the O(tokens²)-per-row scan again, measured 15 s for
-    // this explode alone at sf0.1 vs sub-second in this form (MicroBench
-    // jaccard_gate).
+    // this explode alone at sf0.1 vs sub-second in this form (SCALE.md,
+    // "Optimizer hazard found while profiling this operator").
     val exploded = df
       .select(col(idCol), Text.tokens(col(textCol)).as("__toks"))
       .select(col(idCol),

@@ -21,7 +21,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * consumed immediately. Fused, the signature lives in a scalar
   * `long[96]` inside whole-stage codegen and only the `bands` bucket
   * longs reach the row. Equality with the UDF pipeline is spec-pinned
-  * (FunctionsSpec); `MicroBench minhash` quantifies the win.
+  * (FunctionsSpec); SCALE.md ("Training-data ops", MinHash LSH) records
+  * the measured win.
   *
   * Null tokens are skipped (matching the UDF's Seq view of a non-null
   * array); a null token ARRAY yields null, like every UnaryExpression.

@@ -683,7 +683,8 @@ object SpanIndex {
     // candidate positions". Without this the delta's copy siblings made
     // the un-collapsed neighborhood as large as the whole collapsed
     // rebuild (measured 2× SLOWER than the rebuild at sf1 on the
-    // replica corpus — the round-12 MicroBench append arm); candidate
+    // replica corpus — SCALE.md, "Round-12: batched MASK sweep, and the
+    // append's collapse lesson"); candidate
     // selection above already used exact per-position counts on real
     // ids, so the collapse here touches only the sort + scan.
     // (id, md5) scalars read by the group aggregate and the member join
@@ -2148,9 +2149,11 @@ object SpanIndex {
     * thresholds are deduplicated and each is band-guarded exactly like
     * the single form.
     *
-    * Two measured dead ends shaped this (sf1, 4 thresholds, MicroBench
-    * spanindex): exploding thresholds AFTER joining the tokens
-    * replicates the token array K times through the pipeline — 1.2×
+    * Two measured dead ends shaped this (sf1, 4 thresholds, by the
+    * `spanindex` A/B arm last at commit 9bcf67c; SCALE.md "Round-12:
+    * batched MASK sweep" names the same dead end): exploding thresholds
+    * AFTER joining the tokens replicates the token array K times
+    * through the pipeline — 1.2×
     * SLOWER than K single queries on an array-work-dominated corpus;
     * and computing all K masks as one nested-HOF array expression
     * (transform over the threshold list) let CollapseProject inline the

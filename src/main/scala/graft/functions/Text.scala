@@ -25,7 +25,7 @@ object Text {
   /** Token count via the codegen'd [[TokenCount]] expression — same
     * semantics as `size(tokens(c))` (property-tested equal) without
     * materializing two arrays per row; the hottest scalar in the corpus
-    * gates (SCALE.md `MicroBench ntokens` A/B).
+    * gates (see [[TokenCount]] for its A/B).
     */
   def nTokens(c: Column): Column = TokenCount.token_count(c)
 

@@ -15,7 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * per row just to take its length. Token counting runs over every
   * document of a corpus (budgeting, quality signals, q_text_stats /
   * q_token_count / q_pipeline), so this is a hot-path expression by
-  * construction; the A/B is recorded in SCALE.md (`MicroBench ntokens`).
+  * construction. The A/B arm that timed it against the composed form was
+  * last at commit 9bcf67c; SCALE.md records no figure for it.
   *
   * Byte-level scan is UTF-8-safe because the delimiter is the ASCII space
   * and multi-byte sequences never contain 0x20.

@@ -64,8 +64,9 @@ object ConnectedComponents {
     * collision-safe enough to gate the single exact confirmation.
     */
   private def signature(e: DataFrame): (Long, Long) = {
-    val r = e.agg(count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("x")).head()
+    val r = Jobs.named(e.sparkSession.sparkContext, "cc:signature")(
+      e.agg(count(lit(1)).as("n"),
+        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("x")).head())
     (r.getLong(0), r.getLong(1))
   }
 
@@ -174,8 +175,10 @@ object ConnectedComponents {
     // RDD[Row] and re-wrapping with createDataFrame makes every round a
     // leaf scan (the DataFrame analog of the reference's per-stage DIA
     // materialization), and gives an explicit unpersist handle per round.
+    // with AQE on, `df.rdd` runs the plan's exchanges as jobs right here
     def materialize(df: DataFrame) = {
-      val rdd = df.rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      val rdd = Jobs.named(spark.sparkContext, "cc:materialize")(df.rdd)
+        .persist(StorageLevel.MEMORY_AND_DISK)
       (rdd, spark.createDataFrame(rdd, df.schema))
     }
     var (eRdd, e) = materialize(
@@ -200,12 +203,12 @@ object ConnectedComponents {
         // ends in smallStar's dedup), so ONE tagged-union symmetric-diff
         // job replaces the historical two-sided `except` pair (r17); it
         // runs only on the (normally unique) signature-match round.
-        converged = next
+        converged = Jobs.named(spark.sparkContext, "cc:confirm")(next
           .select(col("u"), col("v"), lit(1L).as("__t"))
           .unionByName(e.select(col("u"), col("v"), lit(-1L).as("__t")))
           .groupBy(col("u"), col("v")).agg(sum(col("__t")).as("__s"))
           .filter(col("__s") =!= 0L)
-          .isEmpty
+          .isEmpty)
       }
       eRdd.unpersist(blocking = false)
       eRdd = nRdd; e = next; sig = nsig; it += 1

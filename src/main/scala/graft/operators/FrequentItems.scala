@@ -57,7 +57,7 @@ object FrequentItems {
   // lives as a live object inside ObjectHashAggregate and is serialized
   // only at partial-output boundaries, so reduce() is one O(1) map update
   // per row instead of a persistent-structure copy — measured 2.0 -> 1.4 s
-  // on the sf1 trigram A/B (SCALE.md, MicroBench freq) vs the immutable
+  // on the sf1 trigram A/B (SCALE.md, "MG sketch buffer") vs the immutable
   // Map buffer this replaced.
   private final class MGAgg(capacity: Int)
       extends Aggregator[String, JMap, Map[String, Long]] {

@@ -160,7 +160,9 @@ object RunMerge {
   def mergeSorted[K: Ordering: ClassTag, V: ClassTag](inputs: Seq[RDD[(K, V)]],
       numPartitions: Int, budgetRows: Int = DefaultBudgetRows): RDD[(K, V)] = {
     val ord: Ordering[(K, V)] = Ordering.by[(K, V), K](_._1)
-    val part = new RangePartitioner(numPartitions, inputs.reduce(_ union _))
+    val all = inputs.reduce(_ union _)
+    val part = Jobs.named(all.sparkContext, "merge:range_sample")(
+      new RangePartitioner(numPartitions, all))
     inputs.map(_.partitionBy(part)
       .mapPartitions(mergeRuns(_, ord, budgetRows), preservesPartitioning = true))
       .reduce((ra, rb) => ra.zipPartitions(rb)((ia, ib) => kWayMerge(Seq(ia, ib), ord)))

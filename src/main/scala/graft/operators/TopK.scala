@@ -95,8 +95,8 @@ object TopK {
   // Buffer is the primitive-array heap behind the kryo encoder (live
   // object inside ObjectHashAggregate, serialized only at partial-output
   // boundaries). The sorted-List buffer of round 3 was O(k) per insert —
-  // 2.9 s vs the window's 0.6 s at k=1000 on 6M rows (MicroBench
-  // topk_bigk); round 4's tuple heap fixed the asymptotics, round 5's
+  // 2.9 s vs the window's 0.6 s at k=1000 on 6M rows (SCALE.md, "Grouped
+  // top-k buffer"); round 4's tuple heap fixed the asymptotics, round 5's
   // primitive arrays cut the remaining boxing constant.
   private final class TopKAgg(k: Int)
       extends Aggregator[Item, TopKHeap, Seq[Item]] {

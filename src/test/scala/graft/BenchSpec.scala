@@ -2,75 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench's spike-containment decisions (round 14) — pure functions,
-  * pinned so the suite's self-defense can't silently regress: a driver
-  * column charged ×13–22 one-shot sandbox stalls to queries two other
-  * same-code runs read at 1–1.5 s (VERDICT r13 #2).
+/** The bench's repeats-mode summary — a pure function, pinned so the
+  * time `SPARK_GRAFT_BENCH_REPEATS` reports per gate can't silently change.
   */
 class BenchSpec extends AnyFunSuite {
-
-  test("shouldRetry: factor threshold with a 1 s absolute floor") {
-    // no committed reference (new gate) — never retry
-    assert(!Bench.shouldRetry(100.0, None, 3.0))
-    // above 3x ref and above the floor — retry
-    assert(Bench.shouldRetry(6.1, Some(2.0), 3.0))
-    assert(!Bench.shouldRetry(5.9, Some(2.0), 3.0))
-    // sub-second gates jitter past any ratio without being spikes:
-    // 0.1 s ref, 0.9 s reading is 9x but under the floor — no retry
-    assert(!Bench.shouldRetry(0.9, Some(0.1), 3.0))
-    assert(Bench.shouldRetry(1.1, Some(0.1), 3.0))
-    // boundary is strict
-    assert(!Bench.shouldRetry(6.0, Some(2.0), 3.0))
-  }
 
   test("upperMedian: odd counts true median, even counts the slower middle") {
     assert(Bench.upperMedian(Seq(3.0, 1.0, 2.0)) === 2.0)
     assert(Bench.upperMedian(Seq(4.0, 1.0, 2.0, 3.0)) === 3.0)
     assert(Bench.upperMedian(Seq(5.0)) === 5.0)
-  }
-
-  // stub a deterministic sequence of re-runs
-  private def runs(seq: (Double, Boolean)*): () => (Double, Boolean) = {
-    val it = seq.iterator
-    () => it.next()
-  }
-
-  test("retryToFloor: retries while the best time still reads as a spike") {
-    // 20 s vs ref 2 s: first retry lands 15 s (still > 6 s), second
-    // lands 1.9 s — two re-runs spent, min kept
-    assert(Bench.retryToFloor((20.0, true), runs((15.0, true), (1.9, true)),
-      Some(2.0), 3.0) === ((1.9, true, 2)))
-    // first retry already clears the spike threshold — one re-run only
-    assert(Bench.retryToFloor((20.0, true), runs((2.5, true)),
-      Some(2.0), 3.0) === ((2.5, true, 1)))
-    // budget exhausts under sustained contention — min of the runs kept
-    // (r17: default budget raised to 4, VERDICT r16 #8)
-    assert(Bench.MaxSpikeRetries === 4)
-    assert(Bench.retryToFloor((20.0, true),
-      runs((18.0, true), (17.0, true), (16.0, true), (15.0, true)),
-      Some(2.0), 3.0) === ((15.0, true, 4)))
-    // explicit smaller budget behaves as before
-    assert(Bench.retryToFloor((20.0, true), runs((18.0, true), (17.0, true)),
-      Some(2.0), 3.0, maxRetries = 2) === ((17.0, true, 2)))
-    // no reference (new gate): never retries
-    assert(Bench.retryToFloor((20.0, true), runs(),
-      None, 3.0) === ((20.0, true, 0)))
-    // clean first run: never retries
-    assert(Bench.retryToFloor((2.0, true), runs(),
-      Some(2.0), 3.0) === ((2.0, true, 0)))
-    // failed first run: the failure is the result, no retry
-    assert(Bench.retryToFloor((20.0, false), runs(),
-      Some(2.0), 3.0) === ((20.0, false, 0)))
-    // a failed RE-run spends its attempt but cannot degrade the kept time
-    assert(Bench.retryToFloor((20.0, true), runs((9.9, false), (1.5, true)),
-      Some(2.0), 3.0) === ((1.5, true, 2)))
-  }
-
-  test("samePath: spelling variants of one file compare equal") {
-    assert(Bench.samePath("/root/testdata/sf1", "/root/testdata/sf1/"))
-    assert(Bench.samePath("/root/testdata/sf1", "/root/testdata/./sf1"))
-    assert(!Bench.samePath("/root/testdata/sf1", "/root/testdata/sf0.1"))
-    val cwd = java.nio.file.Paths.get("").toAbsolutePath.toString
-    assert(Bench.samePath("bench_out.json", s"$cwd/bench_out.json"))
   }
 }

@@ -49,7 +49,7 @@ if not names:
     with open("bench_out.json") as f:
         names = sorted(json.load(f)["queries"])
 
-results, failed, retried = {}, [], []
+results, failed = {}, []
 for i, name in enumerate(names):
     out_file = f"/tmp/bench_iso_{name}.json"
     # stderr kept per query: a one-in-a-hundred JVM flake in an hour-long
@@ -58,37 +58,27 @@ for i, name in enumerate(names):
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_ONLY=name,
                SPARK_GRAFT_BENCH_OUT=out_file,
                **({"SPARK_GRAFT_WARM": "1"} if warm else {}))
-
-    def once(attempt=0):
-        # a stale file from a previous invocation would be silently read
-        # as this run's result when the query crashes before rewriting it
-        if os.path.exists(out_file):
-            os.remove(out_file)
-        # append on retry: overwriting would lose the FIRST attempt's
-        # stderr — the flake diagnostic this file exists to keep
-        with open(err_file, "a" if attempt else "w") as ef:
-            if attempt:
-                ef.write(f"\n===== retry attempt {attempt} =====\n")
-            rc = subprocess.run(JAVA_CMD, env=env,
-                                stdout=subprocess.DEVNULL, stderr=ef).returncode
-        try:
-            with open(out_file) as f:
-                return json.load(f)["queries"][name], rc
-        except Exception:
-            return -1, rc or 1
-
-    t, rc = once()
-    if rc or t < 0:  # one retry — a transient flake shouldn't mar a column
-        retried.append(name)
-        t, rc = once(attempt=1)
-    (failed.append(name) if rc or t < 0 else None)
+    # a stale file from a previous invocation would be silently read as
+    # this run's result when the query crashes before rewriting it
+    if os.path.exists(out_file):
+        os.remove(out_file)
+    with open(err_file, "w") as ef:
+        rc = subprocess.run(JAVA_CMD, env=env,
+                            stdout=subprocess.DEVNULL, stderr=ef).returncode
+    try:
+        with open(out_file) as f:
+            t = json.load(f)["queries"][name]
+    except Exception:
+        t, rc = -1, rc or 1
+    # a gate that crashes is a failure in the column, not a re-run
+    if rc or t < 0:
+        failed.append(name)
     results[name] = t
-    print(f"[{i+1}/{len(names)}] {name}: {t:.3f}s rc={rc}"
-          + (" (retried)" if name in retried else ""), flush=True)
+    print(f"[{i+1}/{len(names)}] {name}: {t:.3f}s rc={rc}", flush=True)
 
 line = {"metric": "total", "value": round(sum(t for t in results.values() if t > 0), 3),
         "unit": "sec", "queries": results, "failed": failed, "sf": sf_dir,
-        "isolated": True, "warm": warm, "retried": retried}
+        "isolated": True, "warm": warm}
 with open(out_path, "w") as f:
     json.dump(line, f, indent=1)
 print(json.dumps({"total": line["value"], "failed": failed}))

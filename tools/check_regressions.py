@@ -1,18 +1,20 @@
 #!/usr/bin/env python3
-"""Per-query bench regression diff: compare two bench JSON columns
+"""Per-query screen of two bench columns: compare two bench JSON columns
 (graft.Bench / tools/bench_isolated.py output — anything with a
-"queries": {name: seconds} map) and flag ratio changes beyond a
-threshold, so in-suite run-to-run noise never again masquerades as a
-regression (SCALE.md: q_contamination read 4.9 s in one sf0.1 suite run
-and 1.7 s in the next, same binary; isolated columns are the ground
-truth worth diffing).
+"queries": {name: seconds} map) and list the gates whose time ratio
+moved beyond a threshold, as places to look.
+
+It screens columns and makes no claim: one shot per gate on a shared
+host cannot tell a 10% change from noise (SCALE.md: q_contamination read
+4.9 s in one sf0.1 suite run and 1.7 s in the next, same binary). A
+speed-up, or the absence of a slow-down, is claimed only from paired
+parent/change runs with `tools/ab.py`.
 
 Usage: python3 tools/check_regressions.py <baseline.json> <current.json>
            [threshold]
-Threshold is the flag ratio (default 1.5). Exit code 1 iff any
-regression exceeds it — usable as a round gate. Queries present on only
-one side are listed informationally, never flagged (gates are added
-every round).
+Threshold is the flag ratio (default 1.5). Exit code 1 iff any gate's
+ratio exceeds it. Queries present on only one side are listed
+informationally, never flagged.
 """
 import json
 import sys
