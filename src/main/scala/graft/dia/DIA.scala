@@ -28,7 +28,10 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
   private implicit def ct: ClassTag[T] = enc.clsTag
   private def spark: SparkSession = ds.sparkSession
 
-  /** Runs an eager step of a DIA operator as jobs named `dia:<phase>`. */
+  /** Runs an eager step of a DIA operator as jobs named `dia:<phase>`.
+    * A step's `ds.rdd` goes inside: with AQE on, it runs the input plan's
+    * exchanges as jobs.
+    */
   private def named[A](phase: String)(body: => A): A =
     graft.operators.Jobs.named(spark.sparkContext, s"dia:$phase")(body)
 
@@ -383,13 +386,14 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
     * the running value after (inclusive) or before (exclusive) each row.
     */
   private def scan(initial: Option[T], inclusive: Boolean)(f: (T, T) => T): DIA[T] = {
-    val rdd = ds.rdd
-    // cached: the partials pass and the output pass both read it;
-    // released by Release.afterNextAction once the consuming action ends
-    rdd.cache()
-    val partials = named("scan_partials")(rdd
-      .mapPartitionsWithIndex((pid, it) => Iterator((pid, it.reduceOption(f))))
-      .collect()).sortBy(_._1).map(_._2)
+    val (rdd, partials) = named("scan_partials") {
+      val rdd = ds.rdd
+      // cached: the partials pass and the output pass both read it;
+      // released by Release.afterNextAction once the consuming action ends
+      rdd.cache()
+      (rdd, rdd.mapPartitionsWithIndex((pid, it) => Iterator((pid, it.reduceOption(f))))
+        .collect().sortBy(_._1).map(_._2))
+    }
     val offsets = partials.scanLeft(initial) {
       case (Some(a), Some(b)) => Some(f(a, b))
       case (a, b) => b.orElse(a)
@@ -430,16 +434,17 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
   private def windowImpl[U: Encoder](k: Int, f: (Long, Seq[T]) => U,
       partialFn: Option[(Long, Seq[T]) => U]): DIA[U] = {
     require(k >= 1, s"window size must be >= 1, got $k")
-    val rdd = ds.rdd
-    // cached: the counts pass, the boundary tail pass, and the output pass
-    // all read it; released by Release.afterNextAction after the consuming
-    // action
-    rdd.cache()
-    // peer-to-peer predecessor rows (net.Predecessor topology): the driver
-    // folds only per-partition COUNTS; the <=k-1 boundary rows per
-    // partition move executor-to-executor through a keyed shuffle
-    val (starts, boundary) =
-      named("window_counts")(graft.operators.BoundaryExchange.predecessors(rdd, k))
+    val (rdd, (starts, boundary)) = named("window_counts") {
+      val rdd = ds.rdd
+      // cached: the counts pass, the boundary tail pass, and the output
+      // pass all read it; released by Release.afterNextAction after the
+      // consuming action
+      rdd.cache()
+      // peer-to-peer predecessor rows (net.Predecessor topology): the
+      // driver folds only per-partition COUNTS; the <=k-1 boundary rows
+      // per partition move executor-to-executor through a keyed shuffle
+      (rdd, graft.operators.BoundaryExchange.predecessors(rdd, k))
+    }
     val nParts = starts.length - 1
     val bcS = spark.sparkContext.broadcast(starts)
     implicit val uct: ClassTag[U] = implicitly[Encoder[U]].clsTag
@@ -531,13 +536,15 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
     * the result stays distributed.
     */
   def sample(k: Int, seed: Long = 42L): DIA[T] = {
-    val rdd = ds.rdd
-    // cached: the counts pass and the output pass both read it; released
-    // by Release.afterNextAction after the consuming action
-    rdd.cache()
-    val counts = named("sample_counts")(rdd.mapPartitionsWithIndex { (pid, it) =>
-      Iterator((pid, it.size.toLong))
-    }.collect()).sortBy(_._1).map(_._2)
+    val (rdd, counts) = named("sample_counts") {
+      val rdd = ds.rdd
+      // cached: the counts pass and the output pass both read it;
+      // released by Release.afterNextAction after the consuming action
+      rdd.cache()
+      (rdd, rdd.mapPartitionsWithIndex { (pid, it) =>
+        Iterator((pid, it.size.toLong))
+      }.collect().sortBy(_._1).map(_._2))
+    }
     val total = counts.sum
     require(k <= total, s"sample($k) from $total elements")
     val alloc = graft.operators.Hypergeometric

@@ -58,7 +58,21 @@ class JobNamesSpec extends SparkSpec {
     assert(ccJobs.contains("cc:signature") && ccJobs.contains("cc:confirm"), ccJobs)
   }
 
-  test("the caller's job description is restored, also when the body throws") {
+  test("scan, window and sample over a shuffled input name its exchange jobs too") {
+    // with AQE on, `ds.rdd` of a repartitioned input runs its exchange as
+    // a job, before the operator's own metadata pass
+    def shuffled = new DIA(spark.createDataset(1L to 120L).repartition(3))
+    for ((op, run) <- Seq[(String, DIA[Long] => Any)](
+        "prefixSum" -> (_.prefixSum(_ + _)),
+        "window" -> (_.window(3)((_, w) => w.sum)),
+        "sample" -> (_.sample(10)))) {
+      val jobs = jobsOf(run(shuffled))
+      assert(jobs.size >= 2, s"$op: $jobs")
+      assert(jobs.forall(_.startsWith("dia:")), s"$op: $jobs")
+    }
+  }
+
+    test("the caller's job description is restored, also when the body throws") {
     val sc = spark.sparkContext
     sc.setJobDescription("caller")
     try {

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Paired parent/change benchmark runner: the one way a speed-up is claimed.
 
-    python3 tools/ab.py --base <rev> [--pairs 10] [--seed-base 1]
+    python3 tools/ab.py --base <rev> [--pairs N]   (N >= 10, default 10)
 
 The current checkout is the change; --base names the parent commit. The
 parent's tree is exported with `git archive` to .bench_build/ab/<sha>/tree
@@ -12,12 +12,13 @@ a run over different benchmark code is not a comparison.
 
 For every workload in BENCHMARK.json it runs --pairs pairs at the
 declared run_seconds; the side that runs first alternates from pair to
-pair, and pair i runs seed --seed-base + i on both sides. For every
+pair, and pair i (from 1) runs seed i on both sides. For every
 workload x end-to-end metric it prints each side's median and quartiles,
 the change's pair win rate, the parent's quartile spread and one verdict
 (see `verdict`), then the attempted/failed operation counts per side. The
 same report is written as JSON under .bench_build/ab/. Exit status: 0
-when every run returned a correct result, 1 otherwise, 2 on refusal.
+when every run returned a correct result and the change failed no more
+than the parent (see `more_failures`), 1 otherwise, 2 on refusal.
 
 The decision rules are pure functions; check them with
 `python3 -m doctest tools/ab.py`.
@@ -36,6 +37,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 AB_DIR = os.path.join(ROOT, ".bench_build", "ab")
 BENCH_FILES = ("thrillbench", "BENCHMARK.json")
 RUN_TIMEOUT_S = 1200  # run.py's own build (850 s) and run (170 s) limits, plus slack
+PAIRS = 10  # the fewest pairs a gain may rest on
 
 
 def quartiles(xs):
@@ -53,22 +55,52 @@ def quartiles(xs):
 
 
 def wins(pairs, better):
-    """Pairs (parent, change) the change wins; a tie counts for neither side.
+    """Pairs (parent, change) the change wins. A tie counts for neither
+    side, and neither does a pair where either side has no value (None),
+    so a missing change run is a loss.
 
     >>> wins([(3.0, 2.0), (3.0, 3.0), (2.0, 3.0)], "lower")
     1
     >>> wins([(3.0, 2.0), (3.0, 3.0), (2.0, 3.0)], "higher")
     1
+    >>> wins([(3.0, 2.0), (3.0, None), (None, 2.0)], "lower")
+    1
     """
     sign = 1 if better == "lower" else -1
-    return sum(1 for p, c in pairs if sign * (p - c) > 0)
+    return sum(1 for p, c in pairs
+               if p is not None and c is not None and sign * (p - c) > 0)
 
 
-def verdict(pairs, better, bound):
-    """One verdict for a metric from its (parent, change) pairs:
+def more_failures(parent, change):
+    """Whether the change failed more than the parent: more runs without a
+    correct result, or a larger share of its operations failed.
 
-    - `gain`: the change wins >= 90% of the pairs and the medians differ,
-      in its favour, by more than the parent's quartile spread;
+    >>> clean = {"no_result": 0, "incorrect": 0, "attempted": 120, "failed": 0}
+    >>> more_failures(clean, clean)
+    False
+    >>> more_failures(clean, dict(clean, failed=1))
+    True
+    >>> more_failures(clean, dict(clean, no_result=1))
+    True
+    >>> more_failures(dict(clean, incorrect=2), dict(clean, incorrect=1))
+    False
+    """
+    def share(o):
+        return o["failed"] / o["attempted"] if o["attempted"] else 0.0
+    bad = lambda o: o["no_result"] + o["incorrect"]
+    return bad(change) > bad(parent) or share(change) > share(parent)
+
+
+def verdict(pairs, better, bound, failed_more=False):
+    """One verdict for a metric from its (parent, change) pairs, one per
+    pair run; a side whose run returned no correct result is None there.
+    Medians and quartiles are over each side's values:
+
+    - `gain`: at least PAIRS pairs ran, the change failed no more than the
+      parent (`failed_more` is false, see
+      `more_failures`), it wins >= 90% of all pairs run
+      and the medians differ, in its favour, by more than the parent's
+      quartile spread;
     - `worse`: the change's median is worse than the parent's by more than
       `bound` (a share of the parent's median);
     - `unresolved`: the parent's own quartile spread is wider than `bound`,
@@ -111,13 +143,35 @@ def verdict(pairs, better, bound):
 
     >>> verdict(list(zip(noisy, [5.9, 15.5] + [5.5] * 8)), "lower", 0.24)
     'unresolved'
+
+    A change run without a correct result is a lost pair, so a change
+    that wins 7 pairs and crashes in 3 is no gain:
+
+    >>> verdict([(10.0, 8.0)] * 7 + [(10.0, None)] * 3, "lower", 0.24)
+    'within bound'
+    >>> verdict([(10.0, 8.0)] * 10, "lower", 0.24)
+    'gain'
+
+    Nor is a clear win over fewer than PAIRS pairs, or one where the change
+    failed more runs or operations than the parent:
+
+    >>> verdict([(10.0, 8.0)] * 5, "lower", 0.24)
+    'within bound'
+    >>> verdict([(10.0, 8.0)] * 10, "lower", 0.24, failed_more=True)
+    'within bound'
+    >>> verdict([(10.0, None)] * 10, "lower", 0.24)
+    'no result'
     """
-    parent = [p for p, _ in pairs]
-    change = [c for _, c in pairs]
+    parent = [p for p, _ in pairs if p is not None]
+    change = [c for _, c in pairs if c is not None]
+    if not parent or not change:
+        return "no result"
     q1, mp, q3 = quartiles(parent)
     mc = statistics.median(change)
     sign = 1 if better == "lower" else -1
-    if wins(pairs, better) >= 0.9 * len(pairs) and sign * (mp - mc) > q3 - q1:
+    if (len(pairs) >= PAIRS and not failed_more
+            and wins(pairs, better) >= 0.9 * len(pairs)
+            and sign * (mp - mc) > q3 - q1):
         return "gain"
     if sign * (mc - mp) > bound * abs(mp):
         return "worse"
@@ -181,14 +235,20 @@ def export_base(sha):
 
 
 def value(result, metric):
-    """A metric's value in a run's result line, or None.
+    """A metric's value in a run's result line; None when the run returned
+    no result or an incorrect one, whose figures count for nothing.
 
-    >>> value({"metrics": {"wall_s": {"value": 3.5, "unit": "s"}}}, "wall_s")
+    >>> m = {"wall_s": {"value": 3.5, "unit": "s"}}
+    >>> value({"correct": True, "metrics": m}, "wall_s")
     3.5
+    >>> value({"correct": False, "metrics": m}, "wall_s") is None
+    True
     >>> value(None, "wall_s") is None
     True
     """
-    return ((result or {}).get("metrics", {}).get(metric) or {}).get("value")
+    if not result or result.get("correct") is not True:
+        return None
+    return (result.get("metrics", {}).get(metric) or {}).get("value")
 
 
 def run_side(root, target, workload, seed, seconds):
@@ -226,11 +286,10 @@ def main():
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--base", required=True, help="the parent revision")
-    ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--seed-base", type=int, default=1)
+    ap.add_argument("--pairs", type=int, default=PAIRS)
     a = ap.parse_args()
-    if a.pairs < 1:
-        refuse("--pairs must be >= 1")
+    if a.pairs < PAIRS:
+        refuse(f"--pairs must be >= {PAIRS}: a claim rests on at least {PAIRS} pairs")
     try:
         sha = git("rev-parse", "--verify", a.base + "^{commit}").strip()
     except subprocess.CalledProcessError:
@@ -247,13 +306,13 @@ def main():
 
     report = {"base": sha, "head": git("rev-parse", "HEAD").strip(),
               "dirty": bool(git("status", "--porcelain").strip()),
-              "pairs": a.pairs, "seed_base": a.seed_base, "run_seconds": seconds,
+              "pairs": a.pairs, "run_seconds": seconds,
               "workloads": {}}
     all_ok = True
     for w in (x["name"] for x in spec["workloads"]):
         runs = {"parent": [], "change": []}
         for i in range(a.pairs):
-            seed = a.seed_base + i
+            seed = i + 1
             order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
             for side in order:
                 t0 = time.time()
@@ -264,35 +323,34 @@ def main():
                 print(f"[ab] {w} pair {i + 1}/{a.pairs} seed {seed} {side}: "
                       f"{'ok' if ok else 'FAILED'} wall_s={value(res, 'wall_s')} "
                       f"({time.time() - t0:.0f} s)", flush=True)
-        rows = {}
-        for m in metrics:
-            name = m["name"]
-            pairs = [(value(p, name), value(c, name))
-                     for p, c in zip(runs["parent"], runs["change"])
-                     if value(p, name) is not None and value(c, name) is not None]
-            if not pairs:
-                rows[name] = {"verdict": "no pairs"}
-                continue
-            pq = quartiles([p for p, _ in pairs])
-            cq = quartiles([c for _, c in pairs])
-            rows[name] = {
-                "unit": m["unit"], "better": m["better"], "bound": m["bound"],
-                "parent": [p for p, _ in pairs], "change": [c for _, c in pairs],
-                "parent_quartiles": pq, "change_quartiles": cq,
-                "change_wins": wins(pairs, m["better"]), "pairs": len(pairs),
-                "parent_spread": (pq[2] - pq[0]) / pq[1] if pq[1] else 0.0,
-                "verdict": verdict(pairs, m["better"], m["bound"])}
         ops = {side: {"runs": len(rs), "no_result": sum(r is None for r in rs),
                       "incorrect": sum(1 for r in rs if r and r.get("correct") is not True),
                       "attempted": sum(r["attempted"] for r in rs if r),
                       "failed": sum(r["failed"] for r in rs if r)}
                for side, rs in runs.items()}
+        failed_more = more_failures(ops["parent"], ops["change"])
+        all_ok &= not failed_more
+        rows = {}
+        for m in metrics:
+            name = m["name"]
+            pairs = [(value(p, name), value(c, name))
+                     for p, c in zip(runs["parent"], runs["change"])]
+            row = {"unit": m["unit"], "better": m["better"], "bound": m["bound"],
+                   "parent": [p for p, _ in pairs], "change": [c for _, c in pairs],
+                   "change_wins": wins(pairs, m["better"]), "pairs": len(pairs),
+                   "verdict": verdict(pairs, m["better"], m["bound"], failed_more)}
+            if row["verdict"] != "no result":
+                pq = quartiles([p for p in row["parent"] if p is not None])
+                row.update(parent_quartiles=pq,
+                           change_quartiles=quartiles([c for c in row["change"] if c is not None]),
+                           parent_spread=(pq[2] - pq[0]) / pq[1] if pq[1] else 0.0)
+            rows[name] = row
         report["workloads"][w] = {"metrics": rows, "operations": ops,
-                                  "runs": runs}
+                                  "change_failed_more": failed_more, "runs": runs}
 
     print(f"\n[ab] base {sha[:12]} vs change {report['head'][:12]}"
           f"{' + uncommitted edits' if report['dirty'] else ''}: "
-          f"{a.pairs} pairs, seeds {a.seed_base}..{a.seed_base + a.pairs - 1}, "
+          f"{a.pairs} pairs, seeds 1..{a.pairs}, "
           f"{seconds} s runs")
     print(f"{'workload':<16} {'metric':<13} {'parent median [q1, q3]':<28} "
           f"{'change median [q1, q3]':<28} {'wins':>6} {'spread':>7} {'bound':>6}  verdict")
@@ -312,6 +370,9 @@ def main():
             print(f"{w:<16} {side:<7} operations failed {o['failed']}/{o['attempted']}, "
                   f"runs without result {o['no_result']}/{o['runs']}, "
                   f"incorrect {o['incorrect']}")
+        if r["change_failed_more"]:
+            print(f"{w:<16} the change failed more runs or a larger share of "
+                  f"operations than the parent: no gain")
     os.makedirs(AB_DIR, exist_ok=True)
     out = os.path.join(AB_DIR, f"report-{sha[:12]}-{time.strftime('%Y%m%dT%H%M%S')}.json")
     with open(out, "w") as f:
