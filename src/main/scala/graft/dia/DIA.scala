@@ -3,6 +3,8 @@ package graft.dia
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.{BoundaryExchange, Positional}
+
 import scala.collection.immutable.ArraySeq
 import scala.reflect.ClassTag
 
@@ -19,7 +21,10 @@ import scala.reflect.ClassTag
   * exactly as the reference requires a deliberate `Sort` for meaningful
   * positional work on unordered inputs. Driver-side traffic in those
   * operators is O(#partitions), mirroring thrill's flow-control collectives
-  * (thrill/net/flow_control_channel.hpp:236-405).
+  * (thrill/net/flow_control_channel.hpp:236-405). The positional methods
+  * are thin wrappers over the ordered kernels of
+  * [[graft.operators.Positional]] (metadata pass, scan, aligned scatter),
+  * which the DataFrame ops share.
   */
 class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializable {
 
@@ -67,12 +72,12 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
 
   /** Rebalance (thrill/api/rebalance.hpp:30-133): even partitions, keep
     * global order. The index space is dense and its size known, so the
-    * one-input aligned scatter ([[alignedBlocks]]) computes the range split
+    * one-input aligned scatter ([[aligned]]) computes the range split
     * arithmetically — exactly even partitions, one shuffle, no sortBy
     * sampling pass.
     */
   def rebalance(numPartitions: Int): DIA[T] =
-    alignedBlocks(Nil, Seq(1), None, numPartitions)(_(0)(0).asInstanceOf[T])
+    aligned(Nil, Seq(1), None, numPartitions)(_(0)(0).asInstanceOf[T])
 
   // ===== Aggregations (SURVEY.md §2.3) ====================================
 
@@ -157,11 +162,14 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
     }
 
   /** SortStable (thrill/api/sort.hpp:82-114): stability via index tiebreak. */
-  def sortStableBy[K: Ordering: ClassTag](key: T => K): DIA[T] = {
-    val indexed = ds.rdd.zipWithIndex()
-    new DIA(spark.createDataset(
-      indexed.sortBy { case (t, i) => (key(t), i) }.map(_._1)))
-  }
+  def sortStableBy[K: Ordering: ClassTag](key: T => K): DIA[T] =
+    // the index sizes the partitions and the range partitioner samples,
+    // each in a job of its own
+    named("sort_stable") {
+      val indexed = ds.rdd.zipWithIndex()
+      new DIA(spark.createDataset(
+        indexed.sortBy { case (t, i) => (key(t), i) }.map(_._1)))
+    }
 
   /** Merge of sorted DIAs (thrill/api/merge.hpp:43-66) WITHOUT re-sorting —
     * the reference's defining multi-sequence-selection property. The
@@ -180,7 +188,7 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
     */
   def merge[K: Ordering: ClassTag](others: Seq[DIA[T]])(key: T => K): DIA[T] = {
     require(others.nonEmpty, "k-ary merge needs at least two inputs")
-    val keyed = (this +: others).map(_.ds.rdd.map(t => (key(t), t)))
+    val keyed = named("merge_inputs")((this +: others).map(_.ds.rdd.map(t => (key(t), t))))
     val merged = graft.operators.RunMerge
       .mergeSorted(keyed, keyed.map(_.getNumPartitions).max)
     new DIA(spark.createDataset(merged.map(_._2)))
@@ -195,16 +203,15 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
         implicitly[Encoder[U]].clsTag)))
 
   /** Zip by global index (thrill/api/zip.hpp:77-724). CutTag semantics:
-    * truncates to the shorter input. One shuffle per side through the
-    * aligned-scatter kernel ([[alignedBlocks]]): partition i of each side
-    * holds exactly the same index interval and the result is a
+    * truncates to the shorter input. One count job and one shuffle per
+    * side through the aligned-scatter kernel ([[aligned]]): partition i of
+    * each side holds exactly the same index interval and the result is a
     * partition-local 1:1 iterator zip — no join, no global re-sort. The
-    * indexed inputs are persisted (the length count and the shuffle both
-    * read them) and released by `Release.afterNextAction` once the
-    * consuming action ends.
+    * inputs are cached by the count job, which the shuffle reads, and
+    * released once the consuming action ends.
     */
   def zip[U, R: Encoder](other: DIA[U])(f: (T, U) => R): DIA[R] =
-    alignedBlocks(Seq(other), Seq(1, 1), None) { b =>
+    aligned(Seq(other), Seq(1, 1), None) { b =>
       f(b(0)(0).asInstanceOf[T], b(1)(0).asInstanceOf[U])
     }
 
@@ -216,7 +223,7 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
     */
   def zipPad[U, R: Encoder](other: DIA[U], padThis: T, padOther: U)(
       f: (T, U) => R): DIA[R] =
-    alignedBlocks(Seq(other), Seq(1, 1), Some(Seq(padThis, padOther))) { b =>
+    aligned(Seq(other), Seq(1, 1), Some(Seq(padThis, padOther))) { b =>
       f(b(0)(0).asInstanceOf[T], b(1)(0).asInstanceOf[U])
     }
 
@@ -232,7 +239,7 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
   def zipLocal[U, R: Encoder](other: DIA[U])(f: (T, U) => R): DIA[R] = {
     implicit val uct: ClassTag[U] = other.enc.clsTag
     implicit val rct: ClassTag[R] = implicitly[Encoder[R]].clsTag
-    val zipped = ds.rdd.zipPartitions(other.ds.rdd) { (ia, ib) =>
+    val zipped = named("zip_local_inputs")(ds.rdd.zipPartitions(other.ds.rdd) { (ia, ib) =>
       new Iterator[R] {
         def hasNext: Boolean = {
           val a = ia.hasNext; val b = ib.hasNext
@@ -242,7 +249,7 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
         }
         def next(): R = f(ia.next(), ib.next())
       }
-    }
+    })
     new DIA(spark.createDataset(zipped)(implicitly[Encoder[R]]))
   }
 
@@ -253,7 +260,7 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
     * plan as [[zip]].
     */
   def zip3[U, V, R: Encoder](db: DIA[U], dc: DIA[V])(f: (T, U, V) => R): DIA[R] =
-    alignedBlocks(Seq(db, dc), Seq(1, 1, 1), None) { b =>
+    aligned(Seq(db, dc), Seq(1, 1, 1), None) { b =>
       f(b(0)(0).asInstanceOf[T], b(1)(0).asInstanceOf[U], b(2)(0).asInstanceOf[V])
     }
 
@@ -262,7 +269,7 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
     * iterators are zipped partition-locally (no joins).
     */
   def zipAll[R: Encoder](others: Seq[DIA[T]])(f: Seq[T] => R): DIA[R] =
-    alignedBlocks(others, Seq.fill(others.length + 1)(1), None) { b =>
+    aligned(others, Seq.fill(others.length + 1)(1), None) { b =>
       f(DIA.elems[T](b.map(_(0))))
     }
 
@@ -277,7 +284,7 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
     */
   def zipWindow[U, R: Encoder](other: DIA[U], wThis: Int, wOther: Int)(
       f: (Seq[T], Seq[U]) => R): DIA[R] =
-    alignedBlocks(Seq(other), Seq(wThis, wOther), None) { b =>
+    aligned(Seq(other), Seq(wThis, wOther), None) { b =>
       f(DIA.elems[T](b(0)), DIA.elems[U](b(1)))
     }
 
@@ -292,7 +299,7 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
   def zipWindow3[U, V, R: Encoder](db: DIA[U], dc: DIA[V],
       wThis: Int, wB: Int, wC: Int)(
       f: (Seq[T], Seq[U], Seq[V]) => R): DIA[R] =
-    alignedBlocks(Seq(db, dc), Seq(wThis, wB, wC), None) { b =>
+    aligned(Seq(db, dc), Seq(wThis, wB, wC), None) { b =>
       f(DIA.elems[T](b(0)), DIA.elems[U](b(1)), DIA.elems[V](b(2)))
     }
 
@@ -305,112 +312,37 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
       f: Seq[Seq[T]] => R): DIA[R] = {
     require(sizes.length == others.length + 1,
       s"zipWindowAll: ${others.length + 1} inputs but ${sizes.length} window sizes")
-    alignedBlocks(others, sizes, None) { b =>
+    aligned(others, sizes, None) { b =>
       f(ArraySeq.unsafeWrapArray(b).map(DIA.elems[T]))
     }
   }
 
-  /** The aligned-scatter kernel under every shuffling zip and [[rebalance]]:
-    * Zip with Cut or Pad (thrill/api/zip.hpp:77-724) and ZipWindow
-    * (zip_window.hpp:175-865) over this DIA followed by `others`. Block j
-    * is `windows(i)` consecutive elements of input i.
-    *
-    * Each input is keyed by its global index and persisted — the length
-    * count and the shuffle both read it; the caches are released after the
-    * consuming action. Each input then shuffles ONCE through a
-    * [[DenseIndexPartitioner]] over the common block range, sorted by index
-    * within partitions (the reference's scatter of aligned index ranges,
-    * zip.hpp:259-291): partition p of every input holds the same block
-    * interval, offset-ordered, and blocks assemble by streaming `w` rows
-    * per input. Cut mode (`pads` empty) keeps the blocks that are full in
-    * every input; pad mode runs to the last, possibly partial, block of
-    * the longest input and fills exhausted inputs with their pad value.
-    * `emit` sees one array per input per block, in global block order.
+  /** [[graft.operators.Positional.alignedBlocks]] over this DIA followed
+    * by `others`, as a DIA: the kernel under every shuffling zip and
+    * [[rebalance]].
     */
-  private def alignedBlocks[R: Encoder](others: Seq[DIA[_]], windows: Seq[Int],
+  private def aligned[R: Encoder](others: Seq[DIA[_]], windows: Seq[Int],
       pads: Option[Seq[Any]], numPartitions: Int = 0)(
-      emit: Array[Array[Any]] => R): DIA[R] = {
-    require(windows.forall(_ >= 1), "window sizes must be >= 1")
-    // RDD.zipWithIndex sizes the partitions of a multi-partition input
-    // in a job of its own
-    val keyed = (this +: others).map(d => named("align_sizes")(d.ds.rdd.zipWithIndex())
-      .map { case (t, i) => (i, t: Any) }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val blocks = keyed.zip(windows).map { case (r, w) =>
-      val n = named("align_count")(r.count())
-      if (pads.isEmpty) n / w else (n + w - 1) / w
-    }
-    val len = if (pads.isEmpty) blocks.min else blocks.max
-    val parts =
-      if (numPartitions > 0) numPartitions else math.max(1, keyed.map(_.getNumPartitions).max)
-    val range = new DenseIndexPartitioner(parts, len)
-    val scattered = keyed.zip(windows).map { case (r, w) =>
-      r.filter(_._1 / w < len)
-        .repartitionAndSortWithinPartitions(new DenseIndexPartitioner(parts, len, w))
-    }
-    val k = keyed.length
-    val (w0, pad0) = (windows.head, pads.map(_.head))
-    val init = scattered.head.mapPartitionsWithIndex { (pid, it) =>
-      (0L until range.blocks(pid)).iterator.map { _ =>
-        val b = new Array[Array[Any]](k)
-        b(0) = DIA.block(it, w0, pad0)
-        b
-      }
-    }
-    val aligned = scattered.indices.tail.foldLeft(init) { (acc, i) =>
-      val (w, pad) = (windows(i), pads.map(_(i)))
-      acc.zipPartitions(scattered(i)) { (ia, ib) =>
-        ia.map { b => b(i) = DIA.block(ib, w, pad); b }
-      }
-    }
-    graft.operators.Release.afterNextAction(spark, keyed: _*)
-    new DIA(spark.createDataset(aligned.map(emit)(implicitly[Encoder[R]].clsTag)))
-  }
+      emit: Array[Array[Any]] => R): DIA[R] =
+    new DIA(spark.createDataset(Positional.alignedBlocks(spark, "dia:align_counts",
+      (this +: others).map(d => () => d.ds.rdd), windows, pads, numPartitions)(
+      (_, b) => emit(b))(implicitly[Encoder[R]].clsTag)))
 
   /** PrefixSum (thrill/api/prefix_sum.hpp:28-171): two-pass — per-partition
-    * fold, an ExPrefixSum of the ≤#partitions partials, re-scan.
+    * fold, an ExPrefixSum of the ≤#partitions partials, re-scan
+    * ([[graft.operators.Positional.scan]]).
     */
-  def prefixSum(f: (T, T) => T): DIA[T] = scan(None, inclusive = true)(f)
+  def prefixSum(f: (T, T) => T): DIA[T] = new DIA(spark.createDataset(
+    Positional.scan(spark, "dia:scan_partials")(ds.rdd)(identity[T], None, inclusive = true)(f)(
+      (_, v) => v)))
 
   /** ExPrefixSum (thrill/api/ex_prefix_sum.hpp:24-61): exclusive scan —
     * out(0) = initial, out(i) = f(out(i-1), x(i-1)). Same two-pass shape
     * as prefixSum.
     */
-  def exPrefixSum(initial: T)(f: (T, T) => T): DIA[T] =
-    scan(Some(initial), inclusive = false)(f)
-
-  /** The two passes under both prefix sums: one job folds each partition
-    * to a partial, the ≤#partitions partials fold (seeded with `initial`)
-    * into per-partition starting values, one broadcast ships them,
-    * and the output pass re-scans each partition from its start, emitting
-    * the running value after (inclusive) or before (exclusive) each row.
-    */
-  private def scan(initial: Option[T], inclusive: Boolean)(f: (T, T) => T): DIA[T] = {
-    val (rdd, partials) = named("scan_partials") {
-      val rdd = ds.rdd
-      // cached: the partials pass and the output pass both read it;
-      // released by Release.afterNextAction once the consuming action ends
-      rdd.cache()
-      (rdd, rdd.mapPartitionsWithIndex((pid, it) => Iterator((pid, it.reduceOption(f))))
-        .collect().sortBy(_._1).map(_._2))
-    }
-    val offsets = partials.scanLeft(initial) {
-      case (Some(a), Some(b)) => Some(f(a, b))
-      case (a, b) => b.orElse(a)
-    }
-    val bc = spark.sparkContext.broadcast(offsets)
-    val out = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var running = bc.value(pid)
-      it.map { t =>
-        val next = running match { case Some(r) => f(r, t); case None => t }
-        val v = if (inclusive) next else running.get
-        running = Some(next)
-        v
-      }
-    }
-    graft.operators.Release.afterNextAction(spark, rdd)
-    new DIA(spark.createDataset(out))
-  }
+  def exPrefixSum(initial: T)(f: (T, T) => T): DIA[T] = new DIA(spark.createDataset(
+    Positional.scan(spark, "dia:scan_partials")(ds.rdd)(identity[T], Some(initial),
+      inclusive = false)(f)((_, v) => v)))
 
   /** Sliding Window (thrill/api/window.hpp:32-571): fn over every k
     * consecutive elements; partitions fetch their k-1 predecessor rows
@@ -434,19 +366,13 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
   private def windowImpl[U: Encoder](k: Int, f: (Long, Seq[T]) => U,
       partialFn: Option[(Long, Seq[T]) => U]): DIA[U] = {
     require(k >= 1, s"window size must be >= 1, got $k")
-    val (rdd, (starts, boundary)) = named("window_counts") {
-      val rdd = ds.rdd
-      // cached: the counts pass, the boundary tail pass, and the output
-      // pass all read it; released by Release.afterNextAction after the
-      // consuming action
-      rdd.cache()
-      // peer-to-peer predecessor rows (net.Predecessor topology): the
-      // driver folds only per-partition COUNTS; the <=k-1 boundary rows
-      // per partition move executor-to-executor through a keyed shuffle
-      (rdd, graft.operators.BoundaryExchange.predecessors(rdd, k))
-    }
-    val nParts = starts.length - 1
-    val bcS = spark.sparkContext.broadcast(starts)
+    val (rdd, counts) = Positional.summarize(spark, "dia:window_counts")(ds.rdd)(_.size.toLong)
+    // peer-to-peer predecessor rows (net.Predecessor topology): the
+    // driver folds only per-partition COUNTS; the <=k-1 boundary rows
+    // per partition move executor-to-executor through a keyed shuffle
+    val starts = Positional.starts(counts)
+    val boundary = BoundaryExchange.predecessors(rdd, starts, k)
+    val nParts = counts.length
     implicit val uct: ClassTag[U] = implicitly[Encoder[U]].clsTag
     val out = rdd.zipPartitions(boundary) { (it, bit) =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
@@ -469,7 +395,7 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
           .asInstanceOf[Seq[T]]
       }
       bit.foreach(push)
-      var globalIdx = bcS.value(pid) - 1 // index of current element
+      var globalIdx = starts(pid) - 1 // index of current element
       val full = it.flatMap { t =>
         globalIdx += 1
         push(t)
@@ -480,7 +406,7 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
       // the buffer is read only after the main pass mutated it)
       def partials: Iterator[U] = partialFn match {
         case Some(pf) if pid == nParts - 1 =>
-          val n = bcS.value(nParts) // total element count
+          val n = starts(nParts) // total element count
           val tail = snapshot().takeRight(math.min(size, k - 1))
           val start = n - tail.size
           tail.indices.iterator.map(i => pf(start + i, tail.drop(i)))
@@ -488,7 +414,6 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
       }
       full ++ partials
     }
-    graft.operators.Release.afterNextAction(spark, rdd)
     new DIA(spark.createDataset(out)(implicitly[Encoder[U]]))
   }
 
@@ -506,8 +431,8 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, enc)
     // within-block offset carried for the same straddling-fragment reason
     // as zipWindow: mapGroups iterates values in unspecified order
-    val indexed = spark.createDataset(
-      ds.rdd.zipWithIndex().map { case (t, i) => (i / k, i % k, t) })
+    val indexed = spark.createDataset(named("window_disjoint_index")(ds.rdd.zipWithIndex())
+      .map { case (t, i) => (i / k, i % k, t) })
     new DIA(indexed.groupByKey(_._1).mapGroups { (b, it) =>
       f(b, it.toArray.sortBy(_._2).toSeq.map(_._3))
     })
@@ -522,7 +447,7 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
     * Spark partition order carries the position implicitly).
     */
   def concat(other: DIA[T]): DIA[T] =
-    new DIA(spark.createDataset(ds.rdd.union(other.ds.rdd)))
+    new DIA(spark.createDataset(named("concat_inputs")(ds.rdd.union(other.ds.rdd))))
 
   /** Exact-size uniform Sample without replacement
     * (thrill/api/sample.hpp:50-263). Fully distributed, the reference's
@@ -536,22 +461,13 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
     * the result stays distributed.
     */
   def sample(k: Int, seed: Long = 42L): DIA[T] = {
-    val (rdd, counts) = named("sample_counts") {
-      val rdd = ds.rdd
-      // cached: the counts pass and the output pass both read it;
-      // released by Release.afterNextAction after the consuming action
-      rdd.cache()
-      (rdd, rdd.mapPartitionsWithIndex { (pid, it) =>
-        Iterator((pid, it.size.toLong))
-      }.collect().sortBy(_._1).map(_._2))
-    }
+    val (rdd, counts) = Positional.summarize(spark, "dia:sample_counts")(ds.rdd)(_.size.toLong)
     val total = counts.sum
     require(k <= total, s"sample($k) from $total elements")
-    val alloc = graft.operators.Hypergeometric
-      .split(new scala.util.Random(seed), counts, k.toLong)
-    val bc = spark.sparkContext.broadcast(counts.zip(alloc))
+    val quotas = counts.zip(graft.operators.Hypergeometric
+      .split(new scala.util.Random(seed), counts, k.toLong))
     val out = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val (n, quota) = bc.value(pid)
+      val (n, quota) = quotas(pid)
       if (quota == 0L) Iterator.empty
       else {
         // Floyd's sampling: `quota` distinct locals out of n, O(quota)
@@ -573,7 +489,6 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
         }
       }
     }
-    graft.operators.Release.afterNextAction(spark, rdd)
     new DIA(spark.createDataset(out))
   }
 
@@ -621,24 +536,6 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
   def writeBinary(path: String): Unit = ds.write.parquet(path)
 }
 
-/** Range partitioner for `totalBlocks` blocks of `window` consecutive
-  * DENSE Long indices: index i belongs to block i / window, and partition p
-  * covers an equal contiguous block interval. No sampling pass (unlike
-  * RangePartitioner) — the key space is known exactly, so the split is
-  * computed arithmetically, mirroring the reference's equal-range scatter
-  * plan (thrill/api/zip.hpp:259-291).
-  */
-private[graft] class DenseIndexPartitioner(parts: Int, totalBlocks: Long, window: Int = 1)
-    extends org.apache.spark.Partitioner {
-  require(parts >= 1 && totalBlocks >= 0 && window >= 1)
-  private val per = math.max(1L, (totalBlocks + parts - 1) / parts)
-  override def numPartitions: Int = parts
-  override def getPartition(key: Any): Int =
-    math.min(key.asInstanceOf[Long] / window / per, parts - 1L).toInt
-  /** Number of blocks partition `p` covers. */
-  def blocks(p: Int): Long = math.max(0L, math.min(per, totalBlocks - p * per))
-}
-
 /** Source factories (SURVEY.md §2.1). */
 object DIA {
 
@@ -647,16 +544,6 @@ object DIA {
   /** One aligned block as the user-facing Seq, without a copy. */
   private def elems[T](block: Array[Any]): Seq[T] =
     ArraySeq.unsafeWrapArray(block).asInstanceOf[Seq[T]]
-
-  /** The next `w` rows of one input's sorted partition stream; a present
-    * `pad` fills the rows past its end.
-    */
-  private def block(it: Iterator[(Long, Any)], w: Int, pad: Option[Any]): Array[Any] = {
-    val b = new Array[Any](w)
-    var j = 0
-    while (j < w) { b(j) = if (pad.isEmpty || it.hasNext) it.next()._2 else pad.get; j += 1 }
-    b
-  }
 
   /** ReducePair (thrill/api/reduce_by_key.hpp:368-463): ReduceByKey
     * specialization for DIA[(K,V)] reducing only the value.

@@ -18,32 +18,25 @@ import scala.reflect.ClassTag
   */
 private[graft] object BoundaryExchange {
 
-  /** For every partition p of `rdd`, deliver the min(k-1, start_p) rows
+  /** For every partition p of `rdd`, deliver the min(k-1, starts(p)) rows
     * immediately preceding p's first row in global order, as an RDD
     * aligned with `rdd`'s partitioning (partition p holds p's predecessor
-    * rows, ascending). Also returns the exclusive per-partition start
-    * offsets (length #partitions + 1; last entry = total row count).
+    * rows, ascending). `starts` are the exclusive per-partition start
+    * offsets (length #partitions + 1; last entry = total row count), from
+    * the caller's own metadata pass.
     *
-    * Pass structure: one metadata pass (counts), one tail pass feeding the
-    * keyed shuffle. Rows can be needed by several successors when
-    * intermediate partitions hold fewer than k-1 rows; the emit loop walks
-    * the start-offset array, so that case costs exactly the extra copies
-    * it requires and nothing more.
+    * One tail pass feeds the keyed shuffle; no job runs here. Rows can be
+    * needed by several successors when intermediate partitions hold fewer
+    * than k-1 rows; the emit loop walks the start-offset array, so that
+    * case costs exactly the extra copies it requires and nothing more.
     */
-  def predecessors[T: ClassTag](rdd: RDD[T], k: Int): (Array[Long], RDD[T]) = {
+  def predecessors[T: ClassTag](rdd: RDD[T], starts: Array[Long], k: Int): RDD[T] = {
     require(k >= 1, s"window size must be >= 1, got $k")
-    val sc = rdd.sparkContext
-    val counts = rdd
-      .mapPartitionsWithIndex { (pid, it) => Iterator((pid, it.size.toLong)) }
-      .collect().sortBy(_._1).map(_._2)
-    val starts = counts.scanLeft(0L)(_ + _)
-    val parts = counts.length
-    if (parts == 0) return (starts, rdd) // zero-partition RDD: nothing to ship
-    val bcStarts = sc.broadcast(starts)
+    val parts = starts.length - 1
+    if (parts == 0) return rdd // zero-partition RDD: nothing to ship
     val km1 = (k - 1).toLong
     val emitted: RDD[((Int, Long), T)] = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val st = bcStarts.value
-      val cnt = st(pid + 1) - st(pid)
+      val cnt = starts(pid + 1) - starts(pid)
       // only the last k-1 rows of a partition can precede any successor's
       // first row — skip the rest without touching them
       val from = math.max(0L, cnt - km1)
@@ -52,11 +45,11 @@ private[graft] object BoundaryExchange {
         li += 1
         if (li < from) Iterator.empty
         else {
-          val g = st(pid) + li
-          // successors q need global indices [st(q) - (k-1), st(q))
+          val g = starts(pid) + li
+          // successors q need global indices [starts(q) - (k-1), starts(q))
           val buf = new ArrayBuffer[((Int, Long), T)](2)
           var q = pid + 1
-          while (q < st.length - 1 && st(q) <= g + km1) {
+          while (q < parts && starts(q) <= g + km1) {
             buf += (((q, g), t))
             q += 1
           }
@@ -68,7 +61,15 @@ private[graft] object BoundaryExchange {
       def numPartitions: Int = parts
       def getPartition(key: Any): Int = key.asInstanceOf[(Int, Long)]._1
     }
-    val boundary = emitted.repartitionAndSortWithinPartitions(byTarget).map(_._2)
-    (starts, boundary)
+    emitted.repartitionAndSortWithinPartitions(byTarget).map(_._2)
+  }
+
+  /** [[predecessors]] for a caller without a metadata pass of its own:
+    * counts the partitions in one job first and returns their start
+    * offsets with the boundary rows.
+    */
+  def predecessors[T: ClassTag](rdd: RDD[T], k: Int): (Array[Long], RDD[T]) = {
+    val starts = rdd.mapPartitions(it => Iterator(it.size.toLong)).collect().scanLeft(0L)(_ + _)
+    (starts, predecessors(rdd, starts, k))
   }
 }

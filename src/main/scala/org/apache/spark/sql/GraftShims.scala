@@ -29,20 +29,15 @@ object GraftColumnShim {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
+}
 
-  /** Materialize a DataFrame (cache + lineage truncation) AND return its
-    * row count in ONE job — `localCheckpoint()` + `count()` costs two.
-    * Iterative drivers (BFS & friends) use the count as their per-round
-    * termination test, so this halves their fixed per-round job cost.
-    * The InternalRow copy is required before caching (the scan reuses row
-    * buffers); blocks are reclaimed by the ContextCleaner when the
-    * returned frame's lineage goes unreachable.
-    */
-  def materializeWithCount(df: DataFrame): (DataFrame, Long) = {
-    val cdf = df.asInstanceOf[classic.Dataset[Row]]
-    val rdd = cdf.queryExecution.toRdd.map(_.copy())
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = rdd.count()
-    (cdf.sparkSession.internalCreateDataFrame(rdd, df.schema), n)
-  }
+/** Bridge for DataFrames over Catalyst's binary rows, which Spark 4 keeps
+  * private[sql]. The ordered DataFrame operators (graft.operators.Positional)
+  * cache and shuffle `InternalRow`s and hand them back here, so no row is
+  * converted to or from an external `Row`.
+  */
+object GraftRowShim {
+  def createFrame(spark: SparkSession, rows: org.apache.spark.rdd.RDD[catalyst.InternalRow],
+      schema: types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }

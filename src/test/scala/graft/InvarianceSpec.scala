@@ -2,6 +2,7 @@ package graft
 
 import graft.dia.DIA
 import graft.dia.DIA.PairDIAOps
+import graft.operators.Positional
 
 /** Partition-count invariance — the reference's core correctness idea
   * (RunLocalTests runs every job over a matrix of 1..8 simulated workers,
@@ -190,6 +191,65 @@ class InvarianceSpec extends SparkSpec {
     assert(shuffles(a.zipWindowAll(Seq(b, c, a), Seq(5, 3, 2, 4))(_.map(_.sum).sum)) === 4,
       "zipWindowAll: one per input")
     assert(shuffles(a.concat(b)) === 0, "concat: zero shuffles")
+  }
+
+  test("Positional zip and rebalance lineages shuffle once per input") {
+    // the DataFrame ops share DIA's aligned scatter: a regression to
+    // index joins or repartitionByRange shows as SQL exchanges instead
+    def shuffles(df: org.apache.spark.sql.DataFrame): Int =
+      df.rdd.toDebugString.linesIterator.count(_.contains("ShuffledRDD"))
+    val a = spark.range(0, 500, 1, 4).toDF("x")
+    val b = spark.range(0, 300, 1, 3).toDF("y")
+    val c = spark.range(0, 200, 1, 5).toDF("z")
+    assert(shuffles(Positional.zipByIndex(a, b)) === 2, "zipByIndex cut: one per input")
+    assert(shuffles(Positional.zipByIndex(a, b, pad = true)) === 2, "zipByIndex pad")
+    assert(shuffles(Positional.zipAllByIndex(Seq(a, b, c), cut = true)) === 3,
+      "zipAllByIndex: one per input")
+    assert(shuffles(Positional.rebalance(a, 3)) === 1, "rebalance: one")
+  }
+
+  test("Positional DataFrame ops match a Seq model at any partition count") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    // range-partitioned and sorted: partition order is value order
+    def ordered(xs: Seq[Long], name: String, p: Int): DataFrame =
+      xs.toDF(name).repartitionByRange(p, col(name)).sortWithinPartitions(name)
+    def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().toSeq.map(_.toSeq)
+    def byFirst(df: DataFrame): Seq[Seq[Any]] = rows(df).sortBy(_.head.asInstanceOf[Long])
+    /** (idx, value of each input), cut to the shortest or padded with null */
+    def zipModel(cols: Seq[Seq[Long]], pad: Boolean): Seq[Seq[Any]] = {
+      val n = if (pad) cols.map(_.size).max else cols.map(_.size).min
+      (0 until n).map(i => i.toLong +: cols.map(c => if (i < c.size) c(i) else null))
+    }
+    val xs = (0L until 40L).map(_ * 3)
+    val ys = (0L until 25L).map(_ * 7 + 1)
+    val zs = (0L until 31L).map(_ * 5 + 2)
+    val none = Seq.empty[Long]
+    for (p <- Seq(1, 3, 7)) {
+      val (x, y, z, e) =
+        (ordered(xs, "x", p), ordered(ys, "y", p), ordered(zs, "z", p), ordered(none, "e", p))
+      assert(byFirst(Positional.zipByIndex(x, y)) === zipModel(Seq(xs, ys), pad = false),
+        s"parts=$p zipByIndex cut")
+      assert(byFirst(Positional.zipByIndex(x, y, pad = true)) === zipModel(Seq(xs, ys), pad = true),
+        s"parts=$p zipByIndex pad")
+      assert(byFirst(Positional.zipByIndex(e, x, pad = true)) === zipModel(Seq(none, xs), pad = true),
+        s"parts=$p zipByIndex pad, empty side")
+      assert(rows(Positional.zipByIndex(x, e)).isEmpty, s"parts=$p zipByIndex cut, empty side")
+      assert(byFirst(Positional.zipAllByIndex(Seq(x, y, z), cut = true)) ===
+        zipModel(Seq(xs, ys, zs), pad = false), s"parts=$p zipAllByIndex")
+      val cat = Positional.concatOrdered(
+        Seq(ordered(xs, "v", p), ordered(none, "v", p), ordered(ys, "v", p)), "pos")
+      assert(rows(cat).sortBy(_(1).asInstanceOf[Long]) ===
+        (xs ++ ys).zipWithIndex.map { case (v, i) => Seq(v, i.toLong) }, s"parts=$p concatOrdered")
+      assert(rows(Positional.prefixSumLong(x, "x", "s")) ===
+        xs.zip(xs.scanLeft(0L)(_ + _).tail).map { case (v, s) => Seq(v, s) },
+        s"parts=$p prefixSumLong")
+      assert(rows(Positional.prefixSumLong(e, "e", "s")).isEmpty, s"parts=$p prefixSumLong empty")
+      val reb = Positional.rebalance(x, 4)
+      assert(reb.rdd.getNumPartitions === 4, s"parts=$p rebalance partitions")
+      assert(rows(reb) === xs.map(Seq(_)), s"parts=$p rebalance")
+      assert(rows(Positional.rebalance(e, 4)).isEmpty, s"parts=$p rebalance empty")
+    }
   }
 
   test("mergeSortedNoResort equals mergeSorted across partitionings (dup keys incl.)") {

@@ -5,7 +5,7 @@ import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.dia.DIA
-import graft.operators.{ConnectedComponents, Jobs}
+import graft.operators.{ConnectedComponents, Jobs, Positional}
 
 /** The jobs an operator runs eagerly carry an `<operator>:<phase>`
   * description, and the caller's own description survives the call.
@@ -65,14 +65,49 @@ class JobNamesSpec extends SparkSpec {
     for ((op, run) <- Seq[(String, DIA[Long] => Any)](
         "prefixSum" -> (_.prefixSum(_ + _)),
         "window" -> (_.window(3)((_, w) => w.sum)),
-        "sample" -> (_.sample(10)))) {
+        "sample" -> (_.sample(10)),
+        "windowDisjoint" -> (_.windowDisjoint(3)((_, w) => w.sum)),
+        "sortStableBy" -> (_.sortStableBy(x => x % 7)),
+        "concat" -> (_.concat(shuffled)),
+        "zipLocal" -> (_.zipLocal(shuffled)(_ + _)))) {
       val jobs = jobsOf(run(shuffled))
       assert(jobs.size >= 2, s"$op: $jobs")
       assert(jobs.forall(_.startsWith("dia:")), s"$op: $jobs")
     }
+    // RunMerge names its own sampling job merge:range_sample
+    val mergeJobs = jobsOf(shuffled.merge(shuffled)(identity))
+    assert(mergeJobs.count(_ == "dia:merge_inputs") === 2, mergeJobs)
+    assert(mergeJobs.forall(j => j.startsWith("dia:") || j.startsWith("merge:")), mergeJobs)
+    // the DataFrame ops: an exchange job, then the op's own pass
+    def df(name: String) = spark.range(0, 120).select($"id".as(name)).repartition(3)
+    for ((op, run) <- Seq[(String, () => Any)](
+        "zipWithIndex" -> (() => Positional.zipWithIndex(df("v"))),
+        "prefixSumLong" -> (() => Positional.prefixSumLong(df("v"), "v", "s")),
+        "slidingSumLong" -> (() => Positional.slidingSumLong(df("v"), "v", 3, "s")),
+        "zipByIndex" -> (() => Positional.zipByIndex(df("v"), df("w"))),
+        "zipByIndex pad" -> (() => Positional.zipByIndex(df("v"), df("w"), pad = true)),
+        "zipAllByIndex" -> (() => Positional.zipAllByIndex(Seq(df("v"), df("w")))),
+        "concatOrdered" -> (() => Positional.concatOrdered(Seq(df("v"), df("v")))),
+        "rebalance" -> (() => Positional.rebalance(df("v"), 4)),
+        "mergeSortedNoResort" ->
+          (() => Positional.mergeSortedNoResort(Seq(df("v"), df("v")), Seq("v"))))) {
+      val jobs = jobsOf(run())
+      assert(jobs.size >= 2, s"$op: $jobs")
+      assert(jobs.forall(j => j.startsWith("positional:") || j.startsWith("merge:")),
+        s"$op: $jobs")
+    }
   }
 
-    test("the caller's job description is restored, also when the body throws") {
+  test("zip reads each input once before its output action") {
+    // no exchange below the inputs: every job is the zip's own
+    val a = DIA.generate(spark, 200L, numSlices = 3)(identity)
+    val b = DIA.generate(spark, 150L, numSlices = 2)(identity)
+    var zipped: DIA[Long] = null
+    assert(jobsOf { zipped = a.zip(b)(_ + _) } === Seq("dia:align_counts", "dia:align_counts"))
+    assert(zipped.allGather() === (0L until 150L).map(_ * 2))
+  }
+
+  test("the caller's job description is restored, also when the body throws") {
     val sc = spark.sparkContext
     sc.setJobDescription("caller")
     try {

@@ -150,4 +150,40 @@ class PositionalSpec extends SparkSpec {
     val got = Positional.rebalance(df, 5).collect().map(_.getLong(0))
     assert(got.toSeq === (0L until 200L).toSeq)
   }
+
+  test("rebalance rejects a partition count below one") {
+    for (n <- Seq(0, -1)) {
+      val ex = intercept[IllegalArgumentException](Positional.rebalance(longsDf(Seq(1L, 2L)), n))
+      assert(ex.getMessage.contains("must be positive"), s"numPartitions=$n")
+    }
+  }
+
+  test("row ops keep every column type, nulls and nesting included") {
+    // the kernels move Catalyst's binary rows: strings, decimals, dates,
+    // arrays, maps and structs must come out as they went in
+    val rows = (0 until 30).map { i =>
+      (i.toLong, if (i % 4 == 0) None else Some(s"s$i"), i / 3.0, BigDecimal(i) / 7,
+        java.sql.Date.valueOf(f"2024-01-${i % 28 + 1}%02d"), Seq.tabulate(i % 3)(_ * i),
+        Map(s"k$i" -> i), (i, s"n$i"), if (i % 5 == 0) None else Some(i))
+    }
+    val cols = Seq("k", "s", "d", "m", "dt", "arr", "mp", "st", "o")
+    val df = rows.toDF(cols: _*).repartitionByRange(4, col("k")).sortWithinPartitions("k")
+    def plain(d: org.apache.spark.sql.DataFrame, cs: Seq[String]): Seq[Seq[Any]] =
+      d.select(cs.map(col): _*).collect().toSeq.map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
+    val want = plain(df, cols)
+    assert(plain(Positional.rebalance(df, 3), cols) === want, "rebalance")
+    assert(plain(Positional.prefixSumLong(df, "k", "run"), cols) === want, "prefixSumLong")
+    assert(plain(Positional.slidingSumLong(df, "k", 2, "w"), cols) === want, "slidingSumLong")
+    assert(plain(Positional.concatOrdered(Seq(df, df), "pos").filter($"pos" < 30), cols) === want,
+      "concatOrdered")
+    val other = longsDf((0L until 40L).toSeq).toDF("v")
+    for (pad <- Seq(false, true)) {
+      val z = Positional.zipByIndex(df, other, pad = pad)
+      assert(z.schema.head.name === "idx" && !z.schema.head.nullable, s"pad=$pad idx")
+      assert(plain(z.filter($"k".isNotNull), cols) === want, s"pad=$pad zipByIndex")
+      assert(z.filter($"k".isNull).count() === (if (pad) 10 else 0), s"pad=$pad padded rows")
+    }
+    val all = Positional.zipAllByIndex(Seq(df, other), cut = true)
+    assert(plain(all, cols) === want, "zipAllByIndex")
+  }
 }

@@ -116,6 +116,23 @@ class ReleaseSpec extends SparkSpec {
     assert(Positional.concatOrdered(Seq(df, df)).count() === 10000L)
     awaitReleased(pre)
 
+    val other = df.select($"v".as("w"))
+    pre = persistedIds
+    assert(Positional.zipByIndex(df, other).count() === 5000L)
+    awaitReleased(pre)
+
+    pre = persistedIds
+    assert(Positional.zipByIndex(df, other.limit(100), pad = true).count() === 5000L)
+    awaitReleased(pre)
+
+    pre = persistedIds
+    assert(Positional.zipAllByIndex(Seq(df, other)).count() === 5000L)
+    awaitReleased(pre)
+
+    pre = persistedIds
+    assert(Positional.rebalance(df, 3).count() === 5000L)
+    awaitReleased(pre)
+
     // cached DATASET release (the q_pipeline shape): persist, consume, gone
     pre = persistedIds
     val cached = df.withColumn("w", $"v" * 2).persist()
