@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Operator micro-benchmarks that the open ROADMAP directions still
-  * measure: `cc` (the connected-components broadcast/exchange crossover at
-  * 1M edges), `jaccard_gate` (the verification phase anatomy),
+  * measure: `cc` (connected components at 1M edges, the round shape's
+  * large-graph reading), `jaccard_gate` (the verification phase anatomy),
   * `spanappendc` (the census append against the legacy append) and
   * `spanappendchain` (chain growth). Each arm times alternative plans for
   * one result on the given SF dir (median of 3 runs after one warm-up,
@@ -47,7 +47,7 @@ object MicroBench {
     // connected components at 1M edges: 100k chains of length 10 (depth
     // stresses round count) + a 100k-edge star (degree stresses the
     // no-neighborhood-materialization property). Wall time ~log rounds
-    // of 2 aggregates + 2 joins each.
+    // of 2 window minima and a distinct each.
     val chains = spark.range(900000).select(
       (col("id") + 100000L).as("src"),
       when(col("id") % 9 === 0, col("id") / 9)

@@ -965,13 +965,13 @@ object Dedup {
     * (sets carries shingle ARRAYS — DISK_ONLY per the SCALE.md r10
     * rule); released by PLAN CONTAINMENT (the consuming-action variant),
     * NOT the unconditional next-action variant: the clusters consumer's
-    * CC rounds DO fire Dataset actions (the signature `agg().head()` and
-    * the fixed-point `except().isEmpty`) — but over per-round
-    * materialized LogicalRDD leaves, whose plans do not contain these
-    * frames, so containment correctly waits for the caller's real
-    * consuming action (round-13 fix: the unconditional variant released
-    * all four snapshots on the first CC signature, and the final action
-    * silently recomputed the banding, shingle sets, and star verify).
+    * CC fires a Dataset action (the fixed-point confirmation's `isEmpty`)
+    * — but over per-round materialized LogicalRDD leaves, whose plans do
+    * not contain these frames, so containment correctly waits for the
+    * caller's real consuming action (round-13 fix: the unconditional
+    * variant released all four snapshots on the first CC action, and the
+    * final action silently recomputed the banding, shingle sets, and star
+    * verify).
     */
   private[graft] def stagedRepParts(df: DataFrame, idCol: String,
       textCol: String, threshold: Double, numHashes: Int, bands: Int,

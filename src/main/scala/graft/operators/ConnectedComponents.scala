@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftRowShim}
+import org.apache.spark.sql.catalyst.expressions.{UnsafeRow, XXH64}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -22,31 +24,25 @@ import org.apache.spark.storage.StorageLevel
   * components are shallow).
   *
   * 100 TB posture:
-  *  - Neighborhoods are NEVER materialized: each star op is a hash
-  *    aggregate (min per node) plus an equi-join of the edge list against
-  *    that O(#nodes) minimum table — no `collect_list`, so a celebrity node
-  *    with 10⁸ neighbors costs a mergeable `min`, not an array build.
-  *  - Only (node, label) pairs ever shuffle. Per round (r17): ONE
-  *    shuffle of the bidirectional edge set (ReuseExchange serves both
-  *    the min-aggregate and the join probe from it), one of the
-  *    large-star output (again shared by aggregate and join), and one
-  *    dedup exchange at the round's end — large-star's intermediate
-  *    distinct is gone (duplicates are set-neutral for both star ops and
-  *    bounded at one row per input edge; small-star's trailing distinct
-  *    re-establishes set semantics every round).
-  *    (Chaining TWO rounds into one action was tried and REJECTED in r17:
-  *    a star op references its input through exchanges that differ by
-  *    partial-aggregate placement, so across a round boundary nothing
-  *    reuses and a chained round recomputes its predecessor — measured
-  *    2.4× slower on the 1M-edge microbench. One materialized round per
-  *    action is the floor.)
-  *  - Convergence is detected with an O(1)-row signature per round
-  *    (edge count + `bit_xor` of `xxhash64(u, v)` — order-independent,
-  *    overflow-free) and then CONFIRMED exactly on the round where the
-  *    signature says "fixed point": a single tagged-union symmetric-diff
-  *    job (r17, replacing the two-sided `except` pair), so the
-  *    probabilistic check can never return a wrong answer, only (with
-  *    probability ~2⁻⁶⁴) one wasted extra round.
+  *  - Neighborhoods are NEVER materialized as values: each star op is a
+  *    window minimum over the edges partitioned by node (`min(v) over
+  *    (partition by u)`), so a celebrity node's neighbors stream through
+  *    one task's spillable window buffer, never into an array.
+  *  - A round has ONE physical shape at every size, with no join and no
+  *    broadcast: one shuffle of the bidirectional edges on the node key
+  *    (large-star's window), one of the oriented large-star output
+  *    (small-star's window) and the round's trailing `distinct`. Only
+  *    (node, node) pairs ever shuffle. Duplicates out of large-star are
+  *    set-neutral for small-star, whose `distinct` re-establishes set
+  *    semantics every round.
+  *  - Each round runs one job of its own: it fills the round's cache from
+  *    the plan's binary rows and, in the same pass, folds every partition
+  *    to (row count, xor of a 64-bit hash of the row bytes) — the round's
+  *    order-independent signature (Thrill's several-actions-in-one-pass).
+  *    The round where the signature says "fixed point" is CONFIRMED
+  *    exactly by one tagged-union symmetric-diff job, so the probabilistic
+  *    check can never return a wrong answer, only (with probability
+  *    ~2⁻⁶⁴) one wasted extra round.
   *  - Each round's edge set is persisted and the previous round's released
   *    immediately; `checkpointEvery` additionally writes a reliable
   *    checkpoint of the edge RDD every N rounds (when the session
@@ -60,91 +56,37 @@ import org.apache.spark.storage.StorageLevel
   */
 object ConnectedComponents {
 
-  /** (count, xor-of-hash) signature of an edge set — order-independent and
-    * collision-safe enough to gate the single exact confirmation.
-    */
-  private def signature(e: DataFrame): (Long, Long) = {
-    val r = Jobs.named(e.sparkSession.sparkContext, "cc:signature")(
-      e.agg(count(lit(1)).as("n"),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("x")).head())
-    (r.getLong(0), r.getLong(1))
-  }
+  private val byNode = Window.partitionBy("u")
 
   /** large-star: for each node u, every strictly-larger neighbor is
     * re-pointed at min(N(u) ∪ {u}). Output edges are (larger, smaller),
-    * never self-loops.
-    *
-    * r17 (guide §2.4): NO trailing distinct — the output may carry
-    * duplicate (u, v) rows (at most one per input edge, so volume stays
-    * bounded by the round's input), and [[smallStar]]'s trailing
-    * distinct re-establishes set semantics at the end of every round.
-    * The separate dedup exchange this replaces shuffled the full edge
-    * set once more per round; duplicates are set-neutral for both star
-    * ops (min is idempotent, the joins key on the same rows).
+    * never self-loops, and may repeat (at most one row per input edge).
     */
-  /** Round-shape dispatch bound (r17): at or below this many edges the
-    * per-node minimum table is BROADCAST into the star joins — the edge
-    * set then never fully shuffles before the round's dedup (the only
-    * full-edge exchange left in a round), which is the winning shape at
-    * gate scale where every frame is broadcast-sized anyway. Above it,
-    * one explicit hash exchange on the node key feeds both the
-    * min-aggregate and the join probe (guide §2.4) — the winning shape
-    * at scale, where the min table is O(#nodes) and must not be
-    * collected. 200k edges bounds the broadcast relation at ~400k node
-    * rows (~6 MB — the autoBroadcastJoinThreshold ballpark); measured
-    * crossover: at 1M edges the broadcast arm's per-round driver
-    * round-trip already loses to the shared exchange (24.0 vs 15.3 s
-    * median on the chains+star microbench), while the sf0.1 cluster
-    * gates (hundreds of edges) lose ~2× under the exchange arm. The
-    * exact edge count is free each round: the convergence signature
-    * already counts it.
-    */
-  private[graft] val BroadcastMinMaxEdges = 200L * 1000
-
-  private def largeStar(e: DataFrame, broadcastMin: Boolean): DataFrame = {
-    // Large arm: ONE explicit hash exchange on the node key feeds BOTH
-    // the min-aggregate and the join probe (guide §2.4: repartition(k) +
-    // groupBy(k)/join(k) share the exchange — the aggregate runs
-    // exchange-free above it, the join sees both sides co-partitioned,
-    // and ReuseExchange serves the two consumers from one shuffle). The
-    // historical shape shuffled bidir twice per round (the agg's
-    // partial-aggregate exchange and the join's plain exchange are
-    // different subtrees, so nothing reused).
-    val bidir0 = e.select(col("u"), col("v"))
+  private def largeStar(e: DataFrame): DataFrame =
+    e.select(col("u"), col("v"))
       .union(e.select(col("v").as("u"), col("u").as("v")))
-    val bidir = if (broadcastMin) bidir0 else bidir0.repartition(col("u"))
-    val m = bidir.groupBy("u").agg(min(col("v")).as("mv"))
-      .select(col("u"), least(col("mv"), col("u")).as("m"))
-    bidir.join(if (broadcastMin) broadcast(m) else m, "u")
+      .select(col("u"), col("v"), min(col("v")).over(byNode).as("m"))
       .filter(col("v") > col("u"))
-      .select(col("v").as("u"), col("m").as("v"))
-  }
+      .select(col("v").as("u"), least(col("m"), col("u")).as("v"))
 
   /** small-star: edges oriented (big → small); each node's smaller
     * neighbors (and the node itself) are pointed at the minimum.
     */
-  private def smallStar(e: DataFrame, broadcastMin: Boolean): DataFrame = {
-    // same shape dispatch as [[largeStar]]
-    val or0 = e.select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
+  private def smallStar(e: DataFrame): DataFrame =
+    e.select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
       .filter(col("u") =!= col("v"))
-    val or = if (broadcastMin) or0 else or0.repartition(col("u"))
-    val m = or.groupBy("u").agg(min(col("v")).as("m"))
-    val fromNbrs = or.join(if (broadcastMin) broadcast(m) else m, "u")
-      .filter(col("v") =!= col("m"))
-      .select(col("v").as("u"), col("m").as("v"))
-    val fromSelf = m.select(col("u"), col("m").as("v"))
-    fromNbrs.union(fromSelf).distinct()
-  }
+      .select(col("u"), col("v"), min(col("v")).over(byNode).as("m"))
+      .selectExpr("stack(2, v, m, u, m) AS (u, v)")
+      .filter(col("u") =!= col("v"))
+      .distinct()
 
-  /** Plan-evidence hook (r17): the ONE-ROUND plan for a given edge frame
-    * and shape arm, exactly as the convergence loop builds it — lets
-    * PlanInvariantsSpec pin the exchange counts and the plans/r17 dumps
-    * show the round shape (the loop runs eagerly inside query builders,
-    * so gate-level explains never contain it).
+  /** Plan-evidence hook: the ONE-ROUND plan for a given edge frame,
+    * exactly as the convergence loop builds it — lets PlanInvariantsSpec
+    * pin its exchange counts and ConnectedComponentsSpec check it against
+    * a local model (the loop runs eagerly inside query builders, so
+    * gate-level explains never contain it).
     */
-  private[graft] def roundFor(e: DataFrame, broadcastMin: Boolean): DataFrame =
-    smallStar(largeStar(e, broadcastMin), broadcastMin)
+  private[graft] def roundFor(e: DataFrame): DataFrame = smallStar(largeStar(e))
 
   /** Component labels for every node that appears in `edges`:
     * (id, component) with component = the minimum node id of the connected
@@ -168,62 +110,65 @@ object ConnectedComponents {
       dstCol: String = "dst", maxIter: Int = 25,
       checkpointEvery: Int = 0): (DataFrame, Int) = {
     val spark = edges.sparkSession
+    val sc = spark.sparkContext
     // Each round MUST cut logical-plan lineage, not just cache data: a
-    // star op references its input ~4× (bidir union + min-table join), so
-    // a plan chained over k rounds has O(16^k) tree nodes — analysis cost
-    // explodes long before the data does. Materializing to a persisted
-    // RDD[Row] and re-wrapping with createDataFrame makes every round a
-    // leaf scan (the DataFrame analog of the reference's per-stage DIA
-    // materialization), and gives an explicit unpersist handle per round.
-    // with AQE on, `df.rdd` runs the plan's exchanges as jobs right here
-    def materialize(df: DataFrame) = {
-      val rdd = Jobs.named(spark.sparkContext, "cc:materialize")(df.rdd)
+    // round plan references its input twice (large-star's bidirectional
+    // union), so a plan chained over k rounds has O(2^k) leaves. The
+    // round's binary rows are persisted and re-wrapped as a leaf scan
+    // (the DataFrame analog of the reference's per-stage DIA
+    // materialization), with an explicit unpersist handle per round.
+    // Building the rows runs the plan's exchanges as jobs (AQE); the one
+    // `cc:round` job then fills the cache and signs the edge set.
+    def materialize(df: DataFrame, checkpoint: Boolean) = {
+      val rows = Jobs.named(sc, "cc:materialize")(Positional.rowsOf(df))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      (rdd, spark.createDataFrame(rdd, df.schema))
+      // marked BEFORE the job, so the persisted blocks feed the write
+      if (checkpoint) rows.checkpoint()
+      // rowsOf yields UnsafeRows, whose writer zeroes unused bytes, so
+      // equal edges of one schema hash equal
+      val sig = Jobs.named(sc, "cc:round")(rows.mapPartitions { it =>
+        var (n, x) = (0L, 0L)
+        it.foreach { case r: UnsafeRow =>
+          n += 1; x ^= XXH64.hashUnsafeBytes(r.getBaseObject, r.getBaseOffset, r.getSizeInBytes, 42L)
+        }
+        Iterator((n, x))
+      }.collect()).foldLeft((0L, 0L))((a, b) => (a._1 + b._1, a._2 ^ b._2))
+      (rows, GraftRowShim.createFrame(spark, rows, df.schema), sig)
     }
-    var (eRdd, e) = materialize(
+    var (eRows, e, sig) = materialize(
       edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-        .filter(col("u") =!= col("v")).distinct())
-    var sig = signature(e)
+        .filter(col("u") =!= col("v")).distinct(), checkpoint = false)
     var converged = false
     var it = 0
     while (!converged && it < maxIter) {
-      // the signature's exact edge count picks this round's shape —
-      // broadcast-min under BroadcastMinMaxEdges, shared-exchange above
-      val bcast = sig._1 <= BroadcastMinMaxEdges
-      val (nRdd, next) = materialize(smallStar(largeStar(e, bcast), bcast))
-      // reliable checkpoint every N rounds: marked BEFORE the signature
-      // action so the persisted blocks (not a recompute) feed the write
-      if (checkpointEvery > 0 && (it + 1) % checkpointEvery == 0 &&
-          spark.sparkContext.getCheckpointDir.isDefined)
-        nRdd.checkpoint()
-      val nsig = signature(next)
+      val (nRows, next, nsig) = materialize(roundFor(e), checkpointEvery > 0 &&
+        (it + 1) % checkpointEvery == 0 && sc.getCheckpointDir.isDefined)
       if (nsig == sig) {
         // exact confirmation: both sides are distinct sets (each round
         // ends in smallStar's dedup), so ONE tagged-union symmetric-diff
-        // job replaces the historical two-sided `except` pair (r17); it
-        // runs only on the (normally unique) signature-match round.
-        converged = Jobs.named(spark.sparkContext, "cc:confirm")(next
+        // job decides; it runs only on the (normally unique)
+        // signature-match round.
+        converged = Jobs.named(sc, "cc:confirm")(next
           .select(col("u"), col("v"), lit(1L).as("__t"))
           .unionByName(e.select(col("u"), col("v"), lit(-1L).as("__t")))
           .groupBy(col("u"), col("v")).agg(sum(col("__t")).as("__s"))
           .filter(col("__s") =!= 0L)
           .isEmpty)
       }
-      eRdd.unpersist(blocking = false)
-      eRdd = nRdd; e = next; sig = nsig; it += 1
+      eRows.unpersist(blocking = false)
+      eRows = nRows; e = next; sig = nsig; it += 1
     }
     if (!converged) {
-      eRdd.unpersist(blocking = false)
+      eRows.unpersist(blocking = false)
       throw new IllegalStateException(
         s"connectedComponents: no fixed point within $maxIter rounds " +
           "(bound is O(log² n) — raise maxIter for astronomically deep graphs)")
     }
-    val roundsAcc = spark.sparkContext.longAccumulator("graft.cc.rounds")
+    val roundsAcc = sc.longAccumulator("graft.cc.rounds")
     roundsAcc.add(it.toLong)
     // At the fixed point the edge set is disjoint stars (child → root):
     // every child labels itself with its root, every root with itself.
-    Release.afterNextAction(spark, eRdd)
+    Release.afterNextAction(spark, eRows)
     (e.select(col("u").as("id"), col("v").as("component"))
       .union(e.select(col("v").as("id"), col("v").as("component")))
       .distinct(), it)

@@ -30,9 +30,9 @@ import scala.reflect.ClassTag
   *  - [[alignedBlocks]] is the aligned scatter under every shuffling zip,
   *    zipWindow and rebalance, keyed from its per-partition counts;
   *  - the sliding windows hand its counts to
-  *    [[BoundaryExchange.predecessors]]; sample and concat use them as is.
-  * `zipWithIndex` stays on Spark's `RDD.zipWithIndex` (no cache). The
-  * DataFrame ops read, cache and shuffle Catalyst's binary rows
+  *    [[BoundaryExchange.predecessors]]; zipWithIndex, sample and concat
+  *    use them as is.
+  * The DataFrame ops read, cache and shuffle Catalyst's binary rows
   * ([[rowsOf]], [[IndexedRowSerializer]]) and build their output from
   * them, so no row is converted to an external `Row` and back.
   *
@@ -184,7 +184,7 @@ object Positional {
     * the rows. Building the RDD runs the plan's exchanges, so call it
     * inside a named step ([[summarize]]'s `input` is one).
     */
-  private def rowsOf(df: DataFrame): RDD[InternalRow] = {
+  private[graft] def rowsOf(df: DataFrame): RDD[InternalRow] = {
     val schema = df.schema
     df.queryExecution.toRdd.mapPartitions { it =>
       lazy val toUnsafe = UnsafeProjection.create(schema)
@@ -201,15 +201,18 @@ object Positional {
     GraftRowShim.createFrame(df.sparkSession, rows, schema)
 
   /** Attach a stable global index to the DataFrame's current row order.
-    * Mirrors ZipWithIndex (thrill/api/zip_with_index.hpp:38-179): a first
-    * pass counts per-partition rows, an exclusive prefix sum gives each
-    * partition its offset (done inside RDD.zipWithIndex), a second pass
-    * emits (row, offset + local index). Order is only meaningful if the
-    * input is range-partitioned+sorted (e.g. after orderBy).
+    * Mirrors ZipWithIndex (thrill/api/zip_with_index.hpp:38-179):
+    * [[summarize]] counts per-partition rows while it caches them, an
+    * exclusive prefix sum gives each partition its offset, and the output
+    * pass re-reads the cache, emitting (row, offset + local index). Order
+    * is only meaningful if the input is range-partitioned+sorted (e.g.
+    * after orderBy).
     */
   def zipWithIndex(df: DataFrame, idxName: String = "idx"): DataFrame = {
-    val rows = named(df, "zip_with_index")(rowsOf(df).zipWithIndex()).map((appendLong _).tupled)
-    frame(df, rows, df.schema.add(idxName, LongType, nullable = false))
+    val (rdd, counts) =
+      summarize(df.sparkSession, "positional:zip_with_index")(rowsOf(df))(_.size.toLong)
+    frame(df, indexed(rdd, starts(counts))(appendLong),
+      df.schema.add(idxName, LongType, nullable = false))
   }
 
   /** Inclusive running sum of a Long column in the DataFrame's current row

@@ -46,11 +46,21 @@ class ConnectedComponentsSpec extends SparkSpec {
     }
   }
 
-  test("exchange and broadcast round arms agree on every round") {
-    // the loop only takes the shared-exchange arm above
-    // BroadcastMinMaxEdges, which no gate-scale graph reaches: run both
-    // arms side by side on each round of a seeded random graph (the
-    // union-find oracle above covers the broadcast arm's labels)
+  /** One large-star∘small-star round over a local edge set (Kiveris et
+    * al.): the model `roundFor` must reproduce exactly.
+    */
+  private def modelRound(e: Set[(Long, Long)]): Set[(Long, Long)] = {
+    def mins(es: Iterable[(Long, Long)]) =
+      es.groupBy(_._1).map { case (u, ns) => u -> ns.map(_._2).min }
+    val bidir = e.toSeq.flatMap { case (u, v) => Seq((u, v), (v, u)) }
+    val m1 = mins(bidir)
+    val large = bidir.collect { case (u, v) if v > u => (v, math.min(m1(u), u)) }
+    val or = large.map { case (u, v) => (math.max(u, v), math.min(u, v)) }.filter(p => p._1 != p._2)
+    val m2 = mins(or)
+    or.flatMap { case (u, v) => Seq((v, m2(u)), (u, m2(u))) }.filter(p => p._1 != p._2).toSet
+  }
+
+  test("roundFor equals a local large-star/small-star model on every round") {
     val rnd = new scala.util.Random(7)
     val edges = Seq.fill(300)((rnd.nextLong(250), rnd.nextLong(250)))
       .filter { case (a, b) => a != b }.distinct
@@ -58,19 +68,34 @@ class ConnectedComponentsSpec extends SparkSpec {
     var rounds = 0
     var fixed = false
     while (!fixed) {
-      val e = cur.toSeq.toDF("u", "v")
-      val viaExchange = ConnectedComponents.roundFor(e, broadcastMin = false)
-        .as[(Long, Long)].collect().toSet
-      val viaBroadcast = ConnectedComponents.roundFor(e, broadcastMin = true)
-        .as[(Long, Long)].collect().toSet
+      val got = ConnectedComponents.roundFor(cur.toSeq.toDF("u", "v"))
+        .as[(Long, Long)].collect()
       rounds += 1
-      assert(viaExchange === viaBroadcast, s"arms diverge in round $rounds")
-      fixed = viaExchange == cur
-      cur = viaExchange
+      assert(got.length === got.distinct.length, s"duplicate edges in round $rounds")
+      assert(got.toSet === modelRound(cur), s"round $rounds diverges from the model")
+      fixed = got.toSet == cur
+      cur = got.toSet
       assert(rounds <= 25, "no fixed point within 25 rounds")
     }
     assert(rounds >= 3, s"graph converged in $rounds rounds — fixture " +
       "no longer exercises multi-round contraction")
+  }
+
+  test("labels over String and Int ids match union-find") {
+    val rnd = new scala.util.Random(11)
+    val edges = Seq.fill(120)((rnd.nextInt(150).toLong, rnd.nextInt(150).toLong))
+      .filter { case (a, b) => a != b }
+    val expected = unionFind(150, edges)
+    val ints = ConnectedComponents.labels(edges.map(p => (p._1.toInt, p._2.toInt))
+      .toDF("src", "dst")).as[(Int, Int)].collect().toMap
+    assert(ints.map { case (k, c) => k.toLong -> c.toLong } === expected)
+    // zero-padded names order like their numbers, so the component
+    // minimum is the same node; ids of different lengths exercise the
+    // variable-length part of the row bytes the round signature hashes
+    def name(i: Long) = if (i % 2 == 0) f"n$i%04d" else f"n$i%04d-odd"
+    val strs = ConnectedComponents.labels(edges.map(p => (name(p._1), name(p._2)))
+      .toDF("src", "dst")).as[(String, String)].collect().toMap
+    assert(strs === expected.map { case (k, c) => name(k) -> name(c) })
   }
 
   test("checkpointEvery bounds lineage on a deep-chain graph") {

@@ -55,7 +55,12 @@ class JobNamesSpec extends SparkSpec {
     val ccJobs = jobsOf(ConnectedComponents.labelsWithRounds(edges))
     assert(ccJobs.nonEmpty)
     assert(ccJobs.forall(_.startsWith("cc:")), ccJobs)
-    assert(ccJobs.contains("cc:signature") && ccJobs.contains("cc:confirm"), ccJobs)
+    // the 9-edge chain: the initial distinct's exchange and its cc:round,
+    // then 5 rounds of 3 exchanges and one cc:round each, and the
+    // confirmation's 2 jobs
+    assert(ccJobs.size === 24, ccJobs)
+    assert(ccJobs.count(_ == "cc:round") === 6, ccJobs)
+    assert(ccJobs.contains("cc:confirm") && !ccJobs.contains("cc:signature"), ccJobs)
   }
 
   test("scan, window and sample over a shuffled input name its exchange jobs too") {

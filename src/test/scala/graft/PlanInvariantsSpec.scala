@@ -29,31 +29,30 @@ class PlanInvariantsSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
-  test("connected-components round arms keep their exchange counts") {
+  test("a connected-components round has one shape: three shuffles, no broadcast") {
     // the round loop runs eagerly inside the cluster gates' builders, so
-    // the sweep above never sees a round plan; pin both arms of
-    // ConnectedComponents.roundFor on the static plan (AQE and
-    // auto-broadcast off, so only the arm's own broadcast hints apply)
+    // the sweep above never sees a round plan; pin
+    // ConnectedComponents.roundFor on the static plan (AQE off) with
+    // auto-broadcast at its default and disabled: the shape must not
+    // depend on it
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
       ReusedExchangeExec, ShuffleExchangeExec}
     val bcKey = "spark.sql.autoBroadcastJoinThreshold"
     val bcWas = spark.conf.getOption(bcKey)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set(bcKey, "-1")
     try {
       val e = spark.range(1000).selectExpr("id + 1 AS u", "id div 3 AS v")
-      def exchanges(broadcastMin: Boolean): (Int, Int, Int) = {
-        val p = graft.operators.ConnectedComponents
-          .roundFor(e, broadcastMin).queryExecution.executedPlan
+      // (shuffle, broadcast, reused) exchanges
+      def exchanges(): (Int, Int, Int) = {
+        val p = graft.operators.ConnectedComponents.roundFor(e).queryExecution.executedPlan
         (p.collect { case _: ShuffleExchangeExec => 1 }.size,
           p.collect { case _: BroadcastExchangeExec => 1 }.size,
           p.collect { case _: ReusedExchangeExec => 1 }.size)
       }
-      // (shuffle, broadcast, reused) exchanges
-      assert(exchanges(broadcastMin = false) === ((4, 0, 2)),
-        "shared-exchange arm")
-      assert(exchanges(broadcastMin = true) === ((3, 2, 2)),
-        "broadcast-min arm")
+      spark.conf.unset(bcKey)
+      assert(exchanges() === ((3, 0, 0)), "auto-broadcast at its default")
+      spark.conf.set(bcKey, "-1")
+      assert(exchanges() === ((3, 0, 0)), "auto-broadcast off")
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
       bcWas.fold(spark.conf.unset(bcKey))(spark.conf.set(bcKey, _))

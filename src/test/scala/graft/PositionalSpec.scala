@@ -17,6 +17,17 @@ class PositionalSpec extends SparkSpec {
     assert(got === Seq((10L, 0L), (20L, 1L), (30L, 2L), (40L, 3L), (50L, 4L)))
   }
 
+  test("zipWithIndex reads a shuffled input's rows once") {
+    // the accumulator counts rows on the repartition's reduce side; the
+    // metadata pass caches them, so the output action reads the cache
+    val seen = spark.sparkContext.longAccumulator("zip-with-index-rows")
+    val counted = udf { (v: Long) => seen.add(1); v }.asNondeterministic()
+    val df = spark.range(0, 1000).repartition(4).select(counted($"id").as("v"))
+    val got = Positional.zipWithIndex(df, "idx").collect().map(_.getLong(1)).sorted
+    assert(got.toSeq === (0L until 1000L))
+    assert(seen.value === 1000L)
+  }
+
   test("prefixSumLong matches scanLeft across many partitions") {
     val xs = (1L to 1000L).map(i => i % 17)
     val df = spark.createDataset(xs.indices.map(i => (i.toLong, xs(i)))).toDF("i", "v")

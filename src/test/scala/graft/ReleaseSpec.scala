@@ -116,6 +116,10 @@ class ReleaseSpec extends SparkSpec {
     assert(Positional.concatOrdered(Seq(df, df)).count() === 10000L)
     awaitReleased(pre)
 
+    pre = persistedIds
+    assert(Positional.zipWithIndex(df).count() === 5000L)
+    awaitReleased(pre)
+
     val other = df.select($"v".as("w"))
     pre = persistedIds
     assert(Positional.zipByIndex(df, other).count() === 5000L)
