@@ -83,17 +83,14 @@ object GraftSession {
     * each gate starts with clean block-manager state. Blocking: async
     * removal would overlap the next gate.
     *
-    * Tolerates the race with Release.afterNextAction's own (async)
-    * unpersist of the same RDDs: a block the listener already removed
-    * makes the blocking wait throw "Block does not exist" — stale-state
-    * noise, not a failure; unwrapped it killed the whole isolated-warm
-    * bench JVM (q_span_index_append, r14 sf1 column).
+    * The listener bus is drained first. [[graft.operators.Release]]
+    * unpersists with `blocking = true` on the bus thread, so once the
+    * drain returns every release the gate's action triggered is done,
+    * and none can overlap the removals below.
     */
   def reset(spark: SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values.foreach { r =>
-      try r.unpersist(blocking = true)
-      catch { case _: org.apache.spark.SparkException => }
-    }
+    org.apache.spark.sql.GraftBusShim.drain(spark)
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     spark.catalog.clearCache()
   }
 }

@@ -19,13 +19,21 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q3_top_orders")(spark, "/root/testdata/sf0.001")
 
+  /** Every gate builder runs inside one [[graft.operators.Release.scope]]:
+    * the caches its operators hold go at the first Dataset action on the
+    * returned frame (the harness's write, a test's count), never at an
+    * action the builder runs itself.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++
+    (graft.queries.Relational.queries ++
       graft.queries.PositionalQueries.queries ++
       graft.queries.TextQueries.queries ++
       graft.queries.CorpusQueries.queries ++
       graft.queries.SourceQueries.queries ++
-      graft.queries.FacadeQueries.queries
+      graft.queries.FacadeQueries.queries).map { case (name, build) =>
+        name -> ((spark: SparkSession, dir: String) =>
+          graft.operators.Release.scope(spark)(build(spark, dir)))
+      }
 
   def oracleSql: Map[String, String] =
     graft.queries.Relational.oracles ++

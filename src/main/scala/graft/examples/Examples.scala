@@ -51,6 +51,8 @@ object Examples {
             lit(damping) * coalesce(col("c"), lit(0.0))).as("rank"))
         .localCheckpoint()
     }
+    // the last checkpoint holds the ranks; nothing reads the caches now
+    nodes.unpersist(); adj.unpersist()
     ranks
   }
 
@@ -114,7 +116,9 @@ object Examples {
     val ab = e.select(col("src").as("a"), col("dst").as("b"))
     val bc = e.select(col("src").as("b"), col("dst").as("c"))
     val ac = e.select(col("src").as("a"), col("dst").as("c"))
-    ab.join(bc, "b").join(ac, Seq("a", "c")).count()
+    val n = ab.join(bc, "b").join(ac, Seq("a", "c")).count()
+    e.unpersist()
+    n
   }
 
   /** TeraSort shape (examples/terasort/terasort.cpp:186-199): global sort

@@ -89,7 +89,7 @@ object Corpus {
     val out = trainGrams.join(benchGrams, "gram")
       .groupBy(col(idCol))
       .agg(countDistinct(col("gram")).as("n_contaminated"))
-    graft.operators.Release.datasetAfterConsumingAction(benchGrams)
+    graft.operators.Release.hold(benchGrams)
     out
   }
 
@@ -467,7 +467,7 @@ object Corpus {
           array_sort(collect_list(when(col("__boiler").isNull,
             struct(col("chunk_idx"), col("chunk_text"))))),
           x => x.getField("chunk_text")), joinSep).as("clean_text"))
-    graft.operators.Release.datasetAfterConsumingAction(segs)
+    graft.operators.Release.hold(segs)
     // chunkDocs emits no rows for empty documents; restore them
     df.select(col(idCol)).join(rebuilt, Seq(idCol), "left")
       .select(col(idCol),
@@ -784,7 +784,7 @@ object Corpus {
           max(col("__c")).as("top_occ"))
         .withColumn("n", lit(n))
     val stats = ns.map(statsFor).reduce(_ unionByName _)
-    graft.operators.Release.datasetAfterConsumingAction(toks)
+    graft.operators.Release.hold(toks)
     // explode drops documents with no n-gram of some size; restore zeros
     val spine = df.select(col(idCol), Text.nTokens(col(textCol)).as("n_tokens"),
       explode(array(ns.map(lit(_)): _*)).as("n"))
@@ -1314,7 +1314,7 @@ object Corpus {
     val (toks, maskedPos) = maskedSpanPositions(df, idCol, textCol, n,
       minDocs, countOccurrences, broadcastDups)
     val out = rebuildCleanText(toks.join(maskedPos, Seq(idCol), "left"), idCol)
-    graft.operators.Release.datasetAfterConsumingAction(toks)
+    graft.operators.Release.hold(toks)
     out
   }
 
@@ -1442,7 +1442,7 @@ object Corpus {
       toks.join(maskedPos, Seq(idCol))
         .withColumn("__ps", array_sort(col("__mask"))),
       idCol)
-    graft.operators.Release.datasetAfterConsumingAction(toks)
+    graft.operators.Release.hold(toks)
     out
   }
 

@@ -322,22 +322,25 @@ object Dedup {
   def dupClusters(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, numHashes: Int = 96, bands: Int = 24,
       shingleSize: Int = 2, staged: Option[Boolean] = None): DataFrame =
-    if (useStaged(df, staged))
-      dupClustersStaged(df, idCol, textCol, threshold, numHashes, bands,
-        shingleSize)
-    else {
-      // all-pairs branch ([[StagedMinInputBytes]] guard): verified rep
-      // pairs + one star edge per identical-text group member, ONE CC
-      val (tg, qual, repPairs) = verifiedRepParts(df, idCol, textCol,
-        threshold, numHashes, bands, shingleSize)
-      val participating = repPairs.select(col("id_a").as("__rid"))
-        .unionByName(repPairs.select(col("id_b").as("__rid")))
-      val starRids = qual.unionByName(participating).distinct()
-      val star = tg.mem.join(starRids, Seq("__rid"), "left_semi")
-        .filter(col("__mid") =!= col("__rid"))
-        .select(col("__rid").as("id_a"), col("__mid").as("id_b"))
-      val edges = star.unionByName(repPairs.select(col("id_a"), col("id_b")))
-      clustersFromPairs(df, idCol, edges)
+    // CC's own Dataset actions run after the verification parts are held
+    graft.operators.Release.scope(df.sparkSession) {
+      if (useStaged(df, staged))
+        dupClustersStaged(df, idCol, textCol, threshold, numHashes, bands,
+          shingleSize)
+      else {
+        // all-pairs branch ([[StagedMinInputBytes]] guard): verified rep
+        // pairs + one star edge per identical-text group member, ONE CC
+        val (tg, qual, repPairs) = verifiedRepParts(df, idCol, textCol,
+          threshold, numHashes, bands, shingleSize)
+        val participating = repPairs.select(col("id_a").as("__rid"))
+          .unionByName(repPairs.select(col("id_b").as("__rid")))
+        val starRids = qual.unionByName(participating).distinct()
+        val star = tg.mem.join(starRids, Seq("__rid"), "left_semi")
+          .filter(col("__mid") =!= col("__rid"))
+          .select(col("__rid").as("id_a"), col("__mid").as("id_b"))
+        val edges = star.unionByName(repPairs.select(col("id_a"), col("id_b")))
+        clustersFromPairs(df, idCol, edges)
+      }
     }
 
   private def dupClustersStaged(df: DataFrame, idCol: String,
@@ -421,9 +424,9 @@ object Dedup {
   private[graft] def dupClustersViaPairs(df: DataFrame, idCol: String,
       textCol: String, threshold: Double, numHashes: Int = 96,
       bands: Int = 24, shingleSize: Int = 2): DataFrame =
-    clustersFromPairs(df, idCol,
+    graft.operators.Release.scope(df.sparkSession)(clustersFromPairs(df, idCol,
       verifiedNearDupPairs(df, idCol, textCol, threshold,
-        numHashes, bands, shingleSize))
+        numHashes, bands, shingleSize)))
 
   /** Cluster labeling from an ALREADY-COMPUTED verified pair set — the
     * composition point the streaming pipeline uses: verified pairs
@@ -535,13 +538,14 @@ object Dedup {
     * (`broadcastOversized = false` for corpora degenerate enough that the
     * capped-bucket SET itself outgrows a driver broadcast).
     *
-    * SINGLE-CONSUMING-ACTION contract: the internal band table is
-    * persisted for the duration of ONE consuming action and released on
-    * the session's next completed action ([[graft.operators.Release]]).
-    * Run an action on the returned frame (or a derivation) BEFORE any
-    * unrelated action on the same session — otherwise the release fires
-    * early and the tokenize+minhash pass silently recomputes (correctness
-    * unaffected; the one-pass perf guarantee is lost).
+    * SINGLE-CONSUMING-ACTION contract: the internal band table is held
+    * ([[graft.operators.Release]]) and released by the session's first
+    * Dataset action after this call returns — or, inside a
+    * `Release.scope`, after the scope returns. Run an action on the
+    * returned frame (or a derivation) BEFORE any unrelated action on the
+    * same session — otherwise the release fires early and the
+    * tokenize+minhash pass silently recomputes (correctness unaffected;
+    * the one-pass perf guarantee is lost).
     */
   def lshCandidatePairs(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 96, bands: Int = 24, shingleSize: Int = 2,
@@ -575,7 +579,7 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
       .distinct()
-    graft.operators.Release.datasetAfterConsumingAction(bt)
+    graft.operators.Release.hold(bt)
     out
   }
 
@@ -650,7 +654,7 @@ object Dedup {
       .select(col("__ma").as("id_a"), col("__mb").as("id_b"),
         lit(0).cast("int").as("hamming"))
     val out = expanded.unionByName(intra)
-    graft.operators.Release.datasetAfterConsumingAction(bandedP)
+    graft.operators.Release.hold(bandedP)
     out
   }
 
@@ -785,7 +789,7 @@ object Dedup {
         col("ms").cast("long").as("union_n"),
         lit(1.0).as("jaccard"))
     val out = expanded.unionByName(intra)
-    graft.operators.Release.datasetAfterConsumingAction(groups)
+    graft.operators.Release.hold(groups)
     out
   }
 
@@ -876,8 +880,7 @@ object Dedup {
       .select(col("__rid"), col("__mid"))
     val repDf = df.join(grp.select(col("__rid").as(idCol)),
       Seq(idCol), "left_semi")
-    graft.operators.Release.datasetAfterConsumingAction(keyed)
-    graft.operators.Release.datasetAfterConsumingAction(grp)
+    graft.operators.Release.hold(keyed, grp)
     TextGroups(keyed, grp, mem, repDf)
   }
 
@@ -963,15 +966,13 @@ object Dedup {
     * Returns (tg, qual, capped bucket table, shingle sets, star hits).
     * `capped`/`sets`/`starHits` are persisted multi-consumer snapshots
     * (sets carries shingle ARRAYS — DISK_ONLY per the SCALE.md r10
-    * rule); released by PLAN CONTAINMENT (the consuming-action variant),
-    * NOT the unconditional next-action variant: the clusters consumer's
-    * CC fires a Dataset action (the fixed-point confirmation's `isEmpty`)
-    * — but over per-round materialized LogicalRDD leaves, whose plans do
-    * not contain these frames, so containment correctly waits for the
-    * caller's real consuming action (round-13 fix: the unconditional
-    * variant released all four snapshots on the first CC action, and the
-    * final action silently recomputed the banding, shingle sets, and star
-    * verify).
+    * rule), held for the caller's consuming action. The clusters
+    * consumer's CC runs Dataset actions of its own (the fixed-point
+    * confirmation's `isEmpty`) after they are held, so [[dupClusters]]
+    * runs inside a [[graft.operators.Release.scope]]: no action inside it
+    * can release them (round 13: releasing all four snapshots on the
+    * first CC action made the final action silently recompute the
+    * banding, shingle sets, and star verify).
     */
   private[graft] def stagedRepParts(df: DataFrame, idCol: String,
       textCol: String, threshold: Double, numHashes: Int, bands: Int,
@@ -996,10 +997,7 @@ object Dedup {
     val starHits = verifyPairs(star, sets, threshold)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val qual = qualifiedReps(tg, sets, idCol, threshold)
-    graft.operators.Release.datasetAfterConsumingAction(bt)
-    graft.operators.Release.datasetAfterConsumingAction(capped)
-    graft.operators.Release.datasetAfterConsumingAction(sets)
-    graft.operators.Release.datasetAfterConsumingAction(starHits)
+    graft.operators.Release.hold(bt, capped, sets, starHits)
     (tg, qual, capped, sets, starHits)
   }
 }

@@ -318,10 +318,7 @@ object SpanIndex {
         suffixes.sparkSession.createDataFrame(if (b.crossDoc)
           crossDocScan(rdd) else occurrenceScan(rdd, b.minCount), pairSchema)
       }
-    // the pairs' consuming action crosses an RDD boundary (the scan), so
-    // plan containment can't identify it — unconditional variant (the
-    // consuming variant would only ever hit its 64-action leak backstop)
-    Release.datasetAfterNextAction(suffixes)
+    Release.hold(suffixes)
     pairs
   }
 
@@ -334,8 +331,9 @@ object SpanIndex {
     * d = 2 scan's boundary-tail collects and the d >= 3 block census
     * summaries materialize the suffix sort before returning). In every
     * mode the internal snapshots (tokenization, sorted suffixes) are
-    * released after the FIRST action that touches the returned frame —
-    * so before querying MULTIPLE thresholds, persist the result or
+    * released by the first Dataset action after the build returns (or
+    * after the enclosing `Release.scope` returns) — so before querying
+    * MULTIPLE thresholds, persist the result or
     * write it out and read it back (as q_span_index_multi and the
     * spanindex bench do). Serving several minLen values straight off the
     * un-persisted return value re-runs the entire suffix-sort build once
@@ -391,9 +389,8 @@ object SpanIndex {
       // r16: derive the census sidecar from the SAME tokenized frame the
       // index build already snapshots (guide §1.2 — the independent
       // buildSpanCensus lineage re-tokenized the whole corpus a second
-      // time). The census frames read the persisted `toks`, whose release
-      // then waits for the census-consuming action (plan containment
-      // identifies it — census frames are pure Dataset derivations).
+      // time). The census frames read the held `toks`, so a census write
+      // reuses it when it runs inside the caller's Release scope.
       withCensus: Boolean): (DataFrame, Option[SpanCensus]) = {
     val b = Band(floor, cap, minCount, crossDoc, minDocs)
     // identical-text COLLAPSE (the round-9 Dedup lesson applied to the
@@ -475,14 +472,7 @@ object SpanIndex {
       keyed.join(groups, Seq("__gk"))
         .select(col("__gk"), col("__rep").as("__gid"),
           col(idCol).as("__member"))))
-    // the index's consuming action crosses an RDD boundary (the scan), so
-    // plan containment can't identify it — unconditional release. With a
-    // census riding the same toks snapshot, toks instead waits for the
-    // census-consuming action (writeSpanCensus — a pure Dataset
-    // derivation, so containment DOES identify it); callers materialize
-    // the index first (see the WithCensus scaladoc ordering contract).
-    if (withCensus) Release.datasetAfterConsumingAction(toks)
-    else Release.datasetAfterNextAction(toks)
+    Release.hold(toks)
     (index, censusOpt)
   }
 
@@ -706,8 +696,7 @@ object SpanIndex {
     val out = appendScanMerge(index, repTh, cand,
       candGroups.select(col("__rep").as(idCol), col("__m")), candMembers,
       idCol, b, delta.small)
-    Seq(delta.th, oldOccM, cand, candKeyed, candGroups)
-      .foreach(Release.datasetAfterNextAction)
+    Release.hold(delta.th, oldOccM, cand, candKeyed, candGroups)
     out
   }
 
@@ -730,9 +719,7 @@ object SpanIndex {
     // recomputes the full index build instead of reading the cache, a
     // duplicated corpus-scale pass at 100 TB. Materialize the snapshot
     // ONCE, sequenced, before the branching plan is acted on; if the
-    // caller didn't persist the index, persist it here and release it
-    // after the caller's consuming action (the count below is what makes
-    // the release registration fire on the CALLER's action, not our own).
+    // caller didn't persist the index, persist and hold it here.
     // The count runs even when the caller already materialized the cache
     // (ADVICE r16): a cached-scan count is index-merge-order, and Spark
     // exposes no public "all cached partitions loaded" probe to skip it
@@ -745,7 +732,7 @@ object SpanIndex {
     val idx = if (idxOwned) index.persist(StorageLevel.MEMORY_AND_DISK)
       else index
     idx.count()
-    if (idxOwned) Release.datasetAfterConsumingAction(idx)
+    if (idxOwned) Release.hold(idx)
     // d >= 3 takes the block path here too (one row per rep suffix with
     // its union group size __m)
     val pairs = suffixPairs(
@@ -989,21 +976,13 @@ object SpanIndex {
     *
     * r16: the census frames are DERIVED from the build's own persisted
     * token snapshot instead of an independent re-tokenizing lineage —
-    * one corpus tokenize pass serves both outputs. ORDERING CONTRACT:
-    * materialize the INDEX first (persist + an action — a count or the
-    * index parquet write), then write the census; the census read then
-    * hits the still-cached token snapshot, which is released after the
-    * census-consuming action. Writing the census first still computes
-    * correct frames — it just tokenizes once for the census and once
-    * more for the later index materialization.
-    *
-    * LEAK WINDOW (ADVICE r16): the corpus-sized DISK_ONLY token snapshot
-    * stays pinned until a census-consuming action fires. A caller that
-    * DISCARDS the census (or defers its write indefinitely) keeps the
-    * snapshot alive until the [[graft.operators.Release]] 64-action
-    * backstop releases it. If the census is not wanted, call
-    * [[buildDuplicateSpanIndex]] instead — its snapshot releases on the
-    * index's next action.
+    * one corpus tokenize pass serves both outputs when the caller runs
+    * the build, the index materialization (persist + an action) and the
+    * census write inside ONE [[graft.operators.Release.scope]] (every
+    * gate does: `SparkEntry.queries` opens it). Outside a scope the
+    * snapshot goes at the caller's next Dataset action, like every other
+    * hold; a later census write then re-tokenizes — correct frames, one
+    * more corpus pass.
     */
   def buildDuplicateSpanIndexWithCensus(df: DataFrame, idCol: String,
       textCol: String, floor: Int = 8, cap: Int = 64, minCount: Int = 2,
@@ -1482,137 +1461,141 @@ object SpanIndex {
       return buildDuplicateSpanIndexWithCensus(union, idCol, textCol,
         floor, cap, minCount, broadcastDups, crossDoc, minDocs)
 
-    // ---- sidecar update (all delta-sized) ----
-    val (membersDelta, gramsDelta0) =
-      censusDeltas(census, newDocs, idCol, textCol, floor)
-    val gramsDelta = gramsDelta0
-      .persist(StorageLevel.MEMORY_AND_DISK) // bloom merge + union reuse it
-    // stored counts stay stored: delta-sized outer merge, never a
-    // members re-aggregation (groups are disjoint-additive)
-    val updCounts = census.counts.map { c =>
-      val dc = membersDelta.groupBy(col("__gid")).agg(count(lit(1)).as("__md"))
-      c.join(dc, Seq("__gid"), "full_outer")
-        .select(col("__gid"), (coalesce(col("__mo"), lit(0L)) +
-          coalesce(col("__md"), lit(0L))).as("__mo"))
-    }
-    // bloom + bucketed view stay live across CHAINED batches: the bloom
-    // absorbs the delta's gram hashes (same sizing -> mergeable, and the
-    // no-false-negative invariant holds over the union); the bucketed
-    // view unions the store scan (still partition-prunable) with the
-    // delta rows (trivially small)
-    val updStore: (Option[DataFrame], Option[GramBloom]) =
-      census.bloom match {
-        case Some(meta) =>
-          // the merge is a THUNK (GramBloom scaladoc): forced only by a
-          // chained append's probe — writeSpanCensus rebuilds its bloom
-          // from the written store and a discarded census costs nothing
-          val mergedBytes = () => mergeDeltaBloomBytes(meta, gramsDelta)
-          val gb2 = census.gramsByBucket.map(_.unionByName(
-            gramsDelta.withColumn("__fb",
-              pmod(col("__fh"), lit(meta.buckets)).cast("int"))))
-          (gb2, Some(meta.withBytes(mergedBytes)))
-        case None => (None, None)
+    // the bloom broadcast is held before the merge's own count, so the
+    // rest runs in one Release scope: nothing here releases it
+    Release.scope(spark) {
+      // ---- sidecar update (all delta-sized) ----
+      val (membersDelta, gramsDelta0) =
+        censusDeltas(census, newDocs, idCol, textCol, floor)
+      val gramsDelta = gramsDelta0
+        .persist(StorageLevel.MEMORY_AND_DISK) // bloom merge + union reuse it
+      // stored counts stay stored: delta-sized outer merge, never a
+      // members re-aggregation (groups are disjoint-additive)
+      val updCounts = census.counts.map { c =>
+        val dc = membersDelta.groupBy(col("__gid")).agg(count(lit(1)).as("__md"))
+        c.join(dc, Seq("__gid"), "full_outer")
+          .select(col("__gid"), (coalesce(col("__mo"), lit(0L)) +
+            coalesce(col("__md"), lit(0L))).as("__mo"))
       }
-    val updated = SpanCensus(census.grams.unionByName(gramsDelta),
-      census.members.unionByName(membersDelta), updCounts,
-      updStore._1, updStore._2)
-
-    // ---- counts: delta census live, old census from the sidecar ----
-    val delta = new Delta(newDocs, idCol, textCol, floor, crossDoc,
-      broadcastDups)
-    // per-group member counts: stored frame when the census carries one
-    // (no corpus-rows aggregate per append), derived otherwise
-    val mOld = census.counts
-      .map(_.select(col("__gid"), col("__mo")))
-      .getOrElse(census.members.groupBy(col("__gid"))
-        .agg(count(lit(1)).as("__mo")))
-    // stored gram rows touching a delta gram — reused for the old-side
-    // counts AND matched-group discovery; (gid, fh, pcnt, mo) scalars.
-    // With a store-backed census the probe is ADAPTIVE: the corpus Bloom
-    // drops every delta gram the store cannot contain (no false
-    // negatives -> no lost matches), and ONE delta-sized histogram job
-    // (per-bucket survivor counts, <= buckets rows collected) picks the
-    // read strategy —
-    //  - zero survivors (a NOVEL delta): the store is never read;
-    //  - survivors in <= half the buckets (sparse/small deltas): the
-    //    grams scan partition-prunes to those directories and the
-    //    survivors are the semi-join side;
-    //  - dense survivors (a delta that overlaps most of the corpus):
-    //    pruning cannot pay, so the probe falls back to the classic
-    //    full-sidecar semi-join with NONE of the pruning machinery —
-    //    measured at sf10p, dragging a dense 10% delta through the
-    //    sparse path cost ~10 s of survivor persist/broadcast for a
-    //    read it couldn't avoid.
-    // The exact semi-join always confirms: Bloom false positives only
-    // widen the read, never the result.
-    val matchedGrams = (census.gramsByBucket, census.bloom) match {
-      case (Some(gb), Some(meta)) =>
-        val bfBc = spark.sparkContext.broadcast(bloomFromBytes(meta.bytes))
-        val might = udf((fh: Long) => bfBc.value.mightContainLong(fh))
-        def surv = delta.keys.filter(might(col("__fh")))
-          .withColumn("__fb",
-            pmod(col("__fh"), lit(meta.buckets)).cast("int"))
-        val bset = surv.groupBy(col("__fb")).agg(count(lit(1)))
-          .collect().map(_.getInt(0)).toSeq
-        if (bset.isEmpty || bset.length > meta.buckets / 2) {
-          // the bloom's work is done (novel delta, or dense fallback):
-          // drop its executor copies now rather than pinning a
-          // potentially-256 MiB value per append until the
-          // ContextCleaner notices (ADVICE r15)
-          bfBc.unpersist(blocking = false)
-          if (bset.isEmpty) census.grams.filter(lit(false))
-          else census.grams.join(delta.gramSide, Seq("__fh"), "left_semi")
-        } else {
-          // sparse path: `side` re-evaluates the bloom UDF at the
-          // consuming action, so release only after that completes
-          Release.broadcastAfterNextAction(spark, bfBc)
-          val side = joinSide(surv.select(col("__fh")), delta.small)
-          gb.filter(col("__fb").isin(bset: _*)).drop("__fb")
-            .join(side, Seq("__fh"), "left_semi")
+      // bloom + bucketed view stay live across CHAINED batches: the bloom
+      // absorbs the delta's gram hashes (same sizing -> mergeable, and the
+      // no-false-negative invariant holds over the union); the bucketed
+      // view unions the store scan (still partition-prunable) with the
+      // delta rows (trivially small)
+      val updStore: (Option[DataFrame], Option[GramBloom]) =
+        census.bloom match {
+          case Some(meta) =>
+            // the merge is a THUNK (GramBloom scaladoc): forced only by a
+            // chained append's probe — writeSpanCensus rebuilds its bloom
+            // from the written store and a discarded census costs nothing
+            val mergedBytes = () => mergeDeltaBloomBytes(meta, gramsDelta)
+            val gb2 = census.gramsByBucket.map(_.unionByName(
+              gramsDelta.withColumn("__fb",
+                pmod(col("__fh"), lit(meta.buckets)).cast("int"))))
+            (gb2, Some(meta.withBytes(mergedBytes)))
+          case None => (None, None)
         }
-      case _ => census.grams.join(delta.gramSide, Seq("__fh"), "left_semi")
+      val updated = SpanCensus(census.grams.unionByName(gramsDelta),
+        census.members.unionByName(membersDelta), updCounts,
+        updStore._1, updStore._2)
+
+      // ---- counts: delta census live, old census from the sidecar ----
+      val delta = new Delta(newDocs, idCol, textCol, floor, crossDoc,
+        broadcastDups)
+      // per-group member counts: stored frame when the census carries one
+      // (no corpus-rows aggregate per append), derived otherwise
+      val mOld = census.counts
+        .map(_.select(col("__gid"), col("__mo")))
+        .getOrElse(census.members.groupBy(col("__gid"))
+          .agg(count(lit(1)).as("__mo")))
+      // stored gram rows touching a delta gram — reused for the old-side
+      // counts AND matched-group discovery; (gid, fh, pcnt, mo) scalars.
+      // With a store-backed census the probe is ADAPTIVE: the corpus Bloom
+      // drops every delta gram the store cannot contain (no false
+      // negatives -> no lost matches), and ONE delta-sized histogram job
+      // (per-bucket survivor counts, <= buckets rows collected) picks the
+      // read strategy —
+      //  - zero survivors (a NOVEL delta): the store is never read;
+      //  - survivors in <= half the buckets (sparse/small deltas): the
+      //    grams scan partition-prunes to those directories and the
+      //    survivors are the semi-join side;
+      //  - dense survivors (a delta that overlaps most of the corpus):
+      //    pruning cannot pay, so the probe falls back to the classic
+      //    full-sidecar semi-join with NONE of the pruning machinery —
+      //    measured at sf10p, dragging a dense 10% delta through the
+      //    sparse path cost ~10 s of survivor persist/broadcast for a
+      //    read it couldn't avoid.
+      // The exact semi-join always confirms: Bloom false positives only
+      // widen the read, never the result.
+      val matchedGrams = (census.gramsByBucket, census.bloom) match {
+        case (Some(gb), Some(meta)) =>
+          val bfBc = spark.sparkContext.broadcast(bloomFromBytes(meta.bytes))
+          val might = udf((fh: Long) => bfBc.value.mightContainLong(fh))
+          def surv = delta.keys.filter(might(col("__fh")))
+            .withColumn("__fb",
+              pmod(col("__fh"), lit(meta.buckets)).cast("int"))
+          val bset = surv.groupBy(col("__fb")).agg(count(lit(1)))
+            .collect().map(_.getInt(0)).toSeq
+          if (bset.isEmpty || bset.length > meta.buckets / 2) {
+            // the bloom's work is done (novel delta, or dense fallback):
+            // drop its executor copies now rather than pinning a
+            // potentially-256 MiB value per append until the
+            // ContextCleaner notices (ADVICE r15)
+            bfBc.unpersist(blocking = false)
+            if (bset.isEmpty) census.grams.filter(lit(false))
+            else census.grams.join(delta.gramSide, Seq("__fh"), "left_semi")
+          } else {
+            // sparse path: `side` re-evaluates the bloom UDF at the
+            // consuming action
+            Release.hold(spark, bfBc)
+            val side = joinSide(surv.select(col("__fh")), delta.small)
+            gb.filter(col("__fb").isin(bset: _*)).drop("__fb")
+              .join(side, Seq("__fh"), "left_semi")
+          }
+        case _ => census.grams.join(delta.gramSide, Seq("__fh"), "left_semi")
+      }
+      val oldMatched = matchedGrams
+        .join(mOld, Seq("__gid"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val oldAgg = oldMatched.groupBy(col("__fh"))
+        .agg((if (crossDoc) sum(col("__mo"))
+          else sum(col("__pcnt") * col("__mo"))).as("__no"))
+      val dupSide = delta.dupSide(oldAgg, b.censusMin)
+
+      // ---- candidate groups: sidecar lookup, no corpus pass ----
+      val matchedOldGids = oldMatched.join(dupSide, Seq("__fh"), "left_semi")
+        .select(col("__gid")).distinct()
+      val newCandGids = delta.occ.join(dupSide, Seq("__fh"), "left_semi")
+        .select(col(idCol).as("__member")).distinct()
+        .join(membersDelta.select(col("__gid"), col("__member")),
+          Seq("__member"))
+        .select(col("__gid"))
+      val candGids = matchedOldGids.unionByName(newCandGids).distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val membersAll = census.members.select(col("__gid"), col("__member"))
+        .unionByName(membersDelta.select(col("__gid"), col("__member")))
+      val candMembersAll = membersAll.join(candGids, Seq("__gid"), "left_semi")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val candM = candMembersAll.groupBy(col("__gid"))
+        .agg(count(lit(1)).as("__m"))
+        .select(col("__gid").as(idCol), col("__m"))
+      val candMembers = candMembersAll
+        .select(col("__gid").as("__rep"), col("__member"))
+
+      // ---- the one old-corpus touch: fetch matched representatives' text
+      // (suffix keys need the tokens past each gram — irreducible); a
+      // column-pruned semi-join, no tokenization outside the neighborhood
+      val repDocs = union.join(candGids.select(col("__gid").as(idCol)),
+        Seq(idCol), "left_semi")
+      val repTh = hashedDocs(repDocs, idCol, textCol)
+        .persist(StorageLevel.DISK_ONLY)
+      val cand = candidateStarts(floorGrams(repTh, floor), dupSide, idCol)
+      val out = appendScanMerge(index, repTh, cand, candM, candMembers,
+        idCol, b, delta.small)
+      Release.hold(delta.th, gramsDelta, oldMatched, candGids, candMembersAll,
+        repTh)
+      (out, updated)
     }
-    val oldMatched = matchedGrams
-      .join(mOld, Seq("__gid"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val oldAgg = oldMatched.groupBy(col("__fh"))
-      .agg((if (crossDoc) sum(col("__mo"))
-        else sum(col("__pcnt") * col("__mo"))).as("__no"))
-    val dupSide = delta.dupSide(oldAgg, b.censusMin)
-
-    // ---- candidate groups: sidecar lookup, no corpus pass ----
-    val matchedOldGids = oldMatched.join(dupSide, Seq("__fh"), "left_semi")
-      .select(col("__gid")).distinct()
-    val newCandGids = delta.occ.join(dupSide, Seq("__fh"), "left_semi")
-      .select(col(idCol).as("__member")).distinct()
-      .join(membersDelta.select(col("__gid"), col("__member")),
-        Seq("__member"))
-      .select(col("__gid"))
-    val candGids = matchedOldGids.unionByName(newCandGids).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val membersAll = census.members.select(col("__gid"), col("__member"))
-      .unionByName(membersDelta.select(col("__gid"), col("__member")))
-    val candMembersAll = membersAll.join(candGids, Seq("__gid"), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val candM = candMembersAll.groupBy(col("__gid"))
-      .agg(count(lit(1)).as("__m"))
-      .select(col("__gid").as(idCol), col("__m"))
-    val candMembers = candMembersAll
-      .select(col("__gid").as("__rep"), col("__member"))
-
-    // ---- the one old-corpus touch: fetch matched representatives' text
-    // (suffix keys need the tokens past each gram — irreducible); a
-    // column-pruned semi-join, no tokenization outside the neighborhood
-    val repDocs = union.join(candGids.select(col("__gid").as(idCol)),
-      Seq(idCol), "left_semi")
-    val repTh = hashedDocs(repDocs, idCol, textCol)
-      .persist(StorageLevel.DISK_ONLY)
-    val cand = candidateStarts(floorGrams(repTh, floor), dupSide, idCol)
-    val out = appendScanMerge(index, repTh, cand, candM, candMembers,
-      idCol, b, delta.small)
-    Seq(delta.th, gramsDelta, oldMatched, candGids, candMembersAll, repTh)
-      .foreach(Release.datasetAfterNextAction)
-    (out, updated)
   }
 
   /** OCCURRENCE-counting R scan over the sorted capped suffixes — rows
@@ -2058,7 +2041,7 @@ object SpanIndex {
     val singles = suffixes.filter(col("__m") >= minDocs)
       .select(col(idCol), col("__p"),
         least(lit(cap), size(col("__key"))).cast(IntegerType).as("__l"))
-    Release.datasetAfterNextAction(facts)
+    Release.hold(facts)
     viaBlocks.unionByName(singles)
   }
 

@@ -168,7 +168,7 @@ object ConnectedComponents {
     roundsAcc.add(it.toLong)
     // At the fixed point the edge set is disjoint stars (child → root):
     // every child labels itself with its root, every root with itself.
-    Release.afterNextAction(spark, eRows)
+    Release.hold(spark, eRows)
     (e.select(col("u").as("id"), col("v").as("component"))
       .union(e.select(col("v").as("id"), col("v").as("component")))
       .distinct(), it)

@@ -24,7 +24,7 @@ import scala.reflect.ClassTag
   * job builds that shape, for `graft.dia.DIA` and for the DataFrame ops
   * below alike:
   *  - [[summarize]] is the collective: it caches the input, folds every
-  *    partition to a summary in ONE job, and releases the cache after the
+  *    partition to a summary in ONE job, and holds the cache for the
   *    consuming action;
   *  - [[scan]] is the two-pass prefix sum on its partials;
   *  - [[alignedBlocks]] is the aligned scatter under every shuffling zip,
@@ -48,16 +48,17 @@ object Positional {
     * exchanges as jobs, which then carry the name too), persists it, and
     * runs one job that folds each partition to an `S` while it fills the
     * cache. Returns the cached RDD, which the operator's later passes read,
-    * and the summaries in partition order. The cache is released after the
-    * next completed Dataset action, the one that consumes the operator's
-    * output (`afterNextAction` of [[Release]]).
+    * and the summaries in partition order. The cache is a [[Release.hold]]:
+    * outside a scope it goes at the next Dataset action, the one that
+    * consumes the operator's output (no positional op runs a Dataset
+    * action after it); inside one, at the first after the scope returns.
     */
   private[graft] def summarize[T, S: ClassTag](spark: SparkSession, name: String)(
       input: => RDD[T])(fold: Iterator[T] => S): (RDD[T], Array[S]) =
     Jobs.named(spark.sparkContext, name) {
       val rdd = input.persist(StorageLevel.MEMORY_AND_DISK)
       val summaries = rdd.mapPartitions(it => Iterator(fold(it))).collect()
-      Release.afterNextAction(spark, rdd)
+      Release.hold(spark, rdd)
       (rdd, summaries)
     }
 

@@ -1,146 +1,90 @@
 package graft.operators
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Explicit release of operator-local caches.
+/** The one owner of operator-local caches — Thrill's consume counter
+  * (`Keep`/`Dispose`, thrill/api/dia.hpp:295-335) for a lazy engine.
   *
-  * The positional/zip/sample family persists its input snapshot because an
-  * internal metadata pass (counts, boundary rows, partial sums) and the
-  * deferred output pass must read the SAME data. The output pass only runs
-  * when the caller finally acts on the returned frame — so the operator
-  * cannot `try/finally`-unpersist before returning, and pre-round-5 code
-  * left the blocks to Spark's ContextCleaner (reclaimed only when the
-  * result's lineage went unreachable; a long-lived session accumulates
-  * them meanwhile).
+  * An operator persists an intermediate that its internal passes and its
+  * deferred output both read, so it cannot unpersist before it returns.
+  * It [[hold]]s the cache instead, and one rule decides when it goes:
   *
-  * [[afterNextAction]] closes that: it registers a one-shot
-  * `QueryExecutionListener` that unpersists the op-local blocks after the
-  * next COMPLETED Dataset action on the session — in the gate/bench/Verify
-  * flow, exactly the action that consumed the operator's output. The
-  * operator's own internal passes never trigger it (they are RDD actions,
-  * which don't fire QueryExecutionListener). If some unrelated Dataset
-  * action fires first, the cost is a lineage recompute on the real
-  * consuming action — a perf hazard only, and only for callers that
-  * interleave actions between building a positional op and running it
-  * (the documented order contract already requires the input to be a
-  * deterministic post-orderBy pipeline).
+  *  - a hold made while a [[scope]] is open on the thread belongs to the
+  *    OUTERMOST scope; when that scope returns, its holds pass to the
+  *    session's first Dataset action that completes or fails and whose
+  *    `QueryExecution` is newer than the return — the caller's action on
+  *    the returned frame. That action unpersists every hold with
+  *    `blocking = true`, on the listener-bus thread, so draining the bus
+  *    waits for the release. If the body throws, the holds go at once;
+  *  - a hold with no open scope is its own scope and hands off at once.
   *
-  * Note the callback arrives on the listener-bus thread, i.e. release is
-  * asynchronous — shortly after the action, not within it (tests poll).
+  * So no Dataset action the operator (or a callee) runs INSIDE its scope
+  * can release its holds: an operator that runs a Dataset action after it
+  * or a callee has held something opens a scope around its body, and
+  * every gate builder runs inside one (`SparkEntry.queries`). RDD actions
+  * never release: they do not reach `QueryExecutionListener`s.
+  *
+  * Caveat of the id filter: `collect()` on the returned frame itself runs
+  * that frame's own `QueryExecution`, which predates the return, so the
+  * release waits for the caller's next action. Every consumer here
+  * (write, count, agg/head, isEmpty, a derived frame) builds a fresh one.
   */
 object Release {
 
-  /** Unpersist the given op-local RDD snapshots after the next completed
-    * Dataset action on the session.
+  /** Releases held by the scope open on this thread (null: none open). */
+  private val open = new ThreadLocal[ArrayBuffer[() => Unit]]
+
+  /** Run `body`, handing every hold made inside it (callees included) to
+    * the first Dataset action after it returns. Nested scopes join the
+    * outermost one.
     */
-  def afterNextAction(spark: SparkSession, rdds: RDD[_]*): Unit =
-    register(spark, () => rdds.foreach(_.unpersist(blocking = false)))
-
-  /** Unpersist after `actions` unrelated completed actions even if none
-    * consumed the frame — the backstop that keeps a built-but-discarded
-    * frame from pinning executor storage for the session's lifetime.
-    */
-  val LeakBackstopActions = 64
-
-  /** Unpersist a query-local cached Dataset after the next completed
-    * Dataset action (which, for a query that persists a subtree consumed
-    * by its own final plan, is that query's own run). Use
-    * [[datasetAfterConsumingAction]] instead when the consuming frame is
-    * a DATASET derivation of the cached one — this unconditional variant
-    * remains for ops whose output crosses an RDD boundary
-    * (`df.rdd.zipWithIndex` etc.), where plan containment cannot identify
-    * the consumer.
-    */
-  def datasetAfterNextAction(df: Dataset[_]): Unit =
-    register(df.sparkSession, () => { df.unpersist(blocking = false); () })
-
-  /** Remove executor-side copies of op-local broadcast variables after
-    * the next completed Dataset action — the broadcast analog of
-    * [[datasetAfterNextAction]], for operators that ship a large
-    * read-only value (a corpus Bloom filter) per invocation and would
-    * otherwise pin one executor copy per call until the ContextCleaner
-    * happens to collect the driver reference. `unpersist`, not
-    * `destroy`: a later lineage recompute can still re-fetch the value
-    * from the driver, so a release that fires before the real consuming
-    * action costs a re-ship, never a failure.
-    */
-  def broadcastAfterNextAction(spark: SparkSession,
-      bcs: org.apache.spark.broadcast.Broadcast[_]*): Unit =
-    register(spark, () => bcs.foreach(_.unpersist(blocking = false)))
-
-  /** Unpersist a query-local cached Dataset once it has been CONSUMED:
-    * fires after the first completed Dataset action whose analyzed plan
-    * contains this frame's plan as a subtree — for an operator that
-    * persists an intermediate read by its own returned frame, exactly the
-    * caller's action on that frame. (The unconditional variant fires on
-    * the next action REGARDLESS: a caller that interleaves an unrelated
-    * action between building the operator and running it releases the
-    * cache early, and the consuming action silently recomputes the
-    * persisted pass — same rows, wasted work.) [[LeakBackstopActions]]
-    * unrelated actions still release it, so a never-consumed frame cannot
-    * pin storage forever; a plan-walk failure releases immediately (the
-    * conservative choice) rather than risking the leak.
-    */
-  def datasetAfterConsumingAction(df: Dataset[_]): Unit = {
-    val target = df.queryExecution.analyzed
-    val misses = new java.util.concurrent.atomic.AtomicInteger(0)
-    register(df.sparkSession,
-      (qe, failed) => {
-        // A FAILED action is NOT consumption even when its plan contains
-        // the frame: the caller's natural next move is to retry the same
-        // action, which should still find the cache warm (releasing here
-        // forces the retry to recompute the persisted pass — the exact
-        // waste this variant exists to avoid). Failures only count toward
-        // the leak backstop.
-        val hit = !failed &&
-          (try qe.analyzed.exists(_.sameResult(target))
-           catch { case scala.util.control.NonFatal(_) => true })
-        hit || misses.incrementAndGet() >= LeakBackstopActions
-      },
-      () => { df.unpersist(blocking = false); () })
-  }
-
-  private def register(spark: SparkSession, cleanup: () => Unit): Unit =
-    register(spark, (_, _) => true, cleanup)
-
-  private def register(spark: SparkSession,
-      shouldFire: (QueryExecution, Boolean) => Boolean,
-      cleanup: () => Unit): Unit = {
-    val lm = spark.listenerManager
-    // The listener bus is ASYNC: events from executions that completed
-    // BEFORE this listener registered can still be draining the queue and
-    // would be delivered to it (Spark delivers each queued event to the
-    // listeners registered at DELIVERY time). Counting those as "actions
-    // since registration" breaks both variants — afterNextAction would
-    // fire on an action that predates the operator, and the consuming
-    // variant's leak backstop can burn through its budget on a busy
-    // session's backlog and release a cache its consumer still needs
-    // (observed as a recompute under back-to-back heavy queries). Ignore
-    // every event whose QueryExecution was CREATED before registration:
-    // ids are monotone, and this throwaway QueryExecution's id is a
-    // registration-time high-water mark (no job runs — analysis is lazy).
-    // Residual caveat: `collect()` runs the Dataset's OWN QueryExecution,
-    // so collecting the operator's exact returned frame (created just
-    // before this register) is also filtered — the release then waits for
-    // the caller's next action or the leak backstop, a bounded perf
-    // hazard. Every consumer in this repo (write, count, agg/head,
-    // isEmpty, or a derived frame) builds a fresh QueryExecution.
-    val baselineId = spark.range(0).queryExecution.id
-    val listener: QueryExecutionListener = new QueryExecutionListener {
-      private val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-      private def fire(qe: QueryExecution, failed: Boolean): Unit =
-        if (qe.id > baselineId && shouldFire(qe, failed) &&
-            done.compareAndSet(false, true)) {
-          cleanup(); lm.unregister(this)
-        }
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = fire(qe, failed = false)
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = fire(qe, failed = true)
+  def scope[T](spark: SparkSession)(body: => T): T =
+    if (open.get != null) body
+    else {
+      val holds = ArrayBuffer.empty[() => Unit]
+      open.set(holds)
+      val out = try body catch { case e: Throwable => holds.foreach(_()); throw e }
+        finally open.remove()
+      handOff(spark, holds.toSeq)
+      out
     }
-    lm.register(listener)
-  }
+
+  def hold(spark: SparkSession, rdd: RDD[_]): Unit =
+    add(spark, () => rdd.unpersist(blocking = true))
+
+  def hold(spark: SparkSession, bc: Broadcast[_]): Unit =
+    add(spark, () => bc.unpersist(blocking = true))
+
+  def hold(dfs: Dataset[_]*): Unit =
+    dfs.foreach(df => add(df.sparkSession, () => df.unpersist(blocking = true)))
+
+  private def add(spark: SparkSession, release: () => Unit): Unit =
+    open.get match {
+      case null => handOff(spark, Seq(release))
+      case holds => holds += release
+    }
+
+  private def handOff(spark: SparkSession, holds: Seq[() => Unit]): Unit =
+    if (holds.nonEmpty) {
+      val lm = spark.listenerManager
+      // The bus delivers each queued event to the listeners registered at
+      // DELIVERY time, so actions that completed before this point could
+      // still reach the listener. QueryExecution ids are monotone, and this
+      // throwaway one (analysis only, no job) is the high-water mark.
+      val baselineId = spark.range(0).queryExecution.id
+      lm.register(new QueryExecutionListener {
+        private def fire(qe: QueryExecution): Unit =
+          if (qe.id > baselineId) { lm.unregister(this); holds.foreach(_()) }
+        override def onSuccess(funcName: String, qe: QueryExecution,
+            durationNs: Long): Unit = fire(qe)
+        override def onFailure(funcName: String, qe: QueryExecution,
+            exception: Exception): Unit = fire(qe)
+      })
+    }
 }

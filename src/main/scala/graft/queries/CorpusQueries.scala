@@ -171,7 +171,7 @@ object CorpusQueries {
       // pair per candidate position), not corpus-sized.
       idx.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val out = serveIntervals2(s, idx, fx)
-      graft.operators.Release.datasetAfterConsumingAction(idx)
+      graft.operators.Release.hold(idx)
       out
     }),
 
@@ -195,7 +195,7 @@ object CorpusQueries {
       val out = SpanIndex.spanIntervalsSweep(idx, fx, "doc_id", "text",
           Seq(8, 12, 16))
         .orderBy($"min_len", $"doc_id", $"span_start")
-      graft.operators.Release.datasetAfterConsumingAction(idx)
+      graft.operators.Release.hold(idx)
       out
     }),
 
@@ -217,8 +217,7 @@ object CorpusQueries {
         "text", floor = 8, cap = 24, rebuildFraction = 1.0)
       idx.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val out = serveIntervals2(s, idx, fx)
-      graft.operators.Release.datasetAfterConsumingAction(idx)
-      graft.operators.Release.datasetAfterConsumingAction(idx0)
+      graft.operators.Release.hold(idx, idx0)
       out
     }),
 
@@ -238,13 +237,10 @@ object CorpusQueries {
       val (idx0, cen0) = SpanIndex.buildDuplicateSpanIndexWithCensus(old,
         "doc_id", "text", floor = 8, cap = 24)
       idx0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // materialize the index BEFORE the census write (r16): the write's
-      // actions would otherwise fire the build's internal-snapshot
-      // releases while the persisted index is still lazy — the first
-      // real consumer then re-runs the suffix sort with the DISK_ONLY
-      // snapshot gone (3 uncached reads). Count-first also lets the
-      // census write hit the build's still-cached token snapshot (the
-      // WithCensus ordering contract).
+      // materialize the index BEFORE the census write (r16): the build's
+      // snapshots are held for the whole gate (its Release scope), so the
+      // suffix sort runs once, here, and the census write reads the
+      // build's cached token snapshot (the WithCensus ordering contract).
       idx0.count()
       SpanIndex.writeSpanCensus(cen0, base.resolve("cen").toString)
       val cen = SpanIndex.readSpanCensus(s, base.resolve("cen").toString)
@@ -252,8 +248,7 @@ object CorpusQueries {
         nw, "doc_id", "text", floor = 8, cap = 24, rebuildFraction = 1.0)
       idx.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val out = FacadeQueries.collectEager(serveIntervals2(s, idx, fx))
-      graft.operators.Release.datasetAfterConsumingAction(idx)
-      graft.operators.Release.datasetAfterConsumingAction(idx0)
+      graft.operators.Release.hold(idx, idx0)
       FacadeQueries.deleteRecursively(base)
       out
     }),
@@ -281,7 +276,6 @@ object CorpusQueries {
         "doc_id", "text", floor = 8, cap = 24)
       idx0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // same materialize-before-store-write ordering as the census gate
-      // (r16): see there for the release-sequencing rationale
       idx0.count()
       SpanIndex.writeSpanCensus(cen0, cenPath, buckets = 16)
       val cen = SpanIndex.readSpanCensus(s, cenPath)
@@ -291,8 +285,7 @@ object CorpusQueries {
         old, b1, "doc_id", "text", floor = 8, cap = 24,
         rebuildFraction = 10.0)
       idx1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // materialize batch 1's index before the store append's actions
-      // fire its internal-snapshot releases (same r16 sequencing fix)
+      // materialize batch 1's index before the store append writes
       idx1.count()
       val cen1 = SpanIndex.appendSpanCensusStore(s, cenPath, b1,
         "doc_id", "text", floor = 8)
@@ -301,9 +294,7 @@ object CorpusQueries {
         rebuildFraction = 10.0)
       idx.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val out = FacadeQueries.collectEager(serveIntervals2(s, idx, fx))
-      graft.operators.Release.datasetAfterConsumingAction(idx)
-      graft.operators.Release.datasetAfterConsumingAction(idx1)
-      graft.operators.Release.datasetAfterConsumingAction(idx0)
+      graft.operators.Release.hold(idx, idx1, idx0)
       FacadeQueries.deleteRecursively(base)
       out
     }),
@@ -328,7 +319,7 @@ object CorpusQueries {
       val out = SpanIndex.maskSweepFromSpanIndex(idx, fx, "doc_id", "text",
           Seq(8, 12, 16), expectCrossDoc = Some(false))
         .orderBy($"min_len", $"doc_id")
-      graft.operators.Release.datasetAfterConsumingAction(idx)
+      graft.operators.Release.hold(idx)
       out
     }),
 
@@ -395,7 +386,7 @@ object CorpusQueries {
         floor = 8, cap = 24, crossDoc = true)
       idx.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val out = serveIntervals2(s, idx, fx)
-      graft.operators.Release.datasetAfterConsumingAction(idx)
+      graft.operators.Release.hold(idx)
       out
     }),
 
@@ -413,7 +404,7 @@ object CorpusQueries {
         floor = 8, cap = 24, crossDoc = true, minDocs = 3)
       idx.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val out = serveIntervals2(s, idx, fx)
-      graft.operators.Release.datasetAfterConsumingAction(idx)
+      graft.operators.Release.hold(idx)
       out
     }),
 
@@ -944,7 +935,7 @@ object CorpusQueries {
           fractions = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
         .select($"doc_id", $"__nt", $"split")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.operators.Release.datasetAfterConsumingAction(slim)
+      graft.operators.Release.hold(slim)
       Seq("test", "train", "val").map { sp =>
         Corpus.shardManifest(slim.filter($"split" === sp), "doc_id",
             seed = "e0", shardSize = 50, weightCol = $"__nt")

@@ -82,7 +82,7 @@ object FacadeQueries {
       val sorted = DIA.generate(s, 100000L, numSlices = 8)(i => (i % 7, i))
         .sortStableBy(_._1)
         .cache() // the trailing zipWithIndex takes two passes; don't re-sort
-      graft.operators.Release.datasetAfterNextAction(sorted.ds)
+      graft.operators.Release.hold(sorted.ds)
       sorted.zipWithIndex((t, pos) => (pos, t._1, t._2))
         .ds.toDF("pos", "k", "id")
     }),

@@ -25,7 +25,7 @@ object TextQueries {
     * sampling pass + the real pass) — 2× the whole upstream chain. For
     * the codec gates that upstream is real decode work (A/B in SCALE.md:
     * 13.5 vs 7.2 s at sf1), so the pre-sort subtree is persisted across
-    * the two passes and released after the query's own consuming action.
+    * the two passes and held for the query's own consuming action.
     * MEMORY_AND_DISK is fine here (SCALE.md r10 persist rule audit):
     * the frames cached are result-shaped rows of fixed-width scalars
     * (per-doc stats, decoded feature sums), not corpus-wide text/array
@@ -35,7 +35,7 @@ object TextQueries {
       cols: org.apache.spark.sql.Column*): DataFrame = {
     val cached = df.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.operators.Release.datasetAfterConsumingAction(cached)
+    graft.operators.Release.hold(cached)
     cached.orderBy(cols: _*)
   }
 
@@ -844,15 +844,14 @@ object TextQueries {
       // rather than recomputed; measured ~9.2 -> ~8.0 s at sf1 isolated
       // (2 runs each). DISK_ONLY per the SCALE.md r10 persist rule: the
       // snapshot is corpus-sized, carries the FULL text column, and is
-      // live across the dedup keep-set aggregation. Released after the
-      // query's own consuming action (Release.afterNextAction), so
-      // library callers no longer accumulate a session-lifetime cache
-      // entry per build.
+      // live across the dedup keep-set aggregation. Held for the
+      // query's own consuming action (Release.hold), so library callers
+      // no longer accumulate a session-lifetime cache entry per build.
       val scored = Tables.documents(s, d)
         .withColumn("quality", Text.qualityScore($"text"))
         .filter($"quality" >= 0.3)
         .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      graft.operators.Release.datasetAfterConsumingAction(scored)
+      graft.operators.Release.hold(scored)
       Dedup.exactDedupCorpus(scored, "doc_id",
           Seq(Text.fingerprint($"text").as("h")))
         .withColumn("lang_pred", Text.langId($"text"))

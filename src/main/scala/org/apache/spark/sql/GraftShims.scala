@@ -41,3 +41,12 @@ object GraftRowShim {
       schema: types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }
+
+/** Bridge to the scheduler's listener bus, whose drain Spark keeps
+  * private[spark]. [[graft.operators.Release]] unpersists on the bus
+  * thread, so a drain also waits for every release already triggered.
+  */
+object GraftBusShim {
+  def drain(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(600000L)
+}
