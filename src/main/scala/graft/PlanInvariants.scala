@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, StringSplit}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
@@ -28,6 +29,12 @@ import org.apache.spark.sql.internal.SQLConf
   *    file-stats eager-broadcast trap (SCALE.md round 8) caught at plan
   *    time instead of in a bench column. Stats-less children (the
   *    defaultSizeInBytes sentinel) are skipped, not flagged.
+  *  - `lambda-rescan`: a higher-order function (`transform`, `filter`,
+  *    `aggregate`, ...) whose lambda body evaluates a StringSplit — a
+  *    tokenizer run once per ELEMENT, O(tokens²) per row. The optimizer
+  *    builds it by inlining a token array into the shingle lambda, e.g.
+  *    when a `size(shingles) > 0` filter is pushed below the projections
+  *    that materialize the tokens (see `Text.shinglesOfTokens`).
   *
   * The sweep runs with AQE DISABLED so the static plan — the one that
   * encodes the operator's structural choices — is fully traversable;
@@ -45,6 +52,7 @@ object PlanInvariants {
   val Bnlj = "bnlj"
   val GlobalWindow = "global-window"
   val BigBroadcast = "big-broadcast"
+  val LambdaRescan = "lambda-rescan"
 
   /** True when the plan's output cardinality is structurally bounded
     * regardless of input size: a group-less aggregate (exactly one row)
@@ -90,7 +98,14 @@ object PlanInvariants {
         (BigBroadcast, s"BroadcastExchange of estimated " +
           s"${e.child.logicalLink.map(_.stats.sizeInBytes).getOrElse(BigInt(-1))} bytes")
     }
-    hits.collect { case (id, msg) if !allowed(id) => s"[$id] $msg" }
+    val rescans = plan.collectWithSubqueries { case p => p.expressions }
+      .flatten.flatMap(_.collect {
+        case h: HigherOrderFunction
+            if h.functions.exists(_.find(_.isInstanceOf[StringSplit]).isDefined) =>
+          (LambdaRescan, s"${h.prettyName} lambda evaluates a StringSplit per element")
+      }).distinct
+    (hits ++ rescans)
+      .collect { case (id, msg) if !allowed(id) => s"[$id] $msg" }
   }
 
   /** Violations of the returned frame's pre-execution physical plan. */

@@ -77,8 +77,12 @@ object Corpus {
       // MEMORY_AND_DISK is fine here (SCALE.md r10 persist rule audit):
       // this is the BENCH side — small by definition, never corpus-sized.
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nGrams = math.max(1L, benchGrams.count())
-    val bloom = benchGrams.stat.bloomFilter("gram", nGrams, fpp)
+    // the two eager actions: the distinct-gram count sizes the filter
+    val sc = spark.sparkContext
+    val nGrams = math.max(1L,
+      graft.operators.Jobs.named(sc, "corpus:bench_grams")(benchGrams.count()))
+    val bloom = graft.operators.Jobs.named(sc, "corpus:bloom")(
+      benchGrams.stat.bloomFilter("gram", nGrams, fpp))
     val bBloom = spark.sparkContext.broadcast(bloom)
     val mightContain = udf((g: String) => bBloom.value.mightContainString(g))
     val trainGrams = train

@@ -243,7 +243,7 @@ object Dedup {
     // non-minimum member's best IS its bucket minimum, both residual
     // sides prefilter to ~nothing, and the quadratic bucket expansion
     // never runs.
-    val (tg, qual, capped, sets, h1) = stagedRepParts(df, idCol, textCol,
+    val (tg, qual, capped, sigs, h1) = stagedRepParts(df, idCol, textCol,
       threshold, numHashes, bands, shingleSize)
     val best = h1.select(col("id_a").as("__rid"), col("id_b").as("__t"))
       .unionByName(h1.select(col("id_b").as("__rid"), col("id_a").as("__t")))
@@ -278,7 +278,7 @@ object Dedup {
     val resid = p1.unionByName(p2).distinct()
       .join(h1.select(col("id_a"), col("id_b")), Seq("id_a", "id_b"),
         "left_anti")
-    val h2 = verifyPairs(resid, sets, threshold)
+    val h2 = verifyPairs(resid, sigs, threshold)
     val verified = h1.select(col("id_a"), col("id_b"))
       .unionByName(h2.select(col("id_a"), col("id_b")))
     dropSetFromMins(tg, qual, verified, idCol)
@@ -355,7 +355,7 @@ object Dedup {
     // component are dropped BEFORE the pair expansion; in the
     // g-near-copy regime phase 1 connects every bucket and the quadratic
     // expansion never runs.
-    val (tg, qual, capped, sets, h1) = stagedRepParts(df, idCol, textCol,
+    val (tg, qual, capped, sigs, h1) = stagedRepParts(df, idCol, textCol,
       threshold, numHashes, bands, shingleSize)
     val comp = graft.operators.ConnectedComponents
       .labels(h1, "id_a", "id_b")
@@ -377,7 +377,7 @@ object Dedup {
         Seq("band", "bucket"))
       .filter(col("id_a") < col("id_b") && col("__ca") =!= col("__cb"))
       .select(col("id_a"), col("id_b")).distinct()
-    val h2 = verifyPairs(resid, sets, threshold)
+    val h2 = verifyPairs(resid, sigs, threshold)
     // CONTRACTED final CC: phase-2 edges mapped onto phase-1 component
     // labels form a graph over ~#components nodes, so the second CC runs
     // on the contracted graph instead of re-walking the full rep-level
@@ -536,7 +536,9 @@ object Dedup {
     * — high-cardinality, so the shuffle is well-distributed; oversized
     * buckets (degenerate content) are the skew risk and are capped
     * (`broadcastOversized = false` for corpora degenerate enough that the
-    * capped-bucket SET itself outgrows a driver broadcast).
+    * capped-bucket SET itself outgrows a driver broadcast). The join is
+    * [[candidateJoin]], the one the representative-level near-dup
+    * operators run over their cached signatures.
     *
     * SINGLE-CONSUMING-ACTION contract: the internal band table is held
     * ([[graft.operators.Release]]) and released by the session's first
@@ -560,9 +562,19 @@ object Dedup {
     // row competition the rule targets.
     val bt = minhashBands(df, idCol, textCol, numHashes, bands, shingleSize)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Cap pathological buckets (e.g. empty-text docs all hashing together):
-    // at 100 TB one degenerate bucket would otherwise produce a quadratic
-    // pair explosion on a single key.
+    val out = candidateJoin(bt, idCol, maxBucketSize, broadcastOversized)
+    graft.operators.Release.hold(bt)
+    out
+  }
+
+  /** The LSH candidate self-join over an (id, band, bucket) table: cap
+    * pathological buckets (e.g. empty-text docs all hashing together — at
+    * 100 TB one degenerate bucket would otherwise produce a quadratic pair
+    * explosion on a single key), then pair every two ids sharing a
+    * (band, bucket), id_a < id_b, distinct.
+    */
+  private def candidateJoin(bt: DataFrame, idCol: String, maxBucketSize: Int,
+      broadcastOversized: Boolean): DataFrame = {
     val capped = dropOversizedBuckets(bt, Seq("band", "bucket"), maxBucketSize,
       broadcastOversized)
     val a = capped.select(col("band"), col("bucket"), col(idCol).as("id_a"))
@@ -575,12 +587,10 @@ object Dedup {
     // sides on the high-cardinality (band, bucket) key, per-partition hash
     // build (groups bounded by the bucket cap), and — unlike sort-merge —
     // still no sort anywhere on the path.
-    val out = a.hint("shuffle_hash").join(b, Seq("band", "bucket"))
+    a.hint("shuffle_hash").join(b, Seq("band", "bucket"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
       .distinct()
-    graft.operators.Release.hold(bt)
-    out
   }
 
   /** SimHash near-dup pairs — the hamming-distance consumer for
@@ -814,8 +824,16 @@ object Dedup {
     * output-sized: every produced row IS a result row, the operator's
     * contract.
     *
+    * Each representative's text is read ONCE: [[repSignatures]] tokenizes,
+    * shingles and MinHash-bands it in one cached pass, and the band table,
+    * the candidate join ([[candidateJoin]], the one [[lshCandidatePairs]]
+    * runs) and both verify joins read that cache. Measured on the
+    * `dedup_clusters` benchmark corpus, one traced run per side (SCALE.md,
+    * "One signature pass per representative"): the verify span fell from
+    * 2.63 s to 1.33 s with the same pairs and job count.
+    *
     * The verify joins carry `merge` (sort-merge) hints, NOT broadcast and
-    * NOT shuffle_hash: the planner's file-bytes estimate of `sets`
+    * NOT shuffle_hash: the planner's file-bytes estimate of the sets
     * ignores the shingle-array explosion and would eagerly
     * broadcast-build the expensive side (round-8 lesson, 2× the gate at
     * sf1); round 8's shuffle_hash answer hit the OTHER memory cliff one
@@ -887,40 +905,69 @@ object Dedup {
   /** The representative-level MinHash pipeline shared by the pairs, keep,
     * and cluster operators: identical-text collapse, LSH banding +
     * candidate join + exact-jaccard verification over one representative
-    * per distinct text. Returns the collapse frames, the SELF-PAIRING
-    * group set `qual` (reps of >= 2-member groups with a non-empty
-    * shingle set — the groups whose members pair with each other at
-    * jaccard 1.0; empty when threshold > 1), and the verified rep-level
-    * pairs (id_a, id_b, jaccard).
+    * per distinct text, all read from [[repSignatures]]' one text pass.
+    * Returns the collapse frames, the SELF-PAIRING group set `qual` (reps
+    * of >= 2-member groups with a non-empty shingle set — the groups
+    * whose members pair with each other at jaccard 1.0; empty when
+    * threshold > 1), and the verified rep-level pairs (id_a, id_b,
+    * jaccard).
     */
   private[graft] def verifiedRepParts(df: DataFrame, idCol: String,
       textCol: String, threshold: Double, numHashes: Int, bands: Int,
-      shingleSize: Int): (TextGroups, DataFrame, DataFrame) = {
+      shingleSize: Int, maxBucketSize: Int = 1000)
+      : (TextGroups, DataFrame, DataFrame) = {
     val tg = textGroups(df, idCol, textCol)
-    val cands = lshCandidatePairs(tg.repDf, idCol, textCol, numHashes,
-      bands, shingleSize)
-    val sets = shingleSets(tg.repDf, idCol, textCol, shingleSize)
-    val repPairs = verifyPairs(cands, sets, threshold)
-    (tg, qualifiedReps(tg, sets, idCol, threshold), repPairs)
+    val sigs = repSignatures(tg, idCol, textCol, numHashes, bands,
+      shingleSize)
+    val cands = candidateJoin(bandTable(sigs, idCol), idCol, maxBucketSize,
+      broadcastOversized = true)
+    val repPairs = verifyPairs(cands, sigs, threshold)
+    (tg, qualifiedReps(tg, sigs, idCol, threshold), repPairs)
   }
 
-  private def shingleSets(repDf: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int): DataFrame =
-    repDf
+  /** One text pass per representative: (id, `ws` = its distinct shingle
+    * set, `__bk` = its `bands` LSH bucket longs), tokenized, shingled and
+    * MinHash-banded in one projection chain over `tg.repDf`. The band
+    * table ([[bandTable]]), both verify joins and [[qualifiedReps]] read
+    * this one cached frame. Before it, the rep-level shingle sets were an
+    * uncached frame read three times, and `qualifiedReps`' `size(ws) > 0`
+    * predicate was pushed below both projections, into the scan — the
+    * tokenizer then ran inside the shingle `transform` lambda, once per
+    * shingle (see [[Text.shinglesOfTokens]]); over a local relation the
+    * optimizer evaluated that pushed filter interpreted, on the driver. A
+    * filter over a cached column cannot be pushed into the text pass.
+    * DISK_ONLY per the SCALE.md r10 persist rule (the rows carry shingle
+    * arrays); held for the caller's consuming action.
+    */
+  private def repSignatures(tg: TextGroups, idCol: String, textCol: String,
+      numHashes: Int, bands: Int, shingleSize: Int): DataFrame = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    val sigs = tg.repDf
       .select(col(idCol), Text.tokens(col(textCol)).as("__toks"))
       .select(col(idCol),
         Text.shinglesOfTokens(col("__toks"), shingleSize).as("ws"))
+      .select(col(idCol), col("ws"),
+        MinHashBandsExpr.minhash_bands(col("ws"), numHashes, bands).as("__bk"))
+      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    graft.operators.Release.hold(sigs)
+    sigs
+  }
+
+  /** The (id, band, bucket) table of [[repSignatures]]' cached buckets —
+    * [[minhashBands]]' output, without a second text pass. */
+  private def bandTable(sigs: DataFrame, idCol: String): DataFrame =
+    sigs.select(col(idCol), posexplode(col("__bk")).as(Seq("band", "bucket")))
 
   /** Exact-jaccard verification of candidate `(id_a, id_b)` pairs against
-    * the per-rep shingle sets — shared by the full pairs path and the
-    * staged keep/cluster paths. */
-  private def verifyPairs(cands: DataFrame, sets: DataFrame,
+    * the per-rep shingle sets `ws` of [[repSignatures]] — shared by the
+    * full pairs path and the staged keep/cluster paths. */
+  private def verifyPairs(cands: DataFrame, sigs: DataFrame,
       threshold: Double): DataFrame = {
-    val idCol = sets.columns.head
+    val idCol = sigs.columns.head
     val withA = cands.hint("merge")
-      .join(sets.select(col(idCol).as("id_a"), col("ws").as("ws_a")), "id_a")
+      .join(sigs.select(col(idCol).as("id_a"), col("ws").as("ws_a")), "id_a")
     val withB = withA.hint("merge")
-      .join(sets.select(col(idCol).as("id_b"), col("ws").as("ws_b")), "id_b")
+      .join(sigs.select(col(idCol).as("id_b"), col("ws").as("ws_b")), "id_b")
     val inter = size(array_intersect(col("ws_a"), col("ws_b"))).cast("double")
     val uni = (size(col("ws_a")) + size(col("ws_b"))).cast("double") - inter
     // uni = 0 (both shingle sets empty — DISTINCT single-token/empty
@@ -938,11 +985,11 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
-  private def qualifiedReps(tg: TextGroups, sets: DataFrame, idCol: String,
+  private def qualifiedReps(tg: TextGroups, sigs: DataFrame, idCol: String,
       threshold: Double): DataFrame =
     if (threshold > 1.0) tg.grp.filter(lit(false)).select(col("__rid"))
     else tg.grp.filter(col("__gsz") >= 2).select(col("__rid"))
-      .join(sets.filter(size(col("ws")) > 0)
+      .join(sigs.filter(size(col("ws")) > 0)
         .select(col(idCol).as("__rid")), Seq("__rid"), "left_semi")
 
   /** STAGED verification parts for the keep/cluster consumers — the
@@ -963,41 +1010,39 @@ object Dedup {
     * set only when the data genuinely requires it, so the staged form is
     * EXACT and never verifies more than the all-pairs form.
     *
-    * Returns (tg, qual, capped bucket table, shingle sets, star hits).
-    * `capped`/`sets`/`starHits` are persisted multi-consumer snapshots
-    * (sets carries shingle ARRAYS — DISK_ONLY per the SCALE.md r10
-    * rule), held for the caller's consuming action. The clusters
-    * consumer's CC runs Dataset actions of its own (the fixed-point
-    * confirmation's `isEmpty`) after they are held, so [[dupClusters]]
-    * runs inside a [[graft.operators.Release.scope]]: no action inside it
-    * can release them (round 13: releasing all four snapshots on the
-    * first CC action made the final action silently recompute the
-    * banding, shingle sets, and star verify).
+    * Returns (tg, qual, capped bucket table, rep signatures, star hits).
+    * The signatures are [[repSignatures]]' one cached text pass (the
+    * band table and every verify join read its `ws`); `capped` and
+    * `starHits` are persisted multi-consumer snapshots. All are held for
+    * the caller's consuming action. The clusters consumer's CC runs
+    * Dataset actions of its own (the fixed-point confirmation's
+    * `isEmpty`) after they are held, so [[dupClusters]] runs inside a
+    * [[graft.operators.Release.scope]]: no action inside it can release
+    * them (round 13: releasing the snapshots on the first CC action made
+    * the final action silently recompute the banding, shingle sets, and
+    * star verify).
     */
   private[graft] def stagedRepParts(df: DataFrame, idCol: String,
       textCol: String, threshold: Double, numHashes: Int, bands: Int,
       shingleSize: Int, maxBucketSize: Int = 1000)
       : (TextGroups, DataFrame, DataFrame, DataFrame, DataFrame) = {
     val tg = textGroups(df, idCol, textCol)
-    // same banding + oversized-bucket posture as lshCandidatePairs
-    val bt = minhashBands(tg.repDf, idCol, textCol, numHashes, bands,
-        shingleSize)
+    val sigs = repSignatures(tg, idCol, textCol, numHashes, bands,
+      shingleSize)
+    // same oversized-bucket posture as lshCandidatePairs
+    val capped = dropOversizedBuckets(bandTable(sigs, idCol),
+        Seq("band", "bucket"), maxBucketSize, broadcastOversized = true)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val capped = dropOversizedBuckets(bt, Seq("band", "bucket"),
-        maxBucketSize, broadcastOversized = true)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sets = shingleSets(tg.repDf, idCol, textCol, shingleSize)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val bmin = capped.groupBy(col("band"), col("bucket"))
       .agg(min(col(idCol)).as("__bm"))
     val star = capped.join(bmin, Seq("band", "bucket"))
       .filter(col(idCol) =!= col("__bm"))
       .select(col("__bm").as("id_a"), col(idCol).as("id_b"))
       .distinct()
-    val starHits = verifyPairs(star, sets, threshold)
+    val starHits = verifyPairs(star, sigs, threshold)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val qual = qualifiedReps(tg, sets, idCol, threshold)
-    graft.operators.Release.hold(bt, capped, sets, starHits)
-    (tg, qual, capped, sets, starHits)
+    val qual = qualifiedReps(tg, sigs, idCol, threshold)
+    graft.operators.Release.hold(capped, starHits)
+    (tg, qual, capped, sigs, starHits)
   }
 }

@@ -55,6 +55,17 @@ object Text {
     * (`shinglesOfTokens`), not directly on the text — a non-trivial token
     * expression referenced inside the `transform` lambda is re-evaluated
     * per element by Catalyst, turning the shingle step O(tokens²) per row.
+    * Two projections (tokens, then shingles) are not always enough; the
+    * optimizer still inlines the tokens into the lambda when it
+    *  - explodes the shingle array through an alias in a third
+    *    projection (see `Dedup.jaccardJoinExact`);
+    *  - pushes a predicate on the shingle array (`size(ws) > 0`) below
+    *    both projections, through a join, into the scan. Over a local
+    *    relation `ConvertToLocalRelation` then evaluates that filter
+    *    interpreted, on the driver.
+    * Persisting the shingle column stops both (`Dedup.repSignatures`);
+    * `graft.PlanInvariants`' `lambda-rescan` rule flags the inlined form
+    * in every gate plan.
     */
   def shinglesOfTokens(t: Column, n: Int): Column = {
     require(n >= 1, s"shingle size must be >= 1, got $n")

@@ -205,15 +205,22 @@ object Positional {
     * Mirrors ZipWithIndex (thrill/api/zip_with_index.hpp:38-179):
     * [[summarize]] counts per-partition rows while it caches them, an
     * exclusive prefix sum gives each partition its offset, and the output
-    * pass re-reads the cache, emitting (row, offset + local index). Order
-    * is only meaningful if the input is range-partitioned+sorted (e.g.
-    * after orderBy).
+    * pass re-reads the cache, emitting (row, offset + local index). A
+    * one-partition input has the one start offset 0, so it runs no count
+    * job and caches nothing (Spark's `RDD.zipWithIndex` likewise counts
+    * only the first n−1 partitions). Order is only meaningful if the input
+    * is range-partitioned+sorted (e.g. after orderBy).
     */
   def zipWithIndex(df: DataFrame, idxName: String = "idx"): DataFrame = {
-    val (rdd, counts) =
-      summarize(df.sparkSession, "positional:zip_with_index")(rowsOf(df))(_.size.toLong)
-    frame(df, indexed(rdd, starts(counts))(appendLong),
-      df.schema.add(idxName, LongType, nullable = false))
+    val rows = named(df, "zip_with_index")(rowsOf(df))
+    val indexedRows =
+      if (rows.getNumPartitions == 1) indexed(rows, Array(0L))(appendLong)
+      else {
+        val (rdd, counts) =
+          summarize(df.sparkSession, "positional:zip_with_index")(rows)(_.size.toLong)
+        indexed(rdd, starts(counts))(appendLong)
+      }
+    frame(df, indexedRows, df.schema.add(idxName, LongType, nullable = false))
   }
 
   /** Inclusive running sum of a Long column in the DataFrame's current row

@@ -133,28 +133,35 @@ class FunctionsSpec extends SparkSpec {
     val nearDup = base.replace("w40", "changed")
     val other = (100 to 140).map(i => s"v$i").mkString(" ")
     // two exact-dup groups (3 and 2 copies), a near-dup of group 1, one
-    // unrelated doc, and two empty docs (identical text, empty shingle
-    // sets — the direct path's NaN-jaccard drop must be preserved)
-    val df = docs((1L, base), (2L, base), (3L, base), (4L, nearDup),
-      (5L, other), (6L, other), (7L, ""), (8L, ""))
-    val got = Dedup.verifiedNearDupPairs(df, "doc_id", "text", threshold = 0.8)
-      .select($"id_a", $"id_b", $"jaccard").as[(Long, Long, Double)]
-      .collect().toSet
+    // unrelated doc, two empty docs and two one-token docs (identical text,
+    // empty shingle sets — the direct path's NaN-jaccard drop must be
+    // preserved, and neither group self-pairs)
+    val texts = Map(1L -> base, 2L -> base, 3L -> base, 4L -> nearDup,
+      5L -> other, 6L -> other, 7L -> "", 8L -> "", 9L -> "solo", 10L -> "solo")
+    val local = docs(texts.toSeq.sortBy(_._1): _*)
+    // a parquet-written copy: filters reach the scan there, while over the
+    // local relation the optimizer folds them into the relation on the
+    // driver — the two inputs take different optimizer paths
+    val dir = java.nio.file.Files.createTempDirectory("graft-neardup-spec").toString
+    local.write.mode("overwrite").parquet(dir)
     def sh(s: String) = s.split(" ").filter(_.nonEmpty).sliding(2)
       .filter(_.length == 2).map(_.mkString(" ")).toSet
-    val texts = Map(1L -> base, 2L -> base, 3L -> base, 4L -> nearDup,
-      5L -> other, 6L -> other, 7L -> "", 8L -> "")
     val expect = (for {
       a <- texts.keys; b <- texts.keys if a < b
       sa = sh(texts(a)); sb = sh(texts(b))
       u = (sa ++ sb).size if u > 0
       j = (sa & sb).size.toDouble / u if j >= 0.8
     } yield (a, b, j)).toSet
-    assert(got === expect) // incl. all intra-group pairs, no (7,8)
-    // keep-corpus consistency: first member of every group survives
-    val kept = Dedup.nearDupKeepCorpus(df, "doc_id", "text", 0.8)
-      .select($"doc_id").as[Long].collect().toSet
-    assert(kept === Set(1L, 5L, 7L, 8L))
+    for ((input, df) <- Seq("local" -> local, "parquet" -> spark.read.parquet(dir))) {
+      val got = Dedup.verifiedNearDupPairs(df, "doc_id", "text", threshold = 0.8)
+        .select($"id_a", $"id_b", $"jaccard").as[(Long, Long, Double)]
+        .collect().toSet
+      assert(got === expect, input) // incl. all intra-group pairs, no (7,8), no (9,10)
+      // keep-corpus consistency: first member of every group survives
+      val kept = Dedup.nearDupKeepCorpus(df, "doc_id", "text", 0.8)
+        .select($"doc_id").as[Long].collect().toSet
+      assert(kept === Set(1L, 5L, 7L, 8L, 9L, 10L), input)
+    }
   }
 
   test("linear keep/cluster derivations equal the pairs-derived forms on " +

@@ -5,6 +5,7 @@ import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.dia.DIA
+import graft.functions.Corpus
 import graft.operators.{ConnectedComponents, Jobs, Positional}
 
 /** The jobs an operator runs eagerly carry an `<operator>:<phase>`
@@ -110,6 +111,25 @@ class JobNamesSpec extends SparkSpec {
     var zipped: DIA[Long] = null
     assert(jobsOf { zipped = a.zip(b)(_ + _) } === Seq("dia:align_counts", "dia:align_counts"))
     assert(zipped.allGather() === (0L until 150L).map(_ * 2))
+  }
+
+  test("zipWithIndex of a one-partition input runs no job and caches nothing") {
+    // its only start offset is 0: no count pass, no cache to fill
+    val one = spark.range(0, 50, 1, 1).toDF("v")
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    var indexed: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { indexed = Positional.zipWithIndex(one) } === Seq())
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore).isEmpty)
+    assert(indexed.as[(Long, Long)].collect().toSeq === (0L until 50L).map(i => (i, i)))
+  }
+
+  test("contaminatedDocsBloom names its eager bench-side jobs corpus:") {
+    val train = Seq((1L, "the quick brown fox jumps"), (2L, "lorem ipsum dolor"))
+      .toDF("doc_id", "text")
+    val bench = Seq("quick brown fox", "nothing shared here").toDF("text")
+    val jobs = jobsOf(Corpus.contaminatedDocsBloom(train, "doc_id", "text", bench, "text", 2))
+    assert(jobs.contains("corpus:bench_grams") && jobs.contains("corpus:bloom"), jobs)
+    assert(jobs.forall(_.startsWith("corpus:")), jobs)
   }
 
   test("the caller's job description is restored, also when the body throws") {

@@ -59,6 +59,35 @@ class PlanInvariantsSpec extends SparkSpec {
     }
   }
 
+  test("lambda-rescan flags a tokenizer inlined into the shingle lambda, " +
+      "not the cached form") {
+    import org.apache.spark.sql.functions._
+    import graft.functions.Text
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      // not a local relation, so the pushed filter stays in the plan
+      val docs = spark.range(0, 40).select(col("id"),
+        concat_ws(" ", lit("w"), col("id").cast("string"), lit("x")).as("text"))
+      val reps = docs.join(spark.range(0, 20), Seq("id"), "left_semi")
+      val sets = reps.select(col("id"), Text.tokens(col("text")).as("__toks"))
+        .select(col("id"), Text.shinglesOfTokens(col("__toks"), 2).as("ws"))
+      // the filter is pushed below both projections: the tokens are
+      // inlined into the transform lambda, re-split once per shingle
+      val pushed = sets.filter(size(col("ws")) > 0).select(col("id"))
+      val hits = PlanInvariants.check(pushed)
+      assert(hits.nonEmpty && hits.forall(_.startsWith(s"[${PlanInvariants.LambdaRescan}]")),
+        hits)
+      assert(PlanInvariants.check(pushed, Set(PlanInvariants.LambdaRescan)).isEmpty)
+      // over a cached column the filter cannot reach the tokenizer
+      val cached = sets.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      try {
+        val filtered = cached.filter(size(col("ws")) > 0).select(col("id"))
+        assert(PlanInvariants.check(filtered).isEmpty)
+        assert(filtered.count() === 20)
+      } finally cached.unpersist(blocking = true)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
   test("allowlist names only declared queries (no stale exemptions)") {
     val stale = PlanInvariants.allow.keySet -- SparkEntry.queries.keySet
     assert(stale.isEmpty, s"allowlist entries without a query: $stale")
