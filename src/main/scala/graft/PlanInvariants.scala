@@ -1,8 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, StringSplit}
+import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, NamedLambdaVariable,
+  StringSplit}
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
@@ -30,11 +33,14 @@ import org.apache.spark.sql.internal.SQLConf
   *    time instead of in a bench column. Stats-less children (the
   *    defaultSizeInBytes sentinel) are skipped, not flagged.
   *  - `lambda-rescan`: a higher-order function (`transform`, `filter`,
-  *    `aggregate`, ...) whose lambda body evaluates a StringSplit — a
-  *    tokenizer run once per ELEMENT, O(tokens²) per row. The optimizer
-  *    builds it by inlining a token array into the shingle lambda, e.g.
-  *    when a `size(shingles) > 0` filter is pushed below the projections
-  *    that materialize the tokens (see `Text.shinglesOfTokens`).
+  *    `aggregate`, ...) whose lambda body splits a string that is not
+  *    the lambda's own element — a tokenizer run once per ELEMENT,
+  *    O(tokens²) per row. The optimizer builds it by inlining a token
+  *    array into the shingle lambda, e.g. when a `size(shingles) > 0`
+  *    filter is pushed below the projections that materialize the tokens
+  *    (see `Text.shinglesOfTokens`). Checked in the plan behind every
+  *    cached relation the plan scans too, since building that cache runs
+  *    the lambda.
   *
   * The sweep runs with AQE DISABLED so the static plan — the one that
   * encodes the operator's structural choices — is fully traversable;
@@ -44,7 +50,7 @@ import org.apache.spark.sql.internal.SQLConf
   * job (queries that act at CONSTRUCTION time still do their
   * construction work; their final frame is what gets audited).
   */
-object PlanInvariants {
+object PlanInvariants extends AdaptiveSparkPlanHelper {
   /** Estimated-bytes bound above which a planned broadcast is flagged. */
   val BroadcastMaxBytes: Long = 512L << 20 // 512 MiB
 
@@ -98,14 +104,32 @@ object PlanInvariants {
         (BigBroadcast, s"BroadcastExchange of estimated " +
           s"${e.child.logicalLink.map(_.stats.sizeInBytes).getOrElse(BigInt(-1))} bytes")
     }
-    val rescans = plan.collectWithSubqueries { case p => p.expressions }
-      .flatten.flatMap(_.collect {
-        case h: HigherOrderFunction
-            if h.functions.exists(_.find(_.isInstanceOf[StringSplit]).isDefined) =>
-          (LambdaRescan, s"${h.prettyName} lambda evaluates a StringSplit per element")
-      }).distinct
-    (hits ++ rescans)
+    (hits ++ lambdaRescans(plan).distinct)
       .collect { case (id, msg) if !allowed(id) => s"[$id] $msg" }
+  }
+
+  /** `lambda-rescan` hits in `plan` and, each once, in the (possibly
+    * adaptive) plans of the cached relations it scans, recursively. A
+    * split over a lambda variable is per-element work, not a rescan. */
+  private def lambdaRescans(plan: SparkPlan): Seq[(String, String)] = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
+    def outerSplit(h: HigherOrderFunction) = h.functions.exists(_.exists {
+      case s: StringSplit => !s.exists(_.isInstanceOf[NamedLambdaVariable])
+      case _ => false
+    })
+    def walk(p: SparkPlan): Seq[(String, String)] =
+      if (!seen.add(p)) Nil
+      else collectWithSubqueries(p) { case n => n }.flatMap { n =>
+        n.expressions.flatMap(_.collect {
+          case h: HigherOrderFunction if outerSplit(h) =>
+            (LambdaRescan, s"${h.prettyName} lambda evaluates a StringSplit per element")
+        }) ++ (n match {
+          case s: InMemoryTableScanExec => walk(s.relation.cachedPlan)
+          case _ => Nil
+        })
+      }
+    walk(plan)
   }
 
   /** Violations of the returned frame's pre-execution physical plan. */

@@ -531,6 +531,9 @@ object Dedup {
       .filter(col("__bsz") <= maxBucketSize).drop("__bsz")
   }
 
+  /** Default cap on one MinHash (band, bucket)'s members. */
+  private val MaxBucketSize = 1000
+
   /** Candidate near-dup pairs: self-join of the band table on
     * (band, bucket), id_a < id_b, distinct. The join key is (band, bucket)
     * — high-cardinality, so the shuffle is well-distributed; oversized
@@ -551,7 +554,8 @@ object Dedup {
     */
   def lshCandidatePairs(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 96, bands: Int = 24, shingleSize: Int = 2,
-      maxBucketSize: Int = 1000, broadcastOversized: Boolean = true): DataFrame = {
+      maxBucketSize: Int = MaxBucketSize, broadcastOversized: Boolean = true)
+      : DataFrame = {
     // Persisted so the tokenize+minhash pass over the corpus runs ONCE and
     // feeds both the bucket-size aggregate and the candidate join — the
     // storage volume equals what the pre-r8 window cap wrote to shuffle
@@ -827,10 +831,7 @@ object Dedup {
     * Each representative's text is read ONCE: [[repSignatures]] tokenizes,
     * shingles and MinHash-bands it in one cached pass, and the band table,
     * the candidate join ([[candidateJoin]], the one [[lshCandidatePairs]]
-    * runs) and both verify joins read that cache. Measured on the
-    * `dedup_clusters` benchmark corpus, one traced run per side (SCALE.md,
-    * "One signature pass per representative"): the verify span fell from
-    * 2.63 s to 1.33 s with the same pairs and job count.
+    * runs) and both verify joins read that cache.
     *
     * The verify joins carry `merge` (sort-merge) hints, NOT broadcast and
     * NOT shuffle_hash: the planner's file-bytes estimate of the sets
@@ -914,12 +915,11 @@ object Dedup {
     */
   private[graft] def verifiedRepParts(df: DataFrame, idCol: String,
       textCol: String, threshold: Double, numHashes: Int, bands: Int,
-      shingleSize: Int, maxBucketSize: Int = 1000)
-      : (TextGroups, DataFrame, DataFrame) = {
+      shingleSize: Int): (TextGroups, DataFrame, DataFrame) = {
     val tg = textGroups(df, idCol, textCol)
     val sigs = repSignatures(tg, idCol, textCol, numHashes, bands,
       shingleSize)
-    val cands = candidateJoin(bandTable(sigs, idCol), idCol, maxBucketSize,
+    val cands = candidateJoin(bandTable(sigs, idCol), idCol, MaxBucketSize,
       broadcastOversized = true)
     val repPairs = verifyPairs(cands, sigs, threshold)
     (tg, qualifiedReps(tg, sigs, idCol, threshold), repPairs)
@@ -927,17 +927,13 @@ object Dedup {
 
   /** One text pass per representative: (id, `ws` = its distinct shingle
     * set, `__bk` = its `bands` LSH bucket longs), tokenized, shingled and
-    * MinHash-banded in one projection chain over `tg.repDf`. The band
-    * table ([[bandTable]]), both verify joins and [[qualifiedReps]] read
-    * this one cached frame. Before it, the rep-level shingle sets were an
-    * uncached frame read three times, and `qualifiedReps`' `size(ws) > 0`
-    * predicate was pushed below both projections, into the scan — the
-    * tokenizer then ran inside the shingle `transform` lambda, once per
-    * shingle (see [[Text.shinglesOfTokens]]); over a local relation the
-    * optimizer evaluated that pushed filter interpreted, on the driver. A
-    * filter over a cached column cannot be pushed into the text pass.
-    * DISK_ONLY per the SCALE.md r10 persist rule (the rows carry shingle
-    * arrays); held for the caller's consuming action.
+    * MinHash-banded in one projection chain over `tg.repDf`. The shingle
+    * column must stay cached: a predicate on `ws` (`qualifiedReps`'
+    * `size(ws) > 0`) over an uncached chain is pushed into the tokenizer,
+    * which then re-splits the text once per shingle
+    * ([[Text.shinglesOfTokens]]). DISK_ONLY per the SCALE.md r10 persist
+    * rule (the rows carry shingle arrays); held for the caller's
+    * consuming action.
     */
   private def repSignatures(tg: TextGroups, idCol: String, textCol: String,
       numHashes: Int, bands: Int, shingleSize: Int): DataFrame = {
@@ -1024,7 +1020,7 @@ object Dedup {
     */
   private[graft] def stagedRepParts(df: DataFrame, idCol: String,
       textCol: String, threshold: Double, numHashes: Int, bands: Int,
-      shingleSize: Int, maxBucketSize: Int = 1000)
+      shingleSize: Int, maxBucketSize: Int = MaxBucketSize)
       : (TextGroups, DataFrame, DataFrame, DataFrame, DataFrame) = {
     val tg = textGroups(df, idCol, textCol)
     val sigs = repSignatures(tg, idCol, textCol, numHashes, bands,

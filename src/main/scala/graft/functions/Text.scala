@@ -65,7 +65,7 @@ object Text {
     *    interpreted, on the driver.
     * Persisting the shingle column stops both (`Dedup.repSignatures`);
     * `graft.PlanInvariants`' `lambda-rescan` rule flags the inlined form
-    * in every gate plan.
+    * in every gate plan and in the plans of the caches it scans.
     */
   def shinglesOfTokens(t: Column, n: Int): Column = {
     require(n >= 1, s"shingle size must be >= 1, got $n")

@@ -78,6 +78,16 @@ class PlanInvariantsSpec extends SparkSpec {
       assert(hits.nonEmpty && hits.forall(_.startsWith(s"[${PlanInvariants.LambdaRescan}]")),
         hits)
       assert(PlanInvariants.check(pushed, Set(PlanInvariants.LambdaRescan)).isEmpty)
+      // a cache built from the inlined form is flagged where it is scanned
+      val inlined = pushed.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      try {
+        val hit = PlanInvariants.check(inlined.select(col("id")))
+        assert(hit.exists(_.startsWith(s"[${PlanInvariants.LambdaRescan}]")), hit)
+      } finally inlined.unpersist(blocking = true)
+      // splitting the lambda's own element is per-element work, not a rescan
+      val perWord = docs.select(transform(split(col("text"), " "),
+        w => size(split(w, "x"))).as("n"))
+      assert(PlanInvariants.check(perWord).isEmpty)
       // over a cached column the filter cannot reach the tokenizer
       val cached = sets.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
       try {
