@@ -1,5 +1,6 @@
 package graft.dia
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -163,10 +164,10 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
 
   /** SortStable (thrill/api/sort.hpp:82-114): stability via index tiebreak. */
   def sortStableBy[K: Ordering: ClassTag](key: T => K): DIA[T] =
-    // the index sizes the partitions and the range partitioner samples,
-    // each in a job of its own
+    // the index counts the partitions and the range partitioner samples
+    // its cache, each in a job of its own
     named("sort_stable") {
-      val indexed = ds.rdd.zipWithIndex()
+      val indexed = withIndex("sort_stable")((t, i) => (t, i))
       new DIA(spark.createDataset(
         indexed.sortBy { case (t, i) => (key(t), i) }.map(_._1)))
     }
@@ -198,9 +199,14 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
 
   /** ZipWithIndex (thrill/api/zip_with_index.hpp:38-179). */
   def zipWithIndex[U: Encoder](f: (T, Long) => U): DIA[U] =
-    new DIA(spark.createDataset(
-      named("zip_with_index_sizes")(ds.rdd.zipWithIndex()).map { case (t, i) => f(t, i) }(
-        implicitly[Encoder[U]].clsTag)))
+    new DIA(spark.createDataset(withIndex("zip_with_index")(f)(implicitly[Encoder[U]].clsTag)))
+
+  /** Every element through `f` with its global index: the
+    * [[graft.operators.Positional.withIndex]] kernel, its jobs named
+    * `dia:<phase>`.
+    */
+  private def withIndex[U: ClassTag](phase: String)(f: (T, Long) => U): RDD[U] =
+    Positional.withIndex(spark, s"dia:$phase")(named(phase)(ds.rdd))(f)
 
   /** Zip by global index (thrill/api/zip.hpp:77-724). CutTag semantics:
     * truncates to the shorter input. One count job and one shuffle per
@@ -431,8 +437,8 @@ class DIA[T](val ds: Dataset[T])(implicit val enc: Encoder[T]) extends Serializa
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, enc)
     // within-block offset carried for the same straddling-fragment reason
     // as zipWindow: mapGroups iterates values in unspecified order
-    val indexed = spark.createDataset(named("window_disjoint_index")(ds.rdd.zipWithIndex())
-      .map { case (t, i) => (i / k, i % k, t) })
+    val indexed = spark.createDataset(
+      withIndex("window_disjoint_index")((t, i) => (i / k, i % k, t)))
     new DIA(indexed.groupByKey(_._1).mapGroups { (b, it) =>
       f(b, it.toArray.sortBy(_._2).toSeq.map(_._3))
     })

@@ -26,12 +26,14 @@ import scala.reflect.ClassTag
   *  - [[summarize]] is the collective: it caches the input, folds every
   *    partition to a summary in ONE job, and holds the cache for the
   *    consuming action;
+  *  - [[withIndex]] is the global index on its counts, under zipWithIndex,
+  *    the stable sort and the disjoint window;
   *  - [[scan]] is the two-pass prefix sum on its partials;
   *  - [[alignedBlocks]] is the aligned scatter under every shuffling zip,
   *    zipWindow and rebalance, keyed from its per-partition counts;
   *  - the sliding windows hand its counts to
-  *    [[BoundaryExchange.predecessors]]; zipWithIndex, sample and concat
-  *    use them as is.
+  *    [[BoundaryExchange.predecessors]]; sample and concat use them
+  *    as is.
   * The DataFrame ops read, cache and shuffle Catalyst's binary rows
   * ([[rowsOf]], [[IndexedRowSerializer]]) and build their output from
   * them, so no row is converted to an external `Row` and back.
@@ -52,6 +54,9 @@ object Positional {
     * outside a scope it goes at the next Dataset action, the one that
     * consumes the operator's output (no positional op runs a Dataset
     * action after it); inside one, at the first after the scope returns.
+    * Building the next operator's input with `Dataset.rdd` is not such an
+    * action, so a chain of positional ops reads each cache, not its
+    * lineage, until the chain's output action.
     */
   private[graft] def summarize[T, S: ClassTag](spark: SparkSession, name: String)(
       input: => RDD[T])(fold: Iterator[T] => S): (RDD[T], Array[S]) =
@@ -73,6 +78,22 @@ object Positional {
     rdd.mapPartitionsWithIndex { (pid, it) =>
       var i = starts(pid) - 1
       it.map { t => i += 1; f(t, i) }
+    }
+
+  /** Every element of `rdd` with its global index, through `f`:
+    * [[summarize]] counts each partition while it caches it, and the
+    * output pass re-reads the cache from each partition's start offset
+    * (thrill/api/zip_with_index.hpp:38-179). A one-partition input has the
+    * one start offset 0, so it runs no count job and caches nothing
+    * (Spark's `RDD.zipWithIndex` likewise counts only the first n−1
+    * partitions).
+    */
+  private[graft] def withIndex[T, U: ClassTag](spark: SparkSession, name: String)(
+      rdd: RDD[T])(f: (T, Long) => U): RDD[U] =
+    if (rdd.getNumPartitions == 1) indexed(rdd, Array(0L))(f)
+    else {
+      val (cached, counts) = summarize(spark, name)(rdd)(_.size.toLong)
+      indexed(cached, starts(counts))(f)
     }
 
   /** The two passes under every prefix sum (thrill/api/prefix_sum.hpp:
@@ -201,26 +222,15 @@ object Positional {
   private def frame(df: DataFrame, rows: RDD[InternalRow], schema: StructType): DataFrame =
     GraftRowShim.createFrame(df.sparkSession, rows, schema)
 
-  /** Attach a stable global index to the DataFrame's current row order.
-    * Mirrors ZipWithIndex (thrill/api/zip_with_index.hpp:38-179):
-    * [[summarize]] counts per-partition rows while it caches them, an
-    * exclusive prefix sum gives each partition its offset, and the output
-    * pass re-reads the cache, emitting (row, offset + local index). A
-    * one-partition input has the one start offset 0, so it runs no count
-    * job and caches nothing (Spark's `RDD.zipWithIndex` likewise counts
-    * only the first n−1 partitions). Order is only meaningful if the input
-    * is range-partitioned+sorted (e.g. after orderBy).
+  /** Attach a stable global index to the DataFrame's current row order:
+    * the [[withIndex]] kernel, emitting (row, offset + local index). Order
+    * is only meaningful if the input is range-partitioned+sorted (e.g.
+    * after orderBy).
     */
   def zipWithIndex(df: DataFrame, idxName: String = "idx"): DataFrame = {
     val rows = named(df, "zip_with_index")(rowsOf(df))
-    val indexedRows =
-      if (rows.getNumPartitions == 1) indexed(rows, Array(0L))(appendLong)
-      else {
-        val (rdd, counts) =
-          summarize(df.sparkSession, "positional:zip_with_index")(rows)(_.size.toLong)
-        indexed(rdd, starts(counts))(appendLong)
-      }
-    frame(df, indexedRows, df.schema.add(idxName, LongType, nullable = false))
+    frame(df, withIndex(df.sparkSession, "positional:zip_with_index")(rows)(appendLong),
+      df.schema.add(idxName, LongType, nullable = false))
   }
 
   /** Inclusive running sum of a Long column in the DataFrame's current row

@@ -28,7 +28,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * can release its holds: an operator that runs a Dataset action after it
   * or a callee has held something opens a scope around its body, and
   * every gate builder runs inside one (`SparkEntry.queries`). RDD actions
-  * never release: they do not reach `QueryExecutionListener`s.
+  * never release: they do not reach `QueryExecutionListener`s. Nor does
+  * `Dataset.rdd`: Spark 4.1 runs it as an execution named `"rdd"` and
+  * reports it to the listeners, but it only builds the RDD (running at most
+  * the plan's exchanges) and consumes nothing. Every positional operator
+  * converts its input with it, so counting it would drop an operator's
+  * cache as soon as the next operator is built, before anything read it.
   *
   * Caveat of the id filter: `collect()` on the returned frame itself runs
   * that frame's own `QueryExecution`, which predates the return, so the
@@ -79,12 +84,14 @@ object Release {
       // throwaway one (analysis only, no job) is the high-water mark.
       val baselineId = spark.range(0).queryExecution.id
       lm.register(new QueryExecutionListener {
-        private def fire(qe: QueryExecution): Unit =
-          if (qe.id > baselineId) { lm.unregister(this); holds.foreach(_()) }
+        private def fire(funcName: String, qe: QueryExecution): Unit =
+          if (funcName != "rdd" && qe.id > baselineId) {
+            lm.unregister(this); holds.foreach(_())
+          }
         override def onSuccess(funcName: String, qe: QueryExecution,
-            durationNs: Long): Unit = fire(qe)
+            durationNs: Long): Unit = fire(funcName, qe)
         override def onFailure(funcName: String, qe: QueryExecution,
-            exception: Exception): Unit = fire(qe)
+            exception: Exception): Unit = fire(funcName, qe)
       })
     }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.dia.DIA
-import org.apache.spark.sql.Encoder
+import org.apache.spark.sql.{Encoder, GraftBusShim}
 
 class DIASpec extends SparkSpec {
   import spark.implicits._
@@ -248,6 +248,33 @@ class DIASpec extends SparkSpec {
     val got = DIA.equalToDIA(spark, xs).windowDisjoint(10) { (b, w) => (b, w.sum, w.size) }
       .allGather().sortBy(_._1)
     assert(got === Seq((0L, 45L, 10), (1L, 145L, 10), (2L, 110L, 5)))
+  }
+
+  test("the ordered chain reads its sort once, and releases every cache") {
+    // each positional op caches its input for its own passes; building the
+    // next op's input must not drop that cache before the chain's action
+    val n = 4000L
+    val xs = new scala.util.Random(11).shuffle((0L until n).map(i => (i * 7, i % 13)))
+    val ys = (0L until 1000L).map(i => (i * 28 + 3, i % 5)) // no key shared with xs
+    val pre = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val reads = spark.sparkContext.longAccumulator("sorted reads")
+    val sorted = new DIA(spark.createDataset(xs).repartition(4)).sortBy(_._1)
+      .map { r => reads.add(1); r }
+    val sortedB = new DIA(spark.createDataset(ys).repartition(4)).sortBy(_._1)
+    val prefix = sorted.zipWithIndex((r, i) => (r._1, r._2, i))
+      .prefixSum((x, y) => (y._1, x._2 + y._2, y._3))
+    val windowed = prefix.window(3)((_, w) => (w.head._1, w.last._2 - w.head._2))
+    val total = windowed.merge(sortedB)(_._1).zip(prefix)((m, p) => m._2 + p._2).sum
+    assert(reads.value === n, "the sort's output was read more than once")
+
+    val prefixModel = xs.sortBy(_._1).zipWithIndex
+      .scanLeft((0L, 0L, -1L)) { case (acc, ((k, v), i)) => (k, acc._2 + v, i.toLong) }.tail
+    val windowModel = prefixModel.sliding(3).map(w => (w.head._1, w.last._2 - w.head._2))
+    val mergeModel = (windowModel ++ ys).toSeq.sortBy(_._1)
+    assert(total === mergeModel.zip(prefixModel).map { case (m, p) => m._2 + p._2 }.sum)
+    GraftBusShim.drain(spark)
+    val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- pre
+    assert(left.isEmpty, s"persisted RDDs left after the chain's action: $left")
   }
 
   test("merge of sorted DIAs is globally sorted without re-sorting") {

@@ -80,6 +80,9 @@ class JobNamesSpec extends SparkSpec {
       assert(jobs.size >= 2, s"$op: $jobs")
       assert(jobs.forall(_.startsWith("dia:")), s"$op: $jobs")
     }
+    // the exchange, then the count pass that fills the index's cache
+    assert(jobsOf(shuffled.zipWithIndex((_, i) => i)) ===
+      Seq("dia:zip_with_index", "dia:zip_with_index"))
     // RunMerge names its own sampling job merge:range_sample
     val mergeJobs = jobsOf(shuffled.merge(shuffled)(identity))
     assert(mergeJobs.count(_ == "dia:merge_inputs") === 2, mergeJobs)
@@ -119,8 +122,13 @@ class JobNamesSpec extends SparkSpec {
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     var indexed: org.apache.spark.sql.DataFrame = null
     assert(jobsOf { indexed = Positional.zipWithIndex(one) } === Seq())
+    var indexedDia: DIA[(Long, Long)] = null
+    assert(jobsOf {
+      indexedDia = DIA.generate(spark, 50L, numSlices = 1)(identity).zipWithIndex((v, i) => (v, i))
+    } === Seq())
     assert((spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore).isEmpty)
     assert(indexed.as[(Long, Long)].collect().toSeq === (0L until 50L).map(i => (i, i)))
+    assert(indexedDia.allGather() === (0L until 50L).map(i => (i, i)))
   }
 
   test("contaminatedDocsBloom names its eager bench-side jobs corpus:") {

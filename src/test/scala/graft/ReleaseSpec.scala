@@ -10,9 +10,9 @@ import org.apache.spark.storage.StorageLevel
 
 /** The scope contract of [[Release]]: operator-local caches go at the
   * first Dataset action after their outermost scope returns — never at an
-  * RDD action, never at a Dataset action inside the scope. Releases block
-  * on the listener-bus thread, so one bus drain after an action is enough
-  * to observe them; no polling.
+  * RDD action or at `Dataset.rdd`, never at a Dataset action inside the
+  * scope. Releases block on the listener-bus thread, so one bus drain
+  * after an action is enough to observe them; no polling.
   */
 class ReleaseSpec extends SparkSpec {
   import spark.implicits._
@@ -51,6 +51,20 @@ class ReleaseSpec extends SparkSpec {
     drain()
     assert(rdd.getStorageLevel.useMemory, "RDD action must not release")
     spark.range(5).count()
+    drain()
+    assert(!rdd.getStorageLevel.useMemory)
+  }
+
+  test("a hold is not released by `Dataset.rdd`") {
+    // Spark reports building a Dataset's RDD to the listeners as "rdd";
+    // every positional op builds its input that way
+    val rdd = spark.sparkContext.parallelize(1 to 100, 4).cache()
+    rdd.count()
+    Release.hold(spark, rdd)
+    spark.range(0, 10).select(($"id" * 2).as("w")).as[Long].rdd
+    drain()
+    assert(rdd.getStorageLevel.useMemory, "Dataset.rdd must not release")
+    spark.range(3).count()
     drain()
     assert(!rdd.getStorageLevel.useMemory)
   }

@@ -3,12 +3,18 @@
 
 Usage: parse_eventlog.py <eventlog file> [topN]
 Groups stages by job, prints jobs in order with their description and the
-heaviest stages (task-time sum, records, shuffle read/write bytes).
+heaviest stages (task-time sum, input, shuffle read/write bytes and
+records), then the log's shuffle totals. Shuffle read above shuffle
+written is flagged: some reduce side was read more than once.
 """
 import json, sys, collections
 
 path = sys.argv[1]
 topn = int(sys.argv[2]) if len(sys.argv) > 2 else 40
+
+def new_stage():
+    return {"name":"?", "wall":0, "tasks":0, "tasktime":0.0, "sread":0, "rrec":0,
+            "swrite":0, "wrec":0, "input":0, "output":0, "spill":0}
 
 stages = {}            # stageId -> dict
 jobs = {}              # jobId -> dict
@@ -34,7 +40,7 @@ for line in open(path):
         sid = si["Stage ID"]
         name = si.get("Stage Name", "")
         sub = si.get("Submission Time", 0); comp = si.get("Completion Time", 0)
-        s = stages.setdefault(sid, {"name":"?", "wall":0, "tasks":0, "tasktime":0.0,"sread":0,"swrite":0,"input":0,"output":0,"spill":0})
+        s = stages.setdefault(sid, new_stage())
         s["name"] = name
         s["wall"] = (comp - sub)/1000.0 if sub and comp else 0
         s["tasks"] = si.get("Number of Tasks", 0)
@@ -43,12 +49,14 @@ for line in open(path):
     elif ev == "SparkListenerTaskEnd":
         sid = e["Stage ID"]
         m = e.get("Task Metrics") or {}
-        if sid not in stages:
-            stages[sid] = {"name":"?", "wall":0, "tasks":0, "tasktime":0.0,"sread":0,"swrite":0,"input":0,"output":0,"spill":0}
-        s = stages[sid]
+        s = stages.setdefault(sid, new_stage())
         s["tasktime"] += m.get("Executor Run Time", 0)/1000.0
-        s["sread"] += (m.get("Shuffle Read Metrics") or {}).get("Local Bytes Read",0) + (m.get("Shuffle Read Metrics") or {}).get("Remote Bytes Read",0)
-        s["swrite"] += (m.get("Shuffle Write Metrics") or {}).get("Shuffle Bytes Written",0)
+        r = m.get("Shuffle Read Metrics") or {}
+        w = m.get("Shuffle Write Metrics") or {}
+        s["sread"] += r.get("Local Bytes Read",0) + r.get("Remote Bytes Read",0)
+        s["rrec"] += r.get("Total Records Read",0)
+        s["swrite"] += w.get("Shuffle Bytes Written",0)
+        s["wrec"] += w.get("Shuffle Records Written",0)
         s["input"] += (m.get("Input Metrics") or {}).get("Bytes Read",0)
         s["spill"] += m.get("Disk Bytes Spilled",0)
 
@@ -65,9 +73,15 @@ for jid in sorted(jobs):
 print(f"sum of job walls: {tot:.1f}s")
 print()
 hs = sorted(stages.items(), key=lambda kv: -kv[1]["tasktime"])[:topn]
-print(f"{'stage':>5} {'job':>4} {'wall_s':>7} {'tasktm_s':>8} {'tasks':>5} {'input':>8} {'sread':>8} {'swrite':>8} {'spill':>8}  name")
+print(f"{'stage':>5} {'job':>4} {'wall_s':>7} {'tasktm_s':>8} {'tasks':>5} {'input':>8} {'sread':>8} {'rrec':>9} {'swrite':>8} {'wrec':>9} {'spill':>8}  name")
 for sid, s in hs:
-    print(f"{sid:>5} {stage2job.get(sid,-1):>4} {s['wall']:7.2f} {s['tasktime']:8.1f} {s['tasks']:>5} {mb(s['input'])} {mb(s['sread'])} {mb(s['swrite'])} {mb(s['spill'])}  {s['name'][:70]}")
+    print(f"{sid:>5} {stage2job.get(sid,-1):>4} {s['wall']:7.2f} {s['tasktime']:8.1f} {s['tasks']:>5} {mb(s['input'])} {mb(s['sread'])} {s['rrec']:>9} {mb(s['swrite'])} {s['wrec']:>9} {mb(s['spill'])}  {s['name'][:70]}")
+sread = sum(s["sread"] for s in stages.values())
+swrite = sum(s["swrite"] for s in stages.values())
+flag = "  <-- read exceeds written: some reduce side is read more than once" if sread > swrite else ""
+print(f"shuffle read {sread/1048576:.2f} MB of {swrite/1048576:.2f} MB written "
+      f"({sum(s['rrec'] for s in stages.values())} of "
+      f"{sum(s['wrec'] for s in stages.values())} records){flag}")
 
 # --- per-description rollup (appended r16): group jobs by description ---
 by_desc = collections.defaultdict(lambda: [0.0, 0.0, 0])  # wall, tasktime, jobs
